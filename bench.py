@@ -6,7 +6,8 @@ Prints ONE JSON line:
 
 Each query is forced to full materialization with the noop sink (no
 collect/driver transfer cost, no count() plan pruning). One warmup pass
-amortizes JVM/codegen warmup out of the first measured query.
+amortizes JVM/codegen warmup out of the first measured query.  For
+per-layer performance measurement use ``python3 perfbench/run.py``.
 """
 
 from __future__ import annotations
@@ -18,16 +19,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from fawac_cdc_spark.registry import (  # noqa: E402
-    BENCH_EXTRAS,
-    EXT_HEADLINE,
-    all_specs,
-)
+from fawac_cdc_spark.registry import all_specs  # noqa: E402
 from fawac_cdc_spark.session import get_spark  # noqa: E402
 
-# FROZEN since round 3 (20 queries) so cross-round numbers stay
-# comparable — gate regressions with tools/bench_compare.py, don't grow
-# this list.
+# Frozen 20-query headline suite: the total stays comparable across
+# snapshots, so don't grow this list.
 HEADLINE = [
     "flagship_revenue_by_nation_month",  # 5-table join + agg + top-k
     "pricing_summary",                   # TPC-H Q1 shape
@@ -53,163 +49,21 @@ HEADLINE = [
                                          # Python-worker startup)
 ]
 
-
-def drift_probe(spark) -> float:
-    """Fixed-work host-calibration probe (round 14, VERDICT r13 #4).
-
-    Cross-session totals on this shared host drift ±15% on byte-identical
-    code (BASELINE.md drift studies, r5 and r13), so a regression gate
-    comparing two sessions needs to know how fast THIS host is right now.
-    The probe is a constant synthetic shuffle+agg — data from
-    ``spark.range`` (no parquet, no page-cache dependence), fixed row
-    count, fixed key cardinality — timed min-of-3 with run 1 absorbing
-    codegen, exactly like the headline queries.  Identical work every
-    session, so probe_now / probe_baseline is a pure host-speed ratio:
-    tools/bench_compare.py annotates its verdict with it and REFUSES to
-    judge when the host is >15% slower than the baseline session (rc=2,
-    re-run when quiet) instead of crying regression on drift.
-    """
-    from pyspark.sql import functions as F
-
-    df = spark.range(0, 30_000_000, 1, 32).select(
-        (F.col("id") % 65536).alias("k"),
-        (F.col("id") % 97).cast("double").alias("v"),
-    )
-    agg = df.groupBy("k").agg(
-        F.sum("v").alias("s"), F.avg("v").alias("a"), F.max("v").alias("m")
-    )
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        agg.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
+# min of N runs per query: single runs on a shared host are noisy.
+RUNS = 3
 
 
-def compact_record(
-    timings: dict[str, float],
-    sf: str,
-    ext_timings: dict[str, float] | None = None,
-    probe: float | None = None,
-    probe_post: float | None = None,
-) -> dict:
-    """The ONE compact headline record printed to stdout for the driver's
-    tail capture — extras never belong here (they go to BENCH_FULL.json).
-    The frozen extension headline (registry.EXT_HEADLINE, round 13)
-    contributes only its TOTAL as ``ext_value`` so the line stays inside
-    the driver's tail-capture window; the per-query ext map lives in
-    BENCH_FULL.json.  Factored so tests/test_tools.py measures the REAL
-    record construction instead of a hand-rebuilt replica that could
-    drift (ADVICE r8)."""
-    rec = {
+def compact_record(timings: dict[str, float], sf: str) -> dict:
+    """The one JSON record printed to stdout.  Callers read only the
+    tail of stdout, so the line must stay short; factored out so a test
+    measures the real record."""
+    return {
         "metric": "headline_suite_seconds",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    if ext_timings is not None:
-        rec["ext_value"] = round(sum(ext_timings.values()), 3)
-    if probe is not None:
-        # fixed-work host-calibration reading (drift_probe) — lets
-        # tools/bench_compare.py tell host drift from real regression.
-        rec["probe_seconds"] = probe
-    if probe_post is not None:
-        # BOOKEND probe (round 15, VERDICT r14 #3): the same fixed work
-        # re-timed AFTER the extras/ext suite.  Drift on this host is
-        # monotone within a session, so a clean pre-probe says nothing
-        # about the sections that run LAST — bench_compare judges the
-        # ext/extras section by this nearer reading and refuses to
-        # judge on a >15% pre/post disagreement.
-        rec["probe_seconds_post"] = probe_post
-    return rec
-
-
-def skew_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Skew-join evidence at bench scale (VERDICT r4 item 6) — NOT part of
-    the frozen headline suite; reported under the separate "extras" key so
-    cross-round totals stay comparable.
-
-    A deliberately skewed fact-fact join at sf0.1: 90% of lineitem rows
-    hash to ONE join key; the other side is a 20k-key frame too large to
-    model as broadcast-able at the 100 TB design point (broadcast disabled
-    to emulate that). Three variants:
-      - skew_join_unmitigated: AQE skew split OFF — one reducer owns the
-        hot key (the naive plan that dies at scale)
-      - skew_join_aqe:         AQE skew split ON (engine default) — the
-        oversized partition is split at runtime
-      - skew_join_salted:      manual 16-way salting (salted_join) — the
-        fallback for skew AQE can't see or reach
-    """
-    import time
-
-    from pyspark.sql import functions as F
-
-    from fawac_cdc_spark.catalog import load_table
-    from fawac_cdc_spark.operators.joins import salted_join
-
-    n_keys = 20000
-    left = load_table(spark, sf_dir, "lineitem").select(
-        F.when(
-            F.pmod(F.hash("l_orderkey", "l_linenumber"), F.lit(10)) < 9, F.lit(0)
-        )
-        .otherwise(F.pmod(F.hash("l_orderkey"), F.lit(n_keys)))
-        .cast("int")
-        .alias("k"),
-        F.col("l_extendedprice").alias("price"),
-        F.col("l_orderkey").alias("scatter"),
-    )
-    right = spark.range(n_keys).select(
-        F.col("id").cast("int").alias("k"),
-        (F.col("id") % 97).cast("double").alias("weight"),
-    )
-
-    def run(df) -> float:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.skewJoin.enabled",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        )
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # sf0.1 partitions are far below the 256 MB default skew threshold, so
-    # scale the knobs down to keep the *plan shape* the one a 100 TB run
-    # would see (oversized-partition split vs one hot reducer).
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.2")
-    spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1048576"
-    )
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1048576")
-    out: dict[str, float] = {}
-    try:
-        plain = (
-            left.join(right, "k")
-            .agg(F.sum(F.col("price") * F.col("weight")).alias("s"))
-        )
-        salted = (
-            salted_join(left, right, "k", scatter_col="scatter")
-            .agg(F.sum(F.col("price") * F.col("weight")).alias("s"))
-        )
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        out["skew_join_unmitigated"] = run(plain)
-        out["skew_join_salted"] = run(salted)
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        out["skew_join_aqe"] = run(plain)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-    return out
 
 
 def main() -> None:
@@ -218,84 +72,22 @@ def main() -> None:
     spark = get_spark("bench")
     specs = all_specs()
 
-    # Host-calibration probe FIRST (fixed synthetic work, no data deps):
-    # its number is only comparable across sessions if it always runs at
-    # the same point in the session lifecycle.
-    probe = drift_probe(spark)
-
     # Warmup: JVM + codegen + parquet footer caches. No Python-worker
-    # pre-warm: idle pyspark workers measurably slow later JVM stages, and
-    # min-of-N already absorbs worker cold start (run 1 pays it, run 2 is
-    # warm) — which is also why the pandas-UDF query sits last in HEADLINE.
+    # pre-warm: min-of-N already absorbs worker cold start (run 1 pays
+    # it), which is also why the pandas-UDF query sits last in HEADLINE.
     specs["pricing_summary"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # min of N runs per query: the host is shared, single runs are noisy.
-    # 3 runs (r5, was 2): min-of-2 still showed ±25% per-query bounce on
-    # this host, which made the regression gate cry wolf (VERDICT r4).
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
     def time_query(name: str) -> float:
         fn = specs[name].fn
         best = float("inf")
-        for _ in range(n_runs):
+        for _ in range(RUNS):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
         return round(best, 3)
 
     timings = {name: time_query(name) for name in HEADLINE}
-
-    # Headline-only mode (round 15, VERDICT r14 #4): used by
-    # tools/bench_dispersion.py to measure per-query single-run
-    # dispersion with the driver's exact lifecycle (probe, warmup,
-    # headline) without paying for the extras/ext suites N times.
-    # Extras timings are irrelevant to headline dispersion, and the
-    # headline queries run before extras either way, so skipping the
-    # tail cannot change what is being measured.
-    if os.environ.get("SPARK_GRAFT_BENCH_HEADLINE_ONLY") == "1":
-        probe_post = drift_probe(spark)
-        compact = compact_record(timings, sf, None, probe, probe_post)
-        print(json.dumps(compact))
-        spark.stop()
-        return
-
-    # Non-frozen side experiments: excluded from "value" so the
-    # frozen-suite totals stay comparable across rounds.
-    extras = skew_experiment(spark, sf_dir)
-    # Newer-operator additions (registry.BENCH_EXTRAS — one shared
-    # definition), timed the same min-of-N way but kept out of the
-    # frozen 20-query total.
-    for name in BENCH_EXTRAS:
-        extras[name] = time_query(name)
-    # The driver records only the TAIL of stdout; in round 7 the inline
-    # extras dict grew past that capture and BENCH_r07.json came back
-    # "parsed": null (VERDICT r7 defect 1).  The FULL record (headline +
-    # extras) therefore goes to a FILE — BENCH_FULL.json, directly usable
-    # as either side of tools/bench_compare.py — and the compact
-    # headline-only JSON line prints LAST so the driver's tail capture
-    # always contains a complete parseable record.
-    # Frozen extension headline (registry.EXT_HEADLINE, VERDICT r12 #6):
-    # every name is in BENCH_EXTRAS, so the timings above are reused —
-    # one measurement, two gates (per-query via the extras intersection,
-    # total via ext_value/ext_queries in tools/bench_compare.py).
-    ext_timings = {name: extras[name] for name in EXT_HEADLINE}
-    # Bookend probe AFTER everything measured (VERDICT r14 #3): the ext
-    # members are timed inside the extras loop above, so this reading is
-    # the nearest host-speed evidence for the late-running section.
-    probe_post = drift_probe(spark)
-    compact = compact_record(timings, sf, ext_timings, probe, probe_post)
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
-    with open(full_path, "w") as fh:
-        json.dump(
-            {**compact, "ext_queries": ext_timings, "extras": extras},
-            fh,
-            indent=1,
-            sort_keys=True,
-        )
-    print(f"full record ({len(extras)} extras) -> {full_path}", file=sys.stderr)
-    print(json.dumps(compact))
+    print(json.dumps(compact_record(timings, sf)))
     spark.stop()
 
 

@@ -998,7 +998,10 @@ def connected_components_min_label(
     algorithm (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) in :func:`connected_components_star` — measured
     on the real near-dup graph at sf0.1 (round 16) the two are a wash,
-    so this simpler loop stays the shared default.
+    so this simpler loop stays the shared default.  Exhausting
+    ``max_iter`` (seed round included) before a round confirms the
+    fixpoint raises ``RuntimeError`` — unconverged labels are not
+    component labels.
 
     Each round is ONE join + ONE grouped min (self-loops in the edge
     list carry the own-label term, so there is no join back to the old
@@ -1075,13 +1078,14 @@ def connected_components_min_label(
     # are derived from the vertex table): edge endpoints are members of
     # ``vertices``.
     #
-    # Convergence is a label-set fingerprint comparison (count +
-    # order-insensitive hash-sum piggybacked on each checkpoint via
-    # observe() — ``connected_components_star``'s exact pattern): labels
-    # are monotone non-increasing per vertex, so an unchanged
-    # fingerprint means the fixpoint.  The SEED is round 1 of
-    # propagation, fused into one aggregate: with self-loops present,
-    # min(src) over dst's group is exactly min(self, min(neighbors)).
+    # Convergence is a label-set fingerprint comparison (count + exact
+    # label sum piggybacked on each checkpoint via observe()): the
+    # vertex set is fixed and labels are monotone non-increasing per
+    # vertex, so an unchanged decimal(38,0) sum means no label moved —
+    # an exact fixpoint witness, not a probabilistic hash.  The SEED is
+    # round 1 of propagation, fused into one aggregate: with self-loops
+    # present, min(src) over dst's group is exactly
+    # min(self, min(neighbors)).
     def _labels_ckpt(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
         from pyspark.sql import Observation
 
@@ -1089,9 +1093,11 @@ def connected_components_min_label(
         out = df.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.hash("doc_id", "component")), F.lit(0)).alias("h"),
+            F.coalesce(
+                F.sum(F.col("component").cast("decimal(38,0)")), F.lit(0)
+            ).alias("s"),
         ).localCheckpoint(eager=True)
-        return out, (int(obs.get["n"]), int(obs.get["h"]))
+        return out, (int(obs.get["n"]), int(obs.get["s"]))
 
     labels, fp = _labels_ckpt(
         sym.groupBy("dst")
@@ -1108,6 +1114,11 @@ def connected_components_min_label(
         if new_fp == fp:
             break
         fp = new_fp
+    else:
+        raise RuntimeError(
+            f"connected_components_min_label did not converge in {max_iter} "
+            "rounds — labels would not be component labels"
+        )
     return vertices.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("component", F.col("doc_id")).alias("component")
     )

@@ -136,23 +136,15 @@ def fan_out(df, *keys: str):
     amplification (a column-only repartition of a few-MB grain is
     coalesced right back to one partition; an explicit count is exempt).
 
-    Width: ``spark.fawac.fanout.partitions`` when set (cluster runs size
-    this to ``max(cores, input_bytes / target_partition_bytes)``), else
-    ``defaultParallelism`` — scale-adaptive via the session, never a
-    constant.  Keys must be high-cardinality (doc_id, orderkey) so the
-    hash spreads evenly.  The shuffle moves only the slim pre-explode
-    rows; at 100 TB it is one extra pass of the base grain against a
-    k~100x amplified compute stage downstream — and the pipelines this
-    guards all shuffle their exploded stream right after anyway, so the
-    relative cost stays bounded by ~1/k.
+    Width: ``defaultParallelism`` — scale-adaptive via the session,
+    never a constant.  Keys must be high-cardinality (doc_id, orderkey)
+    so the hash spreads evenly.  The shuffle moves only the slim
+    pre-explode rows; at 100 TB it is one extra pass of the base grain
+    against a k~100x amplified compute stage downstream — and the
+    pipelines this guards all shuffle their exploded stream right after
+    anyway, so the relative cost stays bounded by ~1/k.
     """
-    spark = df.sparkSession
-    width = int(
-        spark.conf.get(
-            "spark.fawac.fanout.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-    )
+    width = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(width, *[F.col(k) for k in keys])
 
 
@@ -180,16 +172,9 @@ def fan_out_if_narrow(df, *keys: str):
     costs a driver-side physical planning pass per call — fine at query
     build time, not inside per-round loops.
     """
-    spark = df.sparkSession
-    width = int(
-        spark.conf.get(
-            "spark.fawac.fanout.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-    )
-    if df.rdd.getNumPartitions() >= width:
+    if df.rdd.getNumPartitions() >= df.sparkSession.sparkContext.defaultParallelism:
         return df
-    return df.repartition(width, *[F.col(k) for k in keys])
+    return fan_out(df, *keys)
 
 
 def one_row_audit(

@@ -51,49 +51,13 @@ _QUERY_MODULES = [
 ]
 
 # Registry emission order.  The driver's correctness gate evaluates the
-# FIRST 50 entries in insertion order (CORRECTNESS_rNN keys == names[:50]
-# every verified round so far), so ordering is part of the verification
-# contract: _PRIORITY is the round's driver window, rotated each round so
-# the hard driver-hash signal lands on (a) queries that have NEVER had a
-# driver row, (b) queries whose VALUES changed this round, (c) operators
-# new this round, then (d) the stalest remaining evidence.  Everything
-# outside the window stays covered by tools/parity.py full-registry
-# sweeps (sf0.01 + sf0.1, recorded in tools/parity_last.json and gated by
-# tests/test_tools.py) and tests/test_oracle_parity.py at sf0.001.
-#
-# Rounds 10-14 rotations kept for history in git; round-15 below.
-#
-# Round-15 rotation (VERDICT r14 #1 — executed exactly as the r14
-# registry note planned it).  Composition, in order:
-#   21 never-driver-verified  (the ENTIRE round-14 cohort,
-#                             kendall_w_daily_types ..
-#                             cooks_distance_top_days — registered
-#                             after the r14 window froze and deferred
-#                             here per the ADVICE r10 convention; all
-#                             21 were green in the judge's independent
-#                             r14 parity run and in the closing
-#                             dual-scale sweeps, but have zero driver
-#                             rows.)
-# + zorder_bucket_stats       (last driver hash r6 — the deliberate r14
-#                             deferral, now retired.)
-# + 28 r8-stale               (of the 48-query cohort whose latest
-#                             driver hash is CORRECTNESS_r08 — the
-#                             oldest remaining evidence after zorder;
-#                             taken alphabetically,
-#                             approx_stats_error_bound ..
-#                             range_frame_trailing_hour.)
-# = 50.  The round-16 window plan (VERDICT r12 #1 asks for this note):
-# the 21 round-15 registrations first (never driver-verified:
-# pca_gram_matrix .. wav_zero_crossing_rate, registration order), then
-# the REMAINING 20 r8-stale queries (retention_cohort_matrix ..
-# winnowing_fingerprints), then 9 of the 43-query r9-stale cohort
-# (alphabetical) to fill to 50.
-# Operators REGISTERED in round 15 land after this window froze and are
-# DEFERRED to the round-16 window (ADVICE r10 convention) — they ride
-# the closing dual-scale sweeps and tests/test_oracle_parity.py
-# instead.
+# FIRST 50 entries in insertion order, so ordering is part of the
+# verification contract: _PRIORITY is that window (exactly 50 names,
+# tests/test_oracle_parity.py pins it).  Everything outside the window
+# stays covered by tools/parity.py full-registry sweeps (recorded in
+# tools/parity_last.json and gated by tests/test_tools.py) and by
+# tests/test_oracle_parity.py at sf0.001.
 _PRIORITY = [
-    # Never driver-verified: the round-14 registrations (21).
     "kendall_w_daily_types",
     "mantel_haenszel_returns",
     "logrank_test_purchase",
@@ -115,9 +79,7 @@ _PRIORITY = [
     "simpsons_paradox_audit",
     "durbin_watson_daily",
     "cooks_distance_top_days",
-    # The r14 deferral (last driver hash r6).
     "zorder_bucket_stats",
-    # r8-stale (28 of 48, alphabetical; remaining 20 are the r16 core).
     "approx_stats_error_bound",
     "binned_interval_join_counts",
     "bm25_topk_docs",
@@ -147,261 +109,6 @@ _PRIORITY = [
     "prefix_half_per_user",
     "range_frame_trailing_hour",
 ]
-
-
-# Non-frozen bench extras: newer-operator queries that bench.py times
-# per-round under its "extras" key (the frozen 20-query HEADLINE total
-# must stay comparable across rounds, so additions land here, never
-# there).  ONE definition — bench.py imports this tuple; the former
-# hand-copied literal there was how the lists drifted (ADVICE r6).
-BENCH_EXTRAS: tuple[str, ...] = (
-    "substring_dup_stats",
-    "bloom_semi_join_gate",
-    "incremental_lsh_dedup",
-    "lsh_dedup_admissions",
-    "knn_join_bucketed_top3",
-    "packing_efficiency_stats",
-    "semantic_dedup_cell_stats",
-    "semantic_dedup_admissions",
-    "incremental_semantic_dedup",
-    "weighted_source_mixture",
-    "semantic_cc_survivors",
-    "bm25_topk_docs",
-    "dsir_selected_docs",
-    "multiprobe_lsh_topk_query0",
-    "shuffled_shard_manifest",
-    "ngram_novelty_by_shard",
-    "ivf_multiprobe_topk_query1",
-    "quality_classifier_scores",
-    "dsir_gumbel_resample",
-    "token_budget_selection",
-    "embedding_margin_stats",
-    "token_budget_admissions",
-    "binned_interval_join_counts",
-    "cms_user_event_estimates",
-    "retention_cohort_matrix",
-    "session_transition_matrix",
-    "rolling_zscore_anomalies",
-    "scd2_user_state_intervals",
-    "cdc_version_diff",
-    "near_dup_triangle_counts",
-    "source_kl_drift",
-    "pagerank_near_dup",
-    "rrf_fused_topk_docs",
-    "semantic_decontam_flags",
-    "gopher_quality_flags",
-    "containment_dup_pairs",
-    "hard_triplet_mining",
-    "stratified_eval_quota",
-    "dup_cluster_size_hist",
-    "minhash_est_error_pairs",
-    "source_overlap_matrix",
-    "substring_span_removal",
-    "span_removal_firstseen",
-    "lineitem_column_histograms",
-    "lineitem_depth_histograms",
-    "multimodal_curation_composed",
-    "decontam_span_removal",
-    "span_clean_corpus_stats",
-    "adaptive_source_quality_filter",
-    "k_anonymity_audit",
-    "dp_noised_source_counts",
-    "debounced_events",
-    "stratified_weighted_reservoir",
-    "full_outer_user_reconciliation",
-    "bigram_perplexity_by_source",
-    "bpe_merge_pair_counts",
-    "split_doc_candidates",
-    "xml_scan_customer_agg",
-    # round 10
-    "ppjoin_jaccard_pairs",
-    "lsh_recall_vs_exact",
-    "holt_smoothed_values",
-    "neyman_stratified_allocation",
-    "mad_robust_outliers",
-    "erasure_cascade_audit",
-    "quality_quantile_norm",
-    "token_entropy_quality",
-    "bpe_learned_merges",
-    "winsorized_stats_by_type",
-    "rolling_median_per_user",
-    "nucleus_quality_selection",
-    "zipf_fit_by_source",
-    "pca_explained_variance",
-    "data_quality_expectations",
-    "out_of_order_stats",
-    "heaps_vocab_growth",
-    "cusum_drift_by_type",
-    "quality_survivor_per_cluster",
-    "trailing_7d_active_users",
-    "funnel_time_to_convert",
-    # round 11
-    "benford_first_digit_audit",
-    "theil_sen_monthly_trend",
-    "ohlc_daily_events",
-    "twap_daily_value",
-    "assoc_rule_event_pairs",
-    "acf_monthly_revenue",
-    "mutual_info_type_hour",
-    "tail_pvalue_anomalies",
-    "churn_retention_weekly",
-    "skyline_pareto_customers",
-    "seasonal_hour_anomalies",
-    "user_daily_streaks",
-    "gini_concentration_by_source",
-    "doclen_log2_histogram",
-    "vocab_coverage_topk",
-    "jsd_source_unigrams",
-    "lsh_param_frontier",
-    "quality_dedup_admissions",
-    "pca_projected_coords",
-    "bpe_encode_stats",
-    "quantile_loss_by_flag",
-    "chi_square_type_hour",
-    "item_cooccurrence_similarity",
-    "session_path_topk",
-    "score_calibration_bins",
-    "holt_winters_hourly",
-    "multi_touch_attribution",
-    "rfm_customer_segments",
-    "strict_funnel_1h_counts",
-    "embedding_centroid_drift",
-    "lang_id_confusion",
-    "mom_revenue_growth",
-    "customer_decile_lift",
-    "event_interarrival_stats",
-    "jaccard_threshold_histogram",
-    # round 12
-    "kendall_tau_monthly",
-    "mann_whitney_flag_test",
-    "two_proportion_ab_test",
-    "ks_test_type_hours",
-    "survival_km_purchase",
-    "seasonal_naive_backtest",
-    "cohort_ltv_matrix",
-    "rolling_corr_types_daily",
-    "abc_analysis_parts",
-    "pivot_monthly_flag_revenue",
-    "l_diversity_audit",
-    "dup_ngram_char_fraction",
-    "segment_dedup_stats",
-    "embedding_clip_bounds",
-    "join_key_skew_profile",
-    "ann_recall_curve",
-    "ols_two_feature",
-    "poisson_bootstrap_ci",
-    "capture_recapture_dups",
-    "bh_fdr_type_hour",
-    "effect_size_flags",
-    # round 12, extension waves (registered after the r12 closing sweeps;
-    # listed in PENDING_SWEEP until the next dual-scale sweep lands)
-    "spearman_corr_daily",
-    "anova_f_event_types",
-    "welch_t_flags",
-    "max_drawdown_daily",
-    "permutation_test_mean_diff",
-    "hhi_source_concentration",
-    "t_closeness_audit",
-    "eb_shrunk_part_rates",
-    "page_hinkley_by_type",
-    "mood_median_event_types",
-    "brown_forsythe_event_types",
-    "silhouette_by_cell",
-    "near_dup_source_modularity",
-    "markov_removal_attribution",
-    "pacf_monthly_revenue",
-    "mcnemar_halves_test",
-    "cochran_armitage_trend",
-    "dispersion_index_hourly",
-    "embedding_diversity_by_label",
-    "theil_inequality_by_nation",
-    "importance_weight_ess",
-    "ljung_box_monthly",
-    "session_entropy_rate",
-    "runs_test_daily_sign",
-    # round 13
-    "traindata_modern_pipeline",
-    "cohens_kappa_langid",
-    "kruskal_wallis_event_types",
-    "best_changepoint_daily",
-    "psi_train_eval_quality",
-    "decontam_n_frontier",
-    "welch_anova_event_types",
-    "packing_budget_frontier",
-    "friedman_daily_types",
-    "dunn_posthoc_event_types",
-    "hill_tail_index_doclen",
-    "dedup_quality_bias",
-    # round 14
-    "kendall_w_daily_types",
-    "mantel_haenszel_returns",
-    "logrank_test_purchase",
-    "grubbs_outlier_daily",
-    "bowker_symmetry_transitions",
-    "cvm_test_type_hours",
-    "seasonal_strength_hourly",
-    "vocab_richness_estimators",
-    "fuzzy_title_dedup",
-    "jackknife_source_influence",
-    "hopkins_clusterability",
-    "rbo_retrieval_agreement",
-    "shuffle_adjacency_audit",
-    "conformal_residual_coverage",
-    "kw_effect_sizes_event_types",
-    "energy_distance_type_hours",
-    "l_moments_event_values",
-    "decile_treatment_effects",
-    "simpsons_paradox_audit",
-    "durbin_watson_daily",
-    "cooks_distance_top_days",
-    # round 15
-    "pca_gram_matrix",
-    "bartlett_test_event_types",
-    "ks_test_flag_values",
-    "icc_user_events",
-    "mann_kendall_trend_daily",
-    "ccf_daily_types",
-    "gev_shape_daily_max",
-    "pot_mean_excess_doclen",
-    "turning_points_daily",
-    "doc_perplexity_outliers",
-    "burstiness_word_stats",
-    "minhash_band_load_profile",
-    "partial_corr_daily_types",
-    "hurst_aggvar_daily",
-    "lorenz_curve_customer_spend",
-    "ngram_entropy_orders",
-    "top2_changepoints_daily",
-    "sen_slope_ci_monthly",
-    "bowley_skewness_values",
-    "ppm_edge_density",
-    "wav_zero_crossing_rate",
-)
-
-
-# FROZEN extension headline (round 13, VERDICT r12 #6): the frozen
-# 20-query HEADLINE is all r3-era operators, so the newer LLM/stats
-# surface only rode unfrozen extras and a cross-round regression there
-# had no total-level gate.  This second list freezes ten of the heaviest
-# newer operators — set-similarity ground truth, graph dedup, bootstrap
-# stats, span rewrite, retrieval, ANN join, selection, histograms —
-# with its own bench_compare budget.  Every name is ALSO in
-# BENCH_EXTRAS (bench.py times each once and reuses the number), so the
-# extras-intersection per-query gate keeps covering them individually;
-# this list adds the frozen TOTAL ("ext_value" in the bench record).
-# Do not grow or reorder — add new queries to BENCH_EXTRAS instead.
-EXT_HEADLINE: tuple[str, ...] = (
-    "ppjoin_jaccard_pairs",
-    "pagerank_near_dup",
-    "semantic_cc_survivors",
-    "poisson_bootstrap_ci",
-    "substring_span_removal",
-    "bm25_topk_docs",
-    "knn_join_bucketed_top3",
-    "token_budget_selection",
-    "permutation_test_mean_diff",
-    "lineitem_depth_histograms",
-)
 
 
 # Queries registered since the last green full-registry parity sweep —

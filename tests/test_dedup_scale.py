@@ -86,6 +86,27 @@ def test_connected_components_two_components_and_isolated(spark):
     assert labels == {10: 10, 20: 10, 30: 10, 40: 40, 50: 40, 60: 60}
 
 
+def test_min_label_cc_refuses_unconverged_chain(spark):
+    """A path 0-1-...-7 needs 7 propagation rounds plus one confirming
+    round: with fewer, vertex 7 still carries a partial label, so the
+    loop must raise instead of returning it; with enough it converges
+    to one component."""
+    import pytest
+
+    n = 8
+    verts = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_min_label(chain, verts, max_iter=4)
+    labels = {
+        r["doc_id"]: r["component"]
+        for r in connected_components_min_label(chain, verts, max_iter=n).collect()
+    }
+    assert labels == {i: 0 for i in range(n)}
+
+
 def test_capped_shingles_plan_broadcasts_hot_list(spark):
     """The anti-join against the hot-shingle list must broadcast (the hot
     list is tiny by construction) — no shuffle of the shingle stream."""

@@ -60,16 +60,15 @@ def test_driver_window_is_valid():
 
 
 def test_bench_lists_resolve_and_do_not_overlap():
-    """bench.py times HEADLINE (frozen) + registry.BENCH_EXTRAS (one
-    shared definition, ADVICE r6) — every name must resolve and the two
-    lists must stay disjoint so extras never leak into the frozen total."""
+    """bench.py times the 20 HEADLINE queries: every name must resolve in
+    the registry and appear once, so no query is timed twice in the
+    total."""
     from bench import HEADLINE
-    from fawac_cdc_spark.registry import BENCH_EXTRAS
 
-    missing = [n for n in list(HEADLINE) + list(BENCH_EXTRAS) if n not in _SPECS]
+    missing = [n for n in HEADLINE if n not in _SPECS]
     assert not missing, missing
     assert len(HEADLINE) == 20
-    assert not set(HEADLINE) & set(BENCH_EXTRAS)
+    assert len(set(HEADLINE)) == len(HEADLINE)
 
 
 def test_no_hash_risky_oracle_types(sf_dir):

@@ -1556,7 +1556,7 @@ def test_l_moments_windows_are_bucket_blocked(spark, sf_dir):
 
 def test_fan_out_width_and_conditional_guard(spark):
     """Round-15 optimization internals: ``helpers.fan_out`` repartitions
-    to the configured width (explicit count — AQE-coalesce-exempt), and
+    to ``defaultParallelism`` (explicit count — AQE-coalesce-exempt), and
     ``helpers.fan_out_if_narrow`` is a NO-OP when the input already has
     at least that many partitions (pure-map-over-scan guard: at scale
     the plan stays shuffle-free)."""
@@ -1573,12 +1573,6 @@ def test_fan_out_width_and_conditional_guard(spark):
     # already-wide input: the guard must leave the plan untouched
     guarded = fan_out_if_narrow(wide, "k")
     assert "Exchange" not in guarded._jdf.queryExecution().executedPlan().toString()
-    # conf override wins over defaultParallelism
-    spark.conf.set("spark.fawac.fanout.partitions", "7")
-    try:
-        assert fan_out(narrow, "k").rdd.getNumPartitions() == 7
-    finally:
-        spark.conf.unset("spark.fawac.fanout.partitions")
     # values are a pure repartition: identical multiset
     a = sorted(r["k"] for r in fan_out(narrow, "k").collect())
     assert a == list(range(1000))

@@ -2112,3 +2112,15 @@ def test_span_dedup_watermarked_drops_beyond_delay(spark, tmp_path):
     assert 5 not in set(emitted["doc_id"])
     ten = emitted[emitted.doc_id == 10]
     assert len(ten) > 0 and not ten["dup"].any()
+
+
+def test_money_cents_is_half_up_not_bankers():
+    """The stateful ops' money→cents conversion must match the batch
+    oracles' CAST(value AS DECIMAL(18,2)) (HALF_UP), not Python round()'s
+    banker's rounding, on exact half-cent values."""
+    assert cdc._money_cents(0.025) == 3  # banker's round(0.025, 2) -> 0.02
+    assert cdc._money_cents(0.035) == 4  # banker's would also give 0.04 here
+    assert cdc._money_cents(0.005) == 1
+    assert cdc._money_cents(2.675) == 268  # float 2.675 binary-rounds DOWN via round()
+    assert cdc._money_cents(12.34) == 1234
+    assert cdc._money_cents(0.0) == 0

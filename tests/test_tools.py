@@ -1,182 +1,30 @@
-"""Unit gates for repo tooling + money rounding semantics (VERDICT r5
-item 5: the carried ADVICE items get tests so they stay fixed)."""
+"""Unit gates for tooling records: bench.py's stdout line must fit the
+tail capture, tools/parity_last.json must cover the registry, and
+tools/parity.py's record writer must merge scales and refuse toy
+runs."""
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
-import sys
 
 import pytest
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_money_cents_is_half_up_not_bankers():
-    """The stateful ops' money→cents conversion must match the batch
-    oracles' CAST(value AS DECIMAL(18,2)) (HALF_UP), not Python round()'s
-    banker's rounding, on exact half-cent values."""
-    from fawac_cdc_spark.streaming.cdc import _money_cents
-
-    assert _money_cents(0.025) == 3  # banker's round(0.025, 2) -> 0.02
-    assert _money_cents(0.035) == 4  # banker's would also give 0.04 here
-    assert _money_cents(0.005) == 1
-    assert _money_cents(2.675) == 268  # float 2.675 binary-rounds DOWN via round()
-    assert _money_cents(12.34) == 1234
-    assert _money_cents(0.0) == 0
-
-
-def _run_bench_compare(tmp_path, base: dict, now: dict) -> tuple[int, str]:
-    b, n = tmp_path / "base.json", tmp_path / "now.json"
-    b.write_text(json.dumps(base))
-    n.write_text(json.dumps(now))
-    proc = subprocess.run(
-        [sys.executable, os.path.join(_REPO, "tools", "bench_compare.py"), str(b), str(n)],
-        capture_output=True,
-        text=True,
-    )
-    return proc.returncode, proc.stdout
-
-
-def test_bench_compare_counts_only_per_query_regressions(tmp_path):
-    """The within-budget summary must count actual per-query regressions:
-    a total-budget failure (or any other failure string) must not deflate
-    it (the pre-fix version re-parsed failure strings by ':')."""
-    base = {"value": 10.0, "queries": {"a": 1.0, "b": 1.0, "c": 1.0}}
-    # a regresses 2x (>35%); total regresses too (> 5%)
-    now = {"value": 20.0, "queries": {"a": 2.0, "b": 1.0, "c": 1.05}}
-    rc, out = _run_bench_compare(tmp_path, base, now)
-    assert rc == 1
-    assert "2/3 within budget" in out
-    assert "total budget exceeded" in out
-
-
-def test_bench_compare_passes_within_tolerance(tmp_path):
-    base = {"value": 10.0, "queries": {"a": 1.0, "b": 1.0}}
-    now = {"value": 10.2, "queries": {"a": 1.1, "b": 0.9}}
-    rc, out = _run_bench_compare(tmp_path, base, now)
-    assert rc == 0
-    assert "2/2 within budget" in out
-
-
-def test_bench_compare_gates_extras_intersection(tmp_path):
-    """Extras outside the frozen headline get the same per-query band
-    over the set present in BOTH runs — a regressed extra fails the
-    gate, while extras new to the current run are ignored (the set
-    grows round to round)."""
-    base = {"value": 10.0, "queries": {"a": 1.0}, "extras": {"x": 1.0, "y": 1.0}}
-    now = {
-        "value": 10.0,
-        "queries": {"a": 1.0},
-        "extras": {"x": 2.0, "y": 1.1, "brand_new": 9.9},
-    }
-    rc, out = _run_bench_compare(tmp_path, base, now)
-    assert rc == 1
-    assert "FAIL extra x" in out
-    assert "[ok] extra y" in out
-    assert "brand_new" not in out
-    assert "1/2 extras within budget" in out
-    # and a clean extras set passes
-    now_ok = {"value": 10.0, "queries": {"a": 1.0}, "extras": {"x": 1.05, "y": 0.9}}
-    rc2, out2 = _run_bench_compare(tmp_path, base, now_ok)
-    assert rc2 == 0
-    assert "2/2 extras within budget" in out2
-    # a baseline extra vanishing from the current run fails (the set
-    # only ever grows; absence means the benchmark crashed or was
-    # dropped)
-    now_missing = {"value": 10.0, "queries": {"a": 1.0}, "extras": {"x": 1.0}}
-    rc3, out3 = _run_bench_compare(tmp_path, base, now_missing)
-    assert rc3 == 1
-    assert "extras missing from current run" in out3
-
-
-def test_ext_headline_is_frozen_and_rides_extras():
-    """The round-13 extension headline (VERDICT r12 #6): exactly ten
-    frozen names, every one a member of BENCH_EXTRAS (bench.py reuses
-    the extras timing — one measurement, two gates)."""
-    from fawac_cdc_spark.registry import BENCH_EXTRAS, EXT_HEADLINE, all_specs
-
-    assert len(EXT_HEADLINE) == 10
-    assert len(set(EXT_HEADLINE)) == 10
-    assert set(EXT_HEADLINE) <= set(BENCH_EXTRAS)
-    assert set(EXT_HEADLINE) <= set(all_specs())
-
-
-def test_bench_compare_gates_ext_total(tmp_path):
-    """The ext-headline TOTAL gets its own budget (same band as the main
-    total); a pre-round-13 baseline without ext info bootstraps the gate
-    instead of failing."""
-    base = {
-        "value": 10.0,
-        "queries": {"a": 1.0},
-        "ext_queries": {"x": 5.0, "y": 5.0},
-        "extras": {"x": 5.0, "y": 5.0},
-    }
-    now_bad = {
-        "value": 10.0,
-        "queries": {"a": 1.0},
-        "ext_queries": {"x": 5.5, "y": 5.5},
-        "extras": {"x": 5.5, "y": 5.5},
-    }
-    rc, out = _run_bench_compare(tmp_path, base, now_bad)
-    assert rc == 1 and "ext total budget exceeded" in out
-    now_ok = {
-        "value": 10.0,
-        "queries": {"a": 1.0},
-        "ext_queries": {"x": 5.1, "y": 5.1},
-        "extras": {"x": 5.1, "y": 5.1},
-    }
-    rc2, out2 = _run_bench_compare(tmp_path, base, now_ok)
-    assert rc2 == 0 and "ext total:" in out2
-    # compact-record fallback: ext_value alone also gates
-    rc3, out3 = _run_bench_compare(
-        tmp_path,
-        {"value": 10.0, "queries": {"a": 1.0}, "ext_value": 10.0},
-        {"value": 10.0, "queries": {"a": 1.0}, "ext_value": 11.0},
-    )
-    assert rc3 == 1 and "ext total budget exceeded" in out3
-    # bootstrap: baseline without ext info
-    rc4, out4 = _run_bench_compare(
-        tmp_path,
-        {"value": 10.0, "queries": {"a": 1.0}},
-        {"value": 10.0, "queries": {"a": 1.0}, "ext_value": 11.0},
-    )
-    assert rc4 == 0 and "ext gate bootstraps" in out4
-
-
 def test_bench_stdout_line_fits_driver_tail_capture():
-    """The driver records only the TAIL of bench.py's stdout (~2000 chars);
-    round 7's inline extras grew past it and BENCH_r07.json came back
-    "parsed": null.  Guard the contract: the compact headline-only line —
-    frozen 20 queries, no extras key — must stay well under the capture
-    window even with worst-case float widths."""
-    sys.path.insert(0, _REPO)
+    """Callers record only the tail of bench.py's stdout (~2000 chars), so
+    the one JSON line must carry exactly {metric, value, unit, queries, sf}
+    and stay well under the capture window even with worst-case float
+    widths."""
     import bench
 
-    assert len(bench.HEADLINE) == 20  # frozen since round 3
-    # the REAL record constructor (ADVICE r8) — if bench.py ever adds a
-    # key to the compact record, this measures it.  The extension
-    # headline (round 13) contributes only its TOTAL to the line.
-    from fawac_cdc_spark.registry import EXT_HEADLINE
-
-    compact = bench.compact_record(
-        {name: 99999.999 for name in bench.HEADLINE},
-        "0.1",
-        {name: 99999.999 for name in EXT_HEADLINE},
-        probe=99999.999,
-        probe_post=99999.999,
-    )
-    line = json.dumps(compact)
-    assert "extras" not in compact
-    assert "ext_queries" not in compact  # per-query ext is file-only
-    assert compact["ext_value"] > 0
-    assert compact["probe_seconds"] > 0  # host-drift probe rides the line
-    assert compact["probe_seconds_post"] > 0  # bookend probe (round 15)
-    assert len(line) < 1800, f"compact bench line too long: {len(line)} chars"
-    # and the full record (with extras) goes to a file, not stdout
+    record = bench.compact_record({name: 99999.999 for name in bench.HEADLINE}, "0.1")
+    assert set(record) == {"metric", "value", "unit", "queries", "sf"}
+    line = json.dumps(record)
+    assert len(line) < 1800, f"bench line too long: {len(line)} chars"
     src = open(os.path.join(_REPO, "bench.py")).read()
-    assert "BENCH_FULL.json" in src
     assert src.rstrip().endswith("main()")
 
 
@@ -251,178 +99,3 @@ def test_sweep_record_merges_scales_and_refuses_toy_runs(tmp_path):
         update_sweep_record(path, "/data/sf0.1-v2", names)
     rec = json.load(open(path))
     assert rec["total"] == 3  # record untouched by the failed call
-
-
-def test_bench_compare_gates_ext_per_query(tmp_path):
-    """Round 14 (VERDICT r13 #2): when BOTH records carry the ext_queries
-    map, every frozen ext member gets the per-query band and a vanished
-    member fails — the frozen ext baseline is a first-class rc gate."""
-    base = {
-        "value": 2.0,
-        "queries": {"a": 1.0, "b": 1.0},
-        "ext_queries": {"x": 1.0, "y": 2.0},
-    }
-    now = {
-        "value": 2.0,
-        "queries": {"a": 1.0, "b": 1.0},
-        # y regresses 2x; ext total 1.0+4.0 also breaches the 5% band
-        "ext_queries": {"x": 1.0, "y": 4.0},
-    }
-    rc, out = _run_bench_compare(tmp_path, base, now)
-    assert rc == 1
-    assert "FAIL ext y" in out
-    assert "1/2 ext within budget" in out
-    # vanished ext member fails even when timings are fine
-    now2 = {"value": 2.0, "queries": {"a": 1.0, "b": 1.0}, "ext_queries": {"x": 1.0}}
-    rc2, out2 = _run_bench_compare(tmp_path, base, now2)
-    assert rc2 == 1
-    assert "ext queries missing" in out2
-
-
-def test_bench_compare_refuses_to_judge_on_host_drift(tmp_path):
-    """Round 14 (VERDICT r13 #4): a fixed-work probe >15% slower than the
-    baseline session means the '+N%' readings are drift, not regression —
-    the gate returns rc=2 (re-run when quiet) instead of rc=1; a FASTER
-    host is annotated but judged normally."""
-    base = {"value": 2.0, "queries": {"a": 1.0, "b": 1.0}, "probe_seconds": 1.0}
-    slow = {"value": 2.6, "queries": {"a": 1.6, "b": 1.0}, "probe_seconds": 1.3}
-    rc, out = _run_bench_compare(tmp_path, base, slow)
-    assert rc == 2
-    assert "REFUSE-TO-JUDGE" in out
-    fast = {"value": 1.8, "queries": {"a": 0.9, "b": 0.9}, "probe_seconds": 0.8}
-    rc2, out2 = _run_bench_compare(tmp_path, base, fast)
-    assert rc2 == 0
-    assert "host probe" in out2
-    # pre-probe baselines bootstrap instead of failing
-    old = {"value": 2.0, "queries": {"a": 1.0, "b": 1.0}}
-    rc3, out3 = _run_bench_compare(tmp_path, old, slow)
-    assert rc3 == 1  # the real regression still fails; no refuse path
-    assert "probe bootstraps" in out3
-
-
-def test_bench_compare_ext_missing_check_needs_both_maps(tmp_path):
-    """ADVICE r14 (low): a compact record carrying only ext_value has no
-    ext_queries map BY SHAPE — the vanished-member check must not read
-    that as every frozen ext query having crashed."""
-    base = {
-        "value": 2.0,
-        "queries": {"a": 1.0},
-        "ext_queries": {"x": 1.0, "y": 2.0},
-    }
-    compact_now = {"value": 2.0, "queries": {"a": 1.0}, "ext_value": 3.1}
-    rc, out = _run_bench_compare(tmp_path, base, compact_now)
-    assert rc == 0, out
-    assert "ext queries missing" not in out
-    # the map-vs-map vanished check still fires (test above pins it too)
-    now_vanished = {"value": 2.0, "queries": {"a": 1.0}, "ext_queries": {"x": 1.0}}
-    rc2, out2 = _run_bench_compare(tmp_path, base, now_vanished)
-    assert rc2 == 1 and "ext queries missing" in out2
-
-
-def test_bench_compare_bookend_probe_judges_sections(tmp_path):
-    """Round 15 (VERDICT r14 #3): the ext/extras section runs LAST, so it
-    is judged by the POST bookend probe — a clean pre-probe with a
-    drifted post-probe (the r14 episode: monotone mid-session drift)
-    refuses to judge the late section (rc=2) instead of crying
-    regression; clean bookends judge normally."""
-    base = {
-        "value": 2.0,
-        "queries": {"a": 1.0, "b": 1.0},
-        "ext_queries": {"x": 1.0},
-        "probe_seconds": 1.0,
-    }
-    # pre clean (+2%), post drifted (+40%): the ext "regression" is drift
-    drifted = {
-        "value": 2.0,
-        "queries": {"a": 1.0, "b": 1.0},
-        "ext_queries": {"x": 2.0},
-        "probe_seconds": 1.02,
-        "probe_seconds_post": 1.4,
-    }
-    rc, out = _run_bench_compare(tmp_path, base, drifted)
-    assert rc == 2
-    assert "REFUSE-TO-JUDGE [ext/extras]" in out
-    assert "REFUSE-TO-JUDGE [headline]" not in out
-    assert "probe bookends" in out
-    # clean bookends: the same ext regression is judged for real (rc=1)
-    quiet = {
-        "value": 2.0,
-        "queries": {"a": 1.0, "b": 1.0},
-        "ext_queries": {"x": 2.0},
-        "probe_seconds": 1.02,
-        "probe_seconds_post": 1.05,
-    }
-    rc2, out2 = _run_bench_compare(tmp_path, base, quiet)
-    assert rc2 == 1
-    assert "FAIL ext x" in out2
-    # a slow PRE probe refuses the headline section by name
-    slow_pre = {
-        "value": 2.6,
-        "queries": {"a": 1.6, "b": 1.0},
-        "ext_queries": {"x": 1.0},
-        "probe_seconds": 1.3,
-        "probe_seconds_post": 1.3,
-    }
-    rc3, out3 = _run_bench_compare(tmp_path, base, slow_pre)
-    assert rc3 == 2
-    assert "REFUSE-TO-JUDGE [headline]" in out3
-    # a baseline WITH a post reading becomes the late section's reference
-    base_post = dict(base, probe_seconds_post=2.0)
-    now_post_ok = dict(quiet, probe_seconds_post=2.1, ext_queries={"x": 1.0})
-    rc4, out4 = _run_bench_compare(tmp_path, base_post, now_post_ok)
-    assert rc4 == 2  # bookends 1.02 -> 2.1 disagree: still refused
-    assert "bookend disagreement" in out4
-    # bookend refusal is ONE-SIDED: a post-probe FASTER than pre is the
-    # normal session warm-up signature, never contamination evidence
-    warm = dict(quiet, probe_seconds=1.0, probe_seconds_post=0.6)
-    warm["ext_queries"] = {"x": 1.0}
-    rc5, out5 = _run_bench_compare(tmp_path, base, warm)
-    assert rc5 == 0, out5
-    assert "REFUSE-TO-JUDGE" not in out5
-
-
-def test_bench_compare_annotates_measured_dispersion(tmp_path, monkeypatch):
-    """Round 15 (VERDICT r14 #4): a per-query regression line cites the
-    committed single-run dispersion calibration — inside the measured
-    spread vs OUTSIDE it — so driver single-pass upticks are adjudicated
-    with a number.  Informational only: rc is unchanged."""
-    disp = tmp_path / "disp.json"
-    disp.write_text(
-        json.dumps(
-            {
-                "n_runs": 5,
-                "queries": {
-                    "a": {"spread": 1.9},
-                    "b": {"spread": 1.1},
-                },
-            }
-        )
-    )
-    monkeypatch.setenv("SPARK_GRAFT_DISPERSION", str(disp))
-    base = {"value": 2.0, "queries": {"a": 1.0, "b": 1.0}}
-    # a +80% (inside x1.9), b +80% (OUTSIDE x1.1)
-    now = {"value": 3.6, "queries": {"a": 1.8, "b": 1.8}}
-    b, n = tmp_path / "base.json", tmp_path / "now.json"
-    b.write_text(json.dumps(base))
-    n.write_text(json.dumps(now))
-    proc = subprocess.run(
-        [sys.executable, os.path.join(_REPO, "tools", "bench_compare.py"),
-         str(b), str(n)],
-        capture_output=True,
-        text=True,
-        env={**os.environ, "SPARK_GRAFT_DISPERSION": str(disp)},
-    )
-    assert proc.returncode == 1  # regressions still fail
-    out = proc.stdout
-    assert "[REGRESS] a" in out and "inside measured single-run spread x1.90" in out
-    assert "[REGRESS] b" in out and "OUTSIDE measured single-run spread x1.10" in out
-    # without a calibration file the lines carry no annotation
-    proc2 = subprocess.run(
-        [sys.executable, os.path.join(_REPO, "tools", "bench_compare.py"),
-         str(b), str(n)],
-        capture_output=True,
-        text=True,
-        env={**os.environ, "SPARK_GRAFT_DISPERSION": str(tmp_path / "nope.json")},
-    )
-    assert proc2.returncode == 1
-    assert "single-run spread" not in proc2.stdout
