@@ -1201,8 +1201,22 @@ def connected_component_survivors(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True iff the big→small ``(src, dst)`` edge set is a union of
+    stars: every ``src`` has exactly one edge and no ``dst`` is also a
+    ``src``.  That is the fixpoint of large-star/small-star and the
+    condition its labeling reads components off, so it confirms a
+    fingerprint match exactly (one Spark job)."""
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("n"))
+    multi = deg.where(F.col("n") > 1).select("src")
+    chained = edges.select(F.col("dst").alias("src")).join(
+        deg.select("src"), "src", "left_semi"
+    )
+    return multi.unionByName(chained).isEmpty()
+
+
 def connected_components_star(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 16, strict: bool = True
+    edges: DataFrame, vertices: DataFrame, max_iter: int = 16
 ) -> tuple[DataFrame, int]:
     """Connected components via alternating large-star/small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -1216,11 +1230,14 @@ def connected_components_star(
       plus u itself, re-attaches to the minimum smaller neighbor
 
     Each half-round is one groupBy + one join on the vertex key (the same
-    shuffle shape as a round of min-label), edges stay deduplicated, and
-    convergence is an edge-set fingerprint comparison. At convergence the
-    edge set is a union of stars centered at each component's minimum;
-    labels read directly off the big→small orientation. Returns
-    ``(labels, rounds_used)``.
+    shuffle shape as a round of min-label) and edges stay deduplicated.
+    Convergence is decided exactly: an unchanged (count, hash-sum)
+    edge-set fingerprint only nominates a round, and
+    ``_is_star_forest`` confirms it, because at convergence the edge set
+    is a union of stars centered at each component's minimum and labels
+    read directly off the big→small orientation.  A hash collision on an
+    unconverged edge set therefore keeps looping instead of returning
+    wrong labels.  Returns ``(labels, rounds_used)``.
 
     Partitioning is SIZE-AWARE: the convergence probe already counts the
     edge set every round, so each materialization coalesces to
@@ -1231,12 +1248,11 @@ def connected_components_star(
     clock (measured 2.5× at sf0.1); at 100 TB the same rule scales the
     width back up with the data.
 
-    Exhausting ``max_iter`` without the fingerprint converging means the
-    labels are NOT component labels (edges still span multiple stars) —
-    with ``strict=True`` (default) that raises, because callers like
-    ``cc_star_survivors`` and ``leakage_safe_split_counts`` would
-    silently dedup/split on wrong components; ``strict=False`` downgrades
-    to a warning for exploratory use (ADVICE r5).
+    Exhausting ``max_iter`` without a confirmed fixpoint means the
+    labels are NOT component labels (edges still span multiple stars),
+    so it raises ``RuntimeError``: callers like ``cc_star_survivors`` and
+    ``leakage_safe_split_counts`` would otherwise silently dedup/split
+    on wrong components.
     """
 
     def _parts(n_edges: int) -> int:
@@ -1309,20 +1325,13 @@ def connected_components_star(
             .distinct()
             .coalesce(_parts(fp[0]))
         )
-        if new_fp == fp:
-            converged = True
-            break
+        converged = new_fp == fp and _is_star_forest(cur)
         fp = new_fp
     if not converged:
-        msg = (
+        raise RuntimeError(
             f"connected_components_star did not converge in {max_iter} rounds "
             f"({fp[0]} edges remain) — labels would not be component labels"
         )
-        if strict:
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     # stars point big→small at the component min; isolated vertices self-label
     star_labels = cur.groupBy("src").agg(F.min("dst").alias("component"))
     labels = vertices.join(

@@ -60,41 +60,6 @@ def _bucket_sql_duck(vec_col: str = "embedding", n_planes: int = N_PLANES) -> st
     return "CAST(" + " + ".join(terms) + " AS INT)"
 
 
-# Sub-BLOCKING variant of the bucket exprs (semantic dedup's rp_sub_planes
-# dial): the sign is taken on the ROUND-6 dot so the sub KEY agrees across
-# the three summation orders involved (Spark fold, DuckDB list_sum, the
-# stream's numpy matmul) per the repo-wide rounding convention.  The
-# rp_lsh query family keeps the original unrounded sign — retrofitting
-# rounding there would change already-verified results.
-
-
-def _sub_bucket_expr_spark(vec_col: str, n_planes: int) -> str:
-    terms = [
-        f"(case when round(({_dot_expr_spark(vec_col, p)}), 6) > 0 then {1 << h} else 0 end)"
-        for h, p in enumerate(HYPERPLANES[:n_planes])
-    ]
-    return "cast(" + " + ".join(terms) + " as int)"
-
-
-def _sub_bucket_sql_duck(vec_col: str, n_planes: int) -> str:
-    terms = [
-        f"(CASE WHEN ROUND(({_dot_sql_duck(vec_col, p)}), 6) > 0 THEN {1 << h} ELSE 0 END)"
-        for h, p in enumerate(HYPERPLANES[:n_planes])
-    ]
-    return "CAST(" + " + ".join(terms) + " AS INT)"
-
-
-def validate_sub_planes(rp_sub_planes: int) -> None:
-    """The sub-blocking dial draws from the N_PLANES fixed hyperplanes;
-    out-of-range values previously crashed the stream UDF while the
-    batch form silently truncated — fail loudly and identically
-    everywhere instead."""
-    if not 0 <= rp_sub_planes <= N_PLANES:
-        raise ValueError(
-            f"rp_sub_planes must be in [0, {N_PLANES}], got {rp_sub_planes}"
-        )
-
-
 _NORM_SPARK = "sqrt(aggregate(zip_with({v}, {v}, (x, y) -> double(x) * double(y)), 0D, (acc, t) -> acc + t))"
 _NORM_DUCK = (
     f"sqrt(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
@@ -320,7 +285,8 @@ def cosine_assigned_cells(e: DataFrame, n_cells: int = N_CENTROIDS) -> DataFrame
     ``n_cells`` sizes the coarse quantizer (paper guidance k ~ sqrt(n));
     the broadcast array holds to k ~ 10^5 (k x d doubles ≈ 50 MB at
     k=100k) — beyond that, route through the Arrow-matmul assignment
-    UDF (``streaming/cdc.py::semantic_dedup_stream``'s nearest_cell),
+    UDF (``streaming/cdc.py::semantic_dedup_stream_watermarked``'s
+    ``route``),
     which carries the k x d matrix in the task closure and is
     stream==batch parity-tested against this definition."""
     cents_row = (
@@ -576,9 +542,20 @@ def kmeans_refined_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver should do almost no data work).  The k-row result is
     # eagerly checkpointed so the second Lloyd pass's broadcast build
     # and the final stats join read it without re-running the first
-    # assignment pass.
+    # assignment pass.  A member vector that is short or null would
+    # silently shift its cell's per-dim means, so it fails the query.
+    member = F.when(
+        F.coalesce(F.size("embedding"), F.lit(-1)) != EMB_DIM,
+        F.raise_error(
+            F.concat(
+                F.lit("kmeans_refined_ivf_cells: embedding of vec_id "),
+                F.col("vec_id").cast("string"),
+                F.lit(f" does not have {EMB_DIM} entries"),
+            )
+        ),
+    ).otherwise(F.col("embedding"))
     dims = (
-        a1.select("cid", F.posexplode("embedding").alias("dim", "x"))
+        a1.select("cid", F.posexplode(member).alias("dim", "x"))
         .groupBy("cid", "dim")
         .agg(F.round(F.avg(F.col("x").cast("double")), 6).alias("cval"))
     )
@@ -978,18 +955,15 @@ def knn_join_bucketed_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_COS = 0.4
 
 
-def close_pair_edges(
-    assigned: DataFrame, keys: tuple[str, ...] = ("cent_id",)
-) -> DataFrame:
-    """(keys..., a_id, b_id): within-block close pairs — a_id < b_id and
+def close_pair_edges(assigned: DataFrame) -> DataFrame:
+    """(cent_id, a_id, b_id): within-cell close pairs — a_id < b_id and
     ROUND-6 cosine >= SEMDEDUP_COS — over an assignment frame carrying
-    (vec_id, embedding, nrm, keys...).  The ONE Spark-side pair probe
+    (vec_id, embedding, nrm, cent_id).  The ONE Spark-side pair probe
     shared by ``semantic_dedup_cell_stats_df``,
-    ``semantic_dedup_admissions_df``, and ``semantic_cc_survivors`` (a
+    ``semantic_dedup_admissions``, and ``semantic_cc_survivors`` (a
     third hand-inlined copy was how the family would drift; the oracles
     mirror it per query because their output shapes differ)."""
 
-    key_list = list(keys)
     # fan_out both join sides on the blocking key: the within-cell pair
     # probe amplifies CPU quadratically in the cell population (a 64-dim
     # rounded-cosine fold per candidate pair), while the assignment frame
@@ -1002,21 +976,21 @@ def close_pair_edges(
             F.col("vec_id").alias("a_id"),
             F.col("embedding").alias("a_emb"),
             F.col("nrm").alias("nrm_a"),
-            *key_list,
+            "cent_id",
         ),
-        *key_list,
+        "cent_id",
     )
     b = fan_out(
         assigned.select(
             F.col("vec_id").alias("b_id"),
             F.col("embedding").alias("b_emb"),
             F.col("nrm").alias("nrm_b"),
-            *key_list,
+            "cent_id",
         ),
-        *key_list,
+        "cent_id",
     )
     return (
-        a.join(b, key_list)
+        a.join(b, "cent_id")
         .where(F.col("a_id") < F.col("b_id"))
         .where(
             F.round(
@@ -1026,7 +1000,7 @@ def close_pair_edges(
             )
             >= SEMDEDUP_COS
         )
-        .select(*key_list, "a_id", "b_id")
+        .select("cent_id", "a_id", "b_id")
     )
 
 

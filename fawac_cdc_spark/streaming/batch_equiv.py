@@ -414,10 +414,9 @@ def ewma_state_batch_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     order — written as its closed form (first batch weighted
     ``(1-tau)^(J-1)``, batch j>1 weighted ``tau*(1-tau)^(J-j)``), so the
     whole thing is two hash aggregations and one window — no iteration,
-    no driver state. Streams pinned to this query:
-    ``ewma_target_stream_gs`` (applyInPandasWithState, in-container test)
-    and ``ewma_target_stream`` (transformWithStateInPandas). Rounded to
-    6dp on both engines per the float-parity convention."""
+    no driver state. The stream pinned to this query is
+    ``ewma_target_stream_gs`` (applyInPandasWithState). Rounded to 6dp
+    on both engines per the float-parity convention."""
     return _ewma_batch_fold(load_table(spark, sf_dir, "events"))
 
 
@@ -510,17 +509,13 @@ LEFT JOIN earlier e ON d.doc_id = e.doc_id
 )
 def lsh_dedup_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch closed form of the streaming near-dedup-on-ingest
-    operator (``streaming/cdc.py::lsh_dedup_stream``): a document is
-    admitted iff NO smaller-id document shares any of its LSH band
-    keys — exactly what the stream's smallest-doc-per-band-key state
-    converges to under id-ordered arrival (pinned stream==batch in
+    operator (``streaming/cdc.py::lsh_dedup_stream_watermarked``): a
+    document is admitted iff NO smaller-id document shares any of its
+    LSH band keys — exactly what the stream's smallest-doc-per-band-key
+    state converges to under any arrival order within the watermark
+    delay (pinned stream==batch on a shuffled feed in
     ``tests/test_streaming.py``).  One band self-join bounded by band
-    keys (never all-pairs), one per-doc aggregate.
-
-    For arbitrary (shuffled / multi-producer) feeds use the default
-    ``cdc.lsh_dedup_stream_watermarked`` twin, which converges to this
-    same closed form without the id-ordered precondition — see the
-    variant table in ``streaming/cdc.py``'s module docstring."""
+    keys (never all-pairs), one per-doc aggregate."""
     from ..functions.dedup import band_table_for, minhash_signatures_df
 
     bands = band_table_for(minhash_signatures_df(spark, sf_dir)).localCheckpoint(
@@ -551,35 +546,23 @@ def lsh_dedup_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def semantic_admissions_oracle_sql(rp_sub_planes: int = 0) -> str:
-    """DuckDB oracle for ``semantic_dedup_admissions_df``.  With
-    ``rp_sub_planes`` > 0, the pair probe additionally requires the same
-    RP sign-pattern over the first b hyperplanes (the hot-cell
-    sub-blocking dial — see the stream docstring for the recall trade)."""
+def semantic_admissions_oracle_sql() -> str:
+    """DuckDB oracle for ``semantic_dedup_admissions``."""
     from ..functions.similarity import (
         SEMDEDUP_COS,
         _dot2_duck,
         _NORM_DUCK,
         _scored_cents_sql,
-        _sub_bucket_sql_duck,
-        validate_sub_planes,
     )
 
-    validate_sub_planes(rp_sub_planes)
-    sub_col = (
-        f", {_sub_bucket_sql_duck('embedding', rp_sub_planes)} AS sub"
-        if rp_sub_planes
-        else ", 0 AS sub"
-    )
     return f"""
 WITH {_scored_cents_sql()}, assigned AS (
     SELECT vec_id, embedding, {_NORM_DUCK.format(v="embedding")} AS nrm, cent_id
-           {sub_col}
     FROM scored_cents WHERE rn = 1
 ), earlier AS (
     SELECT a.vec_id, COUNT(*) AS n
     FROM assigned a JOIN assigned b
-      ON a.cent_id = b.cent_id AND a.sub = b.sub AND b.vec_id < a.vec_id
+      ON a.cent_id = b.cent_id AND b.vec_id < a.vec_id
     WHERE ROUND(({_dot2_duck("a.embedding", "b.embedding")}) / (a.nrm * b.nrm), 6)
           >= {SEMDEDUP_COS}
     GROUP BY a.vec_id
@@ -598,61 +581,37 @@ FROM assigned a LEFT JOIN earlier e ON a.vec_id = e.vec_id
 )
 def semantic_dedup_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch closed form of the streaming SEMANTIC dedup-on-ingest
-    operator (``streaming/cdc.py::semantic_dedup_stream``) — the
-    embedding-side twin of ``lsh_dedup_admissions``: a vector is
+    operator (``streaming/cdc.py::semantic_dedup_stream_watermarked``) —
+    the embedding-side twin of ``lsh_dedup_admissions``: a vector is
     admitted iff NO smaller-id vector in its SemDeDup cell lies within
     the cosine threshold.  Deliberately non-recursive (charged against
     every earlier-SEEN vector, admitted or not — the same conservative
     convention as ``incremental_lsh_dedup``), which is exactly what the
-    stream's append-only per-cell state converges to under id-ordered
-    arrival (pinned stream==batch in ``tests/test_streaming.py``); for
-    arbitrary feeds the default ``cdc.semantic_dedup_stream_watermarked``
-    twin converges here with no ordering precondition (variant table in
-    ``streaming/cdc.py``).
+    stream's append-only per-cell state converges to under any arrival
+    order within the watermark delay (pinned stream==batch on a shuffled
+    feed in ``tests/test_streaming.py``).
 
     Scale shape: nearest-cell assignment is the shared broadcast-argmax
     pass (`cosine_assigned_cells`), the pair probe is a cent_id
     equi-join (cells are the blocking key, k ~ sqrt(n) keeps them
     task-sized), norms hoisted once per vector, cosine rounded to 6 on
-    both engines before the threshold.  ``semantic_dedup_admissions_df``
-    additionally exposes the ``rp_sub_planes`` hot-cell sub-blocking
-    dial (parity- and stream==batch-tested at b=2)."""
-    return semantic_dedup_admissions_df(spark, sf_dir)
-
-
-def semantic_dedup_admissions_df(
-    spark: SparkSession, sf_dir: str, rp_sub_planes: int = 0
-) -> DataFrame:
-    """The semantic-admission closed form; with ``rp_sub_planes`` > 0 the
-    blocking key is (cent_id, RP sign-pattern of the first b
-    hyperplanes), so a hot cell's pair join and state split 2^b ways at
-    the documented recall cost (near-duplicates straddling a hyperplane
-    are not compared)."""
+    both engines before the threshold."""
     from ..functions.similarity import (
         _NORM_SPARK,
-        _sub_bucket_expr_spark,
         close_pair_edges,
         cosine_assigned_cells,
-        validate_sub_planes,
     )
 
-    validate_sub_planes(rp_sub_planes)
-    sub = (
-        F.expr(_sub_bucket_expr_spark("embedding", rp_sub_planes))
-        if rp_sub_planes
-        else F.lit(0)
-    )
     e = load_table(spark, sf_dir, "embeddings")
     assigned = (
         cosine_assigned_cells(e)
         .withColumn("nrm", F.expr(_NORM_SPARK.format(v="embedding")))
-        .withColumn("sub", sub)
         .localCheckpoint(eager=True)
     )
     # the closed form charges the LARGER id of each close pair, so the
     # shared edge helper's b_id is the charged vector
     earlier = (
-        close_pair_edges(assigned, keys=("cent_id", "sub"))
+        close_pair_edges(assigned)
         .groupBy(F.col("b_id").alias("vec_id"))
         .agg(F.count(F.lit(1)).alias("n_earlier_dups"))
     )
@@ -700,18 +659,17 @@ FROM cum
 )
 def token_budget_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch closed form of the streaming token-budget gate
-    (``streaming/cdc.py::token_budget_stream``): a document is admitted
-    iff the per-source running token total over the deterministic
-    shuffled order — counting EVERY document seen, admitted or not
-    (prefix-truncation semantics, so the decision is a pure function of
-    the prefix and never depends on earlier admission outcomes) — has
-    not yet exceeded the budget.  Same `budget_prefix_cums` two-phase
-    distributed prefix sum as ``token_budget_selection``; the stream
-    converges to exactly this under ord_key-ordered ingest
-    (stream==batch pinned in ``tests/test_streaming.py``); for arbitrary
-    feeds the default ``cdc.token_budget_stream_watermarked`` twin
-    converges here with no ordering precondition (variant table in
-    ``streaming/cdc.py``)."""
+    (``streaming/cdc.py::token_budget_stream_watermarked``): a document
+    is admitted iff the per-source running token total over the
+    deterministic shuffled order — counting EVERY document seen,
+    admitted or not (prefix-truncation semantics, so the decision is a
+    pure function of the prefix and never depends on earlier admission
+    outcomes) — has not yet exceeded the budget.  Same
+    `budget_prefix_cums` two-phase distributed prefix sum as
+    ``token_budget_selection``; the stream converges to exactly this
+    when event times follow ord_key order, on any arrival order within
+    the watermark delay (stream==batch pinned on a shuffled feed in
+    ``tests/test_streaming.py``)."""
     from ..functions.traindata import (
         TOKEN_BUDGET_PER_SOURCE,
         budget_prefix_cums,
@@ -833,14 +791,12 @@ from ..functions.dedup import span_removal_firstseen_oracle_sql  # noqa: E402
 )
 def span_removal_firstseen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch closed form of the streaming span-dedup-on-ingest operator
-    (``streaming/cdc.py::span_dedup_stream``): a token position is
-    excised iff some covering n-gram was already seen in a STRICTLY
-    smaller doc_id — first occurrence kept, exactly what the stream's
-    smallest-doc-per-gram state converges to under id-ordered arrival
-    (pinned stream==batch in ``tests/test_streaming.py``); for arbitrary
-    feeds the default ``cdc.span_dedup_stream_watermarked`` twin
-    converges here with no ordering precondition (variant table in
-    ``streaming/cdc.py``).  The apply
+    (``streaming/cdc.py::span_dedup_stream_watermarked``): a token
+    position is excised iff some covering n-gram was already seen in a
+    STRICTLY smaller doc_id — first occurrence kept, exactly what the
+    stream's smallest-doc-per-gram state converges to under any arrival
+    order within the watermark delay (pinned stream==batch on a shuffled
+    feed in ``tests/test_streaming.py``).  The apply
     half of Lee et al. 2022 in its incremental-corpus form: re-ingesting
     yesterday's corpus plus a new batch only rewrites the new batch.
 

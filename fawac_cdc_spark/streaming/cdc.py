@@ -17,28 +17,20 @@ state store partitions horizontally; watermarks bound state size; the
 upsert sink writes versioned snapshots (swap-on-commit) — the plain-
 parquet stand-in for Delta/Iceberg MERGE.
 
-On-ingest dedup/selection gates — WHICH VARIANT TO USE (round 14,
-VERDICT r13 #6).  Each family ships two forms.  **Default to the
-``*_watermarked`` variant**: it buffers per key/bucket until the
-event-time watermark closes, so arrival order never changes the
-admitted set and the stream provably matches the batch query under
-ANY shuffled feed.  The legacy un-suffixed form is the lower-latency
-fast path that admits on FIRST ARRIVAL; it equals the batch semantics
-ONLY when the feed delivers candidates in monotone id order (exact
-contract in each function's docstring) — safe for replaying an ordered
-log or a monotonically-keyed CDC topic, wrong for multi-producer /
-shuffled ingestion.
-
-| family (admit rule)             | default                            | legacy fast path safe when             | stream==batch pinned by (tests/test_streaming.py) |
-|---------------------------------|------------------------------------|----------------------------------------|-----------------------------------------------------|
-| LSH near-dup gate               | ``lsh_dedup_stream_watermarked``   | doc_id-ordered feed                     | ``test_lsh_dedup_watermarked_matches_batch_under_shuffled_arrival`` (+ ``_drops_beyond_delay``); legacy: ``test_lsh_dedup_stream_matches_batch`` |
-| semantic (SemDeDup cell) gate   | ``semantic_dedup_stream_watermarked`` | vec_id-ordered feed                  | ``test_semantic_dedup_watermarked_matches_batch_under_shuffled_arrival`` (+ ``_drops_beyond_delay``); legacy: ``test_semantic_dedup_stream_matches_batch`` |
-| token-budget selection gate     | ``token_budget_stream_watermarked``| admission-order == batch order feed     | ``test_token_budget_watermarked_matches_batch_under_shuffled_arrival`` (+ ``_drops_beyond_delay``); legacy: ``test_token_budget_stream_matches_batch`` |
-| duplicated-span excision gate   | ``span_dedup_stream_watermarked``  | doc_id-ordered feed (first-seen spans)  | ``test_span_dedup_watermarked_matches_batch_under_shuffled_arrival`` (+ ``_drops_beyond_delay``); legacy: ``test_span_dedup_stream_matches_batch`` |
-
-The ``streaming/batch_equiv.py`` closed forms mirror the BATCH
-semantics both variants converge to; their docstrings point back at
-the watermarked twin.
+On-ingest dedup/selection gates (LSH near-dup, semantic cell, token
+budget, duplicated span) each have ONE form, the ``*_watermarked``
+operator: arrivals are buffered per key until the event-time watermark
+passes their ``ingest_ts``, then judged in (ingest_ts, id) order, so the
+admitted set equals the ``streaming/batch_equiv.py`` closed form under
+ANY arrival order, provided event times follow the batch form's order
+(doc/vec id; ord_key for the budget) and disorder stays within the
+watermark delay (later rows are dropped, never admitted).
+``tests/test_streaming.py`` pins each gate against its batch form on a
+shuffled feed, plus the beyond-delay boundary.  The one exception is
+``quality_lsh_dedup_stream``: it judges at first arrival, so it equals
+``batch_equiv.quality_dedup_admissions`` only on a doc_id-ordered feed
+(an ordered log replay or a monotonically keyed topic); on a shuffled
+feed its state converges but emitted verdicts are not retracted.
 """
 
 from __future__ import annotations
@@ -53,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import SCHEMAS
 from ..operators.helpers import money
 
 
@@ -71,19 +64,10 @@ def _money_cents(v) -> int:
         * 100
     )
 
-# Schema handed to readStream (file sources require one). Matches the
-# catalog contract: events.ts already converted to TIMESTAMP_NTZ micros
+# Schemas handed to readStream (file sources require one) are the
+# catalog's: events.ts arrives already converted to TIMESTAMP_NTZ micros
 # by the chunk-writer (tests) or upstream ingestion.
-EVENT_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
+EVENT_STREAM_SCHEMA = SCHEMAS["events"]
 
 
 def read_event_stream(
@@ -391,14 +375,13 @@ def soft_update_run(
     return dict(target)
 
 
-# --- A17 EWMA as a DISTRIBUTED stateful operator (transformWithState) ------
+# --- A17 EWMA as a DISTRIBUTED stateful operator (applyInPandasWithState) --
 #
 # ``soft_update_run`` above mirrors the reference's driver-side scalar
 # state (fine at ≤5 keys, noted ceiling).  This is the horizontally
-# scalable form: the EWMA target lives in per-key VALUE STATE inside the
-# state store (partitioned by event_type, checkpointed, rocksdb-backed on
-# a real cluster), updated through Spark 4's transformWithStateInPandas —
-# no driver round-trip, any key cardinality.
+# scalable form: the EWMA target lives in per-key state inside the state
+# store (partitioned by event_type, checkpointed), updated through
+# applyInPandasWithState — no driver round-trip, any key cardinality.
 
 EWMA_OUTPUT_SCHEMA = T.StructType(
     [
@@ -407,60 +390,6 @@ EWMA_OUTPUT_SCHEMA = T.StructType(
         T.StructField("n_batches", T.LongType()),
     ]
 )
-
-
-def ewma_target_stream(events: DataFrame, tau: float = 0.1) -> DataFrame:
-    """``target = (1 - tau) * target + tau * batch_mean`` per event_type
-    (reference ``soft_update``, ``fawac.py:15-17``, A17) with the target
-    held in keyed value state.  Means are computed over integer cents so
-    the recurrence is float-exact vs the sequential replay.
-
-    NOTE: transformWithStateInPandas requires pyspark's protobuf
-    dependency at runtime; the parity test skips where it is absent
-    (this container) and runs on any standard pyspark install.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "ewma", "target double, n_batches bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            cents = 0
-            n = 0
-            for pdf in rows:
-                cents += int(pdf["value"].map(_money_cents).sum())
-                n += len(pdf)
-            if n == 0:
-                return iter(())
-            mean = (cents / 100.0) / n
-            prev = self._state.get() if self._state.exists() else None
-            if prev is None:
-                target, batches = mean, 1
-            else:
-                target, batches = (1 - tau) * prev[0] + tau * mean, prev[1] + 1
-            self._state.update((target, batches))
-            yield pd.DataFrame(
-                {"event_type": [key[0]], "target": [target], "n_batches": [batches]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=EwmaProcessor(),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-
-
 EWMA_STATE_SCHEMA = T.StructType(
     [
         T.StructField("target", T.DoubleType()),
@@ -470,18 +399,12 @@ EWMA_STATE_SCHEMA = T.StructType(
 
 
 def ewma_target_stream_gs(events: DataFrame, tau: float = 0.1) -> DataFrame:
-    """Same EWMA recurrence as ``ewma_target_stream`` on the
-    ``applyInPandasWithState`` API (Spark >= 3.4's GroupState): keyed
-    state in the state store, no driver round-trip, any key cardinality —
-    and no protobuf runtime dependency, so THIS distributed form is
-    exercised by the in-container parity test
-    (tests/test_streaming.py::test_ewma_gs_stream_matches_sequential)
-    while the transformWithState form runs wherever pyspark's full
-    streaming deps are installed.  Semantics (reference ``soft_update``,
-    ``fawac.py:15-17``, A17): per micro-batch and key,
-    ``target = (1 - tau) * target + tau * batch_mean`` with the batch mean
-    computed over integer cents so the recurrence is float-exact vs a
-    sequential replay.
+    """``target = (1 - tau) * target + tau * batch_mean`` per event_type
+    (reference ``soft_update``, ``fawac.py:15-17``, A17) with the target
+    held in keyed GroupState.  The batch mean is computed over integer
+    cents so the recurrence is float-exact vs a sequential replay
+    (tests/test_streaming.py pins it against that replay and against the
+    registered ``ewma_state_batch_equiv`` fold).
     """
     import pandas as pd
 
@@ -934,27 +857,9 @@ def stateful_user_profile_stream(events: DataFrame) -> DataFrame:
     )
 
 
-# --- near-dedup on ingest (streaming LSH admission) ------------------------
+# --- document feed for the corpus gates on ingest ---------------------------
 
-DOC_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-LSH_DEDUP_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("band", T.IntegerType()),
-        T.StructField("key", T.StringType()),
-        T.StructField("key_ok", T.BooleanType()),
-    ]
-)
-LSH_DEDUP_STATE_SCHEMA = T.StructType([T.StructField("first_doc", T.LongType())])
+DOC_STREAM_SCHEMA = SCHEMAS["documents"]
 
 
 def read_document_stream(
@@ -966,90 +871,6 @@ def read_document_stream(
         spark.readStream.schema(DOC_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
-    )
-
-
-def lsh_dedup_stream(docs: DataFrame) -> DataFrame:
-    """Near-dedup ON INGEST: MinHash-LSH admission as a custom stateful
-    streaming operator — each arriving document is checked against every
-    document ever seen WITHOUT storing any document, only the LSH band
-    state (one long per live band key).
-
-    The band table is a pure per-row map (`dedup.band_table_for` over
-    `minhash_signatures_for` — the same expressions as the batch path,
-    so stream and batch admissions agree exactly), so it runs inside the
-    micro-batch with no pre-shuffle; the only shuffle is the state-store
-    partitioning on the band key, which is uniform md5-derived.  State
-    per key is the smallest doc_id seen; a document's key verdict is
-    "smaller than everything previously seen on this key", and its
-    admission (computed downstream, e.g. in the sink) is the AND over
-    its band keys.
-
-    ORDERING CONTRACT: emitted verdicts are never retracted, so the
-    AND-over-keys admission is exact ONLY under id-ordered (monotone)
-    ingest, where it equals the batch closed form
-    (`batch_equiv.lsh_dedup_admissions`) — the property the stream==batch
-    suite pins.  Under out-of-order arrival the operator stays
-    well-defined (state converges to the per-key minimum) but admission
-    becomes first-arrival-wins: a later, smaller-id near-duplicate also
-    gets key_ok=True at emit time because the earlier verdict cannot be
-    recalled, so BOTH members of a colliding pair can be admitted
-    (documented by `test_lsh_dedup_stream_out_of_order_admits_both`).
-    Production feeds where doc_ids are assigned at ingest (monotone
-    sequence / timestamp ids) satisfy the contract by construction; for
-    genuinely unordered replays, either sort the replay by doc_id or
-    treat the emitted verdicts as candidate admissions and reconcile
-    against the final state table (one anti-join) at the end of the run
-    — the state itself is always correct.
-
-    100 TB shape: state size is O(distinct band keys), ~4 longs per
-    corpus doc, partitioned by the state store across executors — the
-    corpus itself is never rescanned, which is the same property the
-    batch `incremental_lsh_dedup` models with its persisted band table.
-    """
-    import pandas as pd
-
-    from ..functions.dedup import band_table_for, minhash_signatures_for
-
-    bands = band_table_for(minhash_signatures_for(docs))
-
-    def admit(key, pdf_iter, state):
-        band, band_key = key
-        first = state.get[0] if state.exists else None
-        # Drain ALL Arrow chunks before sorting: a group larger than
-        # arrow.maxRecordsPerBatch arrives as several chunks, and sorting
-        # per-chunk would let a later-chunk smaller id slip past an
-        # earlier-chunk larger one — breaking the documented convergence
-        # to the batch closed form.
-        all_ids = sorted(
-            int(x) for pdf in pdf_iter for x in pdf["doc_id"]
-        )
-        out_docs: list[int] = []
-        out_ok: list[bool] = []
-        for d in all_ids:
-            ok = first is None or d < first
-            if ok:
-                first = d
-            out_docs.append(d)
-            out_ok.append(ok)
-        state.update((first,))
-        yield pd.DataFrame(
-            {
-                "doc_id": out_docs,
-                "band": [band] * len(out_docs),
-                "key": [band_key] * len(out_docs),
-                "key_ok": out_ok,
-            }
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bands.groupBy("band", "key").applyInPandasWithState(
-        admit,
-        outputStructType=LSH_DEDUP_OUTPUT_SCHEMA,
-        stateStructType=LSH_DEDUP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -1073,21 +894,21 @@ QUALITY_LSH_STATE_SCHEMA = T.StructType(
 
 
 def quality_lsh_dedup_stream(docs: DataFrame) -> DataFrame:
-    """Quality-aware near-dedup ON INGEST (the VERDICT r10 upgrade of
-    :func:`lsh_dedup_stream`): per LSH band key the state retains the
-    BEST document seen — highest uniq-token-ratio quality score
-    (rounded 6 BEFORE comparison, repo convention), doc_id ascending as
-    tiebreak — so an incoming near-duplicate REPLACES the retained doc
+    """Quality-aware near-dedup ON INGEST: per MinHash-LSH band key the
+    state retains the BEST document seen — highest uniq-token-ratio
+    quality score (rounded 6 BEFORE comparison, repo convention), doc_id
+    ascending as tiebreak — so an incoming near-duplicate REPLACES the retained doc
     when its quality is strictly higher, instead of first/smallest-id
     winning forever.  A document's key verdict is "became the survivor
     on this key at arrival"; its admission is the AND over its band
     keys, exactly the ``batch_equiv.quality_dedup_admissions`` closed
     form under id-ordered ingest (pinned stream==batch).
 
-    Same ordering contract and state-size story as ``lsh_dedup_stream``:
-    verdicts are never retracted (out-of-order replays converge in
-    state but emit first-arrival verdicts), and state is two scalars
-    per live band key, partitioned by the uniform md5-derived key."""
+    ORDERING CONTRACT: the feed must arrive in doc_id order.  Verdicts
+    are emitted at arrival and never retracted, so an out-of-order
+    replay converges in state but emits first-arrival verdicts (there
+    is no watermarked form of this gate).  State is two scalars per
+    live band key, partitioned by the uniform md5-derived key."""
     import pandas as pd
 
     from ..functions.dedup import band_table_for, minhash_signatures_for
@@ -1106,8 +927,10 @@ def quality_lsh_dedup_stream(docs: DataFrame) -> DataFrame:
             None,
             None,
         )
-        # Drain all Arrow chunks, then process in doc_id order (same
-        # chunking rationale as lsh_dedup_stream).
+        # Drain ALL Arrow chunks before sorting: a group larger than
+        # arrow.maxRecordsPerBatch arrives as several chunks, and sorting
+        # per chunk would let a later-chunk smaller id slip past an
+        # earlier-chunk larger one.
         rows = sorted(
             ((int(r.doc_id), float(r.q)) for pdf in pdf_iter for r in pdf.itertuples()),
         )
@@ -1143,24 +966,28 @@ def quality_lsh_dedup_stream(docs: DataFrame) -> DataFrame:
     )
 
 
-# --- watermark-buffered near-dedup on ingest (round 12) ---------------------
+# --- watermark-buffered near-dedup on ingest ---------------------------------
 #
-# VERDICT r11 #6: lsh_dedup_stream's exactness contract requires
-# id-ordered ARRIVAL because verdicts are never retracted.  This variant
-# moves the requirement from arrival order to EVENT-TIME order, which a
-# watermark can actually enforce: arrivals are HELD in per-band-key state
-# until the event-time watermark passes their timestamp, then admitted in
-# deterministic (ingest_ts, doc_id) order.  Any feed whose doc ids are
-# assigned in event-time order (the production case: ingest-sequence or
-# timestamp-derived ids) now matches the batch closed form under
-# ARBITRARY arrival order, as long as disorder stays within the watermark
-# delay; rows later than the delay are dropped by the watermark operator
-# upstream (the documented boundary, pinned by the late-arrival test).
+# Arrivals are HELD in per-band-key state until the event-time watermark
+# passes their timestamp, then admitted in deterministic (ingest_ts,
+# doc_id) order.  Any feed whose doc ids are assigned in event-time order
+# (the production case: ingest-sequence or timestamp-derived ids) matches
+# the batch closed form under ARBITRARY arrival order, as long as
+# disorder stays within the watermark delay; later rows are dropped (the
+# documented boundary, pinned by the late-arrival test).
 
 DOC_TS_STREAM_SCHEMA = T.StructType(
     list(DOC_STREAM_SCHEMA) + [T.StructField("ingest_ts", T.TimestampType())]
 )
 
+LSH_DEDUP_OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("band", T.IntegerType()),
+        T.StructField("key", T.StringType()),
+        T.StructField("key_ok", T.BooleanType()),
+    ]
+)
 # first_doc uses -1 as the "no survivor yet" sentinel (state tuples
 # round-trip more robustly without nullable scalars); pend_* are the
 # parallel arrays of buffered not-yet-mature arrivals.
@@ -1188,23 +1015,29 @@ def read_document_stream_ts(
 def lsh_dedup_stream_watermarked(
     docs: DataFrame, delay: str = "10 minutes"
 ) -> DataFrame:
-    """Near-dedup ON INGEST with a WATERMARK-BUFFERED admission order
-    (VERDICT r11 #6): same MinHash-LSH band-key state as
-    :func:`lsh_dedup_stream`, but an arriving document's verdict is
-    deferred — buffered in state — until the event-time watermark
-    passes its ``ingest_ts``, at which point every matured arrival on
-    the key is admitted in (ingest_ts, doc_id) order.
+    """Near-dedup ON INGEST: MinHash-LSH admission as a custom stateful
+    streaming operator.  Each document is checked against every document
+    seen before it WITHOUT storing any document, only the LSH band state
+    (the smallest doc_id seen per live band key).  The band table is a
+    pure per-row map (``dedup.band_table_for`` over
+    ``minhash_signatures_for``, the batch path's expressions), so the
+    only shuffle is the state-store partitioning on the uniform
+    md5-derived band key.  An arriving document's verdict is deferred,
+    buffered in state, until the event-time watermark passes its
+    ``ingest_ts``; then every matured arrival on the key is judged in
+    (ingest_ts, doc_id) order: key_ok iff it is smaller than every
+    earlier doc on the key.  A document's admission (computed
+    downstream, e.g. in the sink) is the AND over its band keys.
 
-    ORDERING CONTRACT (relaxed): admission equals the batch closed form
+    ORDERING CONTRACT: admission equals the batch closed form
     (``batch_equiv.lsh_dedup_admissions``) for ANY arrival order,
     provided (a) doc ids are assigned in event-time order — true by
     construction for ingest-sequence ids — and (b) each row's disorder
-    is within the watermark ``delay`` (later rows are dropped upstream
-    by the watermark operator and never admitted: the boundary the
-    late-arrival test pins).  This is exactly the contract
-    ``lsh_dedup_stream``'s docstring could not offer: there the verdict
-    was emitted at arrival, here it is emitted at watermark maturity,
-    so the out-of-order double-admit cannot happen.
+    is within the watermark ``delay`` (later rows are dropped at the
+    state handler and never admitted: the boundary the late-arrival
+    test pins).  Because verdicts are emitted at watermark maturity, not
+    at arrival, a larger-id near-duplicate that arrives first cannot be
+    admitted alongside the smaller id.
 
     100 TB shape: state per band key is the survivor id plus ONLY the
     in-flight rows inside the watermark horizon (O(delay × key rate),
@@ -1281,12 +1114,8 @@ def lsh_dedup_stream_watermarked(
 
 # --- semantic dedup on ingest (streaming SemDeDup admission) ---------------
 
-EMB_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
+EMB_TS_STREAM_SCHEMA = T.StructType(
+    list(SCHEMAS["embeddings"]) + [T.StructField("ingest_ts", T.TimestampType())]
 )
 
 SEM_DEDUP_OUTPUT_SCHEMA = T.StructType(
@@ -1297,216 +1126,13 @@ SEM_DEDUP_OUTPUT_SCHEMA = T.StructType(
         T.StructField("admitted", T.BooleanType()),
     ]
 )
-# Per-cell state: every vector seen in the cell (ids + row-major flat
-# embedding matrix + hoisted norms).  Embeddings ARE the state here —
-# unlike the LSH path there is no sketch that preserves cosine exactly,
-# so the honest per-cell memory is O(cell vectors x dim), which is the
-# point of the cell blocking: k ~ sqrt(n) keeps each cell's slab bounded
-# and the state store spreads cells across executors.
-SEM_DEDUP_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ids", T.ArrayType(T.LongType())),
-        T.StructField("flat", T.ArrayType(T.DoubleType())),
-        T.StructField("nrms", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-
-def read_embedding_stream(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-stream source over embedding parquet chunks — the local
-    stand-in for an embedding feed arriving incrementally."""
-    return (
-        spark.readStream.schema(EMB_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-
-def semantic_dedup_stream(
-    embs: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    rp_sub_planes: int = 0,
-) -> DataFrame:
-    """Semantic dedup ON INGEST — the embedding-side twin of
-    ``lsh_dedup_stream``: each arriving vector is routed to its nearest
-    seed centroid (pure per-batch Arrow map, no pre-shuffle) and
-    admitted iff no vector previously seen in that cell lies within
-    ``SEMDEDUP_COS``; the per-cell state appends every arrival
-    (conservative non-recursive admission, the
-    ``incremental_lsh_dedup`` convention).
-
-    ``centroids`` is the frozen coarse quantizer — (cent_id, vector)
-    pairs sorted by cent_id, k ~ sqrt(n) entries, closed over by the
-    routing UDF exactly like the batch k-means cycle collects its k x d
-    matrix (similarity.py); at 100 TB this is a few MB broadcast with
-    the task closure, never a join.  Cosines round to 6 before both the
-    argmax and the threshold (the engine-portability convention shared
-    with `cosine_assigned_cells`), with ties to the lower cent_id.
-    Caveat shared by every cross-engine rounding seam in this repo:
-    numpy's scaled-multiply round vs the JVM's decimal HALF_UP can
-    disagree within ~1 ulp of a 1e-6 boundary, so stream==batch
-    equality is exact up to that measure-near-zero set (the fixture
-    suite crosses no boundary; a production gate would compare with a
-    1e-6 tolerance instead of equality).
-
-    ORDERING CONTRACT: verdicts are never retracted, so admission
-    equals the batch closed form
-    (``batch_equiv.semantic_dedup_admissions``) only under id-ordered
-    ingest.  Unlike ``lsh_dedup_stream`` (whose per-key verdict is
-    "smaller than the state minimum", so a late smaller id can
-    double-admit), the check here is against every previously SEEN
-    vector — out-of-order arrival therefore never admits both members
-    of a close pair; it admits the FIRST arrival where the batch form
-    would admit the smallest id (documented by
-    ``test_semantic_dedup_stream_out_of_order_keeps_first``).  State
-    always converges to the full cell membership regardless of order.
-
-    100 TB shape: routing is embarrassingly parallel; the only shuffle
-    is the state-store partitioning on the cell key.  A hot cell is a
-    real skew risk (unlike md5 band keys) — production either splits
-    hot cells by raising k or sub-blocks a cell with a secondary RP
-    bucket.  The latter is the ``rp_sub_planes`` dial: with b > 0 the
-    state key becomes (cent_id, sign-pattern of the first b fixed
-    hyperplanes), splitting every cell's state and comparisons 2^b
-    ways; the recall cost (near-duplicates straddling a hyperplane are
-    never compared) is the standard LSH trade, and the matching batch
-    closed form is ``semantic_dedup_admissions_df(rp_sub_planes=b)``
-    (stream==batch pinned at b=2).  The fixture keeps k small so the
-    oracle can replay assignment.
-    """
-    import numpy as np
-
-    from ..functions.similarity import (
-        EMB_DIM,
-        HYPERPLANES,
-        SEMDEDUP_COS,
-        validate_sub_planes,
-    )
-
-    validate_sub_planes(rp_sub_planes)
-    cids = [int(c) for c, _ in centroids]
-    assert cids == sorted(cids), "centroids must be sorted by cent_id"
-    cmat = np.asarray([v for _, v in centroids], dtype=np.float64)
-    cnrm = np.sqrt((cmat * cmat).sum(axis=1))
-    cid_arr = np.asarray(cids, dtype=np.int64)
-    planes = np.asarray(HYPERPLANES[:rp_sub_planes], dtype=np.float64)
-    pow2 = np.asarray([1 << h for h in range(rp_sub_planes)], dtype=np.int64)
-
-    # ONE routing UDF: the Arrow-list -> matrix decode is the expensive
-    # part of the pass, so cell and sub-bucket are computed from the same
-    # decoded matrix instead of two UDFs decoding twice.  The sub sign is
-    # taken on the ROUND-6 hyperplane dot (mirrors _sub_bucket_expr_spark
-    # / _sub_bucket_sql_duck) so the KEY agrees across the three
-    # summation orders involved.
-    @F.pandas_udf("struct<cent_id: long, sub: int>")
-    def route(emb: pd.Series) -> pd.DataFrame:
-        mat = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in emb], dtype=np.float64
-        )
-        nrm = np.sqrt((mat * mat).sum(axis=1))
-        cos = np.round((mat @ cmat.T) / (nrm[:, None] * cnrm[None, :]), 6)
-        # argmax returns the FIRST max index; centroids are sorted by
-        # cent_id, so rounded ties break to the lower cent_id — same
-        # total order as cosine_assigned_cells
-        cent = cid_arr[np.argmax(cos, axis=1)]
-        if rp_sub_planes:
-            bits = np.round(mat @ planes.T, 6) > 0
-            sub = (bits @ pow2).astype("int32")
-        else:
-            sub = np.zeros(len(cent), dtype="int32")
-        return pd.DataFrame({"cent_id": cent, "sub": sub})
-
-    routed = embs.select(
-        "vec_id", "embedding", route("embedding").alias("r")
-    ).select("vec_id", "embedding", "r.cent_id", "r.sub")
-
-    # grouping keys: keep the b=0 state-key schema at ONE column so
-    # checkpoints written before the sub-blocking dial existed still
-    # restore (the state store validates key schema on restart)
-    group_cols = ["cent_id", "sub"] if rp_sub_planes else ["cent_id"]
-
-    def admit(key, pdf_iter, state):
-        cent_id = key[0]
-        # Drain all Arrow chunks before sorting (same reasoning as the
-        # LSH admit fn: per-chunk processing would break id order).
-        rows = sorted(
-            (
-                (int(i), np.asarray(v, dtype=np.float64))
-                for pdf in pdf_iter
-                for i, v in zip(pdf["vec_id"], pdf["embedding"])
-            ),
-            key=lambda t: t[0],
-        )
-        if state.exists:
-            ids, flat, nrms = state.get
-            ids = list(ids)
-            prior = np.asarray(flat, dtype=np.float64).reshape(len(ids), EMB_DIM)
-            prior_nrm = np.asarray(nrms, dtype=np.float64)
-        else:
-            ids = []
-            prior = np.zeros((0, EMB_DIM))
-            prior_nrm = np.zeros(0)
-        # One preallocated (state + batch) slab, filled in place — a
-        # per-row np.vstack would re-copy the whole matrix each arrival
-        # (O(m^2 d) per micro-batch, worst exactly at the hot-cell skew
-        # the docstring warns about).
-        n_prior, n_new = prior.shape[0], len(rows)
-        mat = np.empty((n_prior + n_new, EMB_DIM))
-        mat[:n_prior] = prior
-        nrm = np.empty(n_prior + n_new)
-        nrm[:n_prior] = prior_nrm
-        out_ids: list[int] = []
-        out_n: list[int] = []
-        for j, (vid, vec) in enumerate(rows):
-            seen = n_prior + j
-            vnrm = float(np.sqrt((vec * vec).sum()))
-            if seen:
-                cos = np.round((mat[:seen] @ vec) / (nrm[:seen] * vnrm), 6)
-                n_dups = int((cos >= SEMDEDUP_COS).sum())
-            else:
-                n_dups = 0
-            out_ids.append(vid)
-            out_n.append(n_dups)
-            ids.append(vid)
-            mat[seen] = vec
-            nrm[seen] = vnrm
-        state.update((ids, mat.reshape(-1).tolist(), nrm.tolist()))
-        yield pd.DataFrame(
-            {
-                "vec_id": pd.Series(out_ids, dtype="int64"),
-                "cent_id": pd.Series([cent_id] * len(out_ids), dtype="int64"),
-                "n_earlier_dups": pd.Series(out_n, dtype="int64"),
-                "admitted": [n == 0 for n in out_n],
-            }
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return routed.groupBy(*group_cols).applyInPandasWithState(
-        admit,
-        outputStructType=SEM_DEDUP_OUTPUT_SCHEMA,
-        stateStructType=SEM_DEDUP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# Watermark-buffered semantic dedup (VERDICT r12 #4): the same
-# buffer-until-watermark + admit-in-(ingest_ts, id)-order recipe proven
-# on the LSH gate (lsh_dedup_stream_watermarked above) applied to the
-# embedding side, removing semantic_dedup_stream's id-ordered-ingest
-# precondition.
-
-EMB_TS_STREAM_SCHEMA = T.StructType(
-    list(EMB_STREAM_SCHEMA) + [T.StructField("ingest_ts", T.TimestampType())]
-)
-
-# Seen-set state (ids/flat/nrms, as SEM_DEDUP_STATE_SCHEMA) plus the
-# parallel pending arrays of buffered not-yet-mature arrivals — the
-# embedding payload must be buffered too (unlike LSH there is no sketch
-# that preserves cosine), so pending cost is O(delay x cell rate x dim).
+# Per-cell state: every judged vector in the cell (ids +
+# row-major flat embedding matrix + hoisted norms) plus the parallel
+# pending arrays of buffered not-yet-mature arrivals.  Embeddings ARE the
+# state here — unlike the LSH path there is no sketch that preserves
+# cosine exactly, so the honest per-cell memory is O(cell vectors x dim),
+# which is the point of the cell blocking: k ~ sqrt(n) keeps each cell's
+# slab bounded and the state store spreads cells across executors.
 WM_SEM_DEDUP_STATE_SCHEMA = T.StructType(
     [
         T.StructField("ids", T.ArrayType(T.LongType())),
@@ -1523,7 +1149,8 @@ def read_embedding_stream_ts(
     spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """File-stream source over embedding chunks that carry an
-    ``ingest_ts`` event-time column (the watermarked feed shape)."""
+    ``ingest_ts`` event-time column — the local stand-in for an
+    embedding feed arriving incrementally."""
     return (
         spark.readStream.schema(EMB_TS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -1536,28 +1163,42 @@ def semantic_dedup_stream_watermarked(
     centroids: list[tuple[int, list[float]]],
     delay: str = "10 minutes",
 ) -> DataFrame:
-    """Semantic dedup ON INGEST with a WATERMARK-BUFFERED admission
-    order (VERDICT r12 #4): same cell routing and close-pair check as
-    :func:`semantic_dedup_stream`, but an arriving vector's verdict is
-    deferred — buffered (with its embedding) in per-cell state — until
-    the event-time watermark passes its ``ingest_ts``, then every
-    matured arrival is admitted in (ingest_ts, vec_id) order.
+    """Semantic dedup ON INGEST: each arriving vector is routed to its
+    nearest seed centroid (pure per-batch Arrow map, no pre-shuffle) and
+    buffered, with its embedding, in per-cell state until the event-time
+    watermark passes its ``ingest_ts``; then every matured arrival is
+    judged in (ingest_ts, vec_id) order and admitted iff no vector
+    judged before it in that cell lies within ``SEMDEDUP_COS``.  Every
+    judged vector joins the cell's seen set (conservative non-recursive
+    admission, the ``incremental_lsh_dedup`` convention).
 
-    ORDERING CONTRACT (relaxed): admission equals the batch closed form
+    ``centroids`` is the frozen coarse quantizer — (cent_id, vector)
+    pairs sorted by cent_id, k ~ sqrt(n) entries, closed over by the
+    routing UDF exactly like the batch k-means cycle collects its k x d
+    matrix (similarity.py); at 100 TB this is a few MB broadcast with
+    the task closure, never a join.  Cosines round to 6 before both the
+    argmax and the threshold (the engine-portability convention shared
+    with `cosine_assigned_cells`), with ties to the lower cent_id.
+    Caveat shared by every cross-engine rounding seam in this repo:
+    numpy's scaled-multiply round vs the JVM's decimal HALF_UP can
+    disagree within ~1 ulp of a 1e-6 boundary, so stream==batch
+    equality is exact up to that measure-near-zero set (the fixture
+    suite crosses no boundary).
+
+    ORDERING CONTRACT: admission equals the batch closed form
     (``batch_equiv.semantic_dedup_admissions``) for ANY arrival order,
     provided (a) vec ids are assigned in event-time order (true by
     construction for ingest-sequence ids) and (b) each row's disorder is
     within the watermark ``delay`` — later rows are dropped at the state
     handler (the boundary the late-arrival test pins), never admitted.
-    The unbuffered twin could only promise "exactly one member of a
-    close pair is admitted"; this one pins WHICH member (the smallest
-    id, the batch form's survivor).
+    Of each close pair the smallest id, the batch form's survivor, is
+    the one admitted.
 
-    100 TB shape: the seen-set state is the honest O(cell vectors x dim)
-    slab (the cell blocking's point, as the twin documents); buffering
-    adds only the in-flight rows inside the watermark horizon.  Routing
-    stays a pure Arrow map; the sub-blocking dial is omitted here (the
-    b > 0 key schema composes identically if needed)."""
+    100 TB shape: routing is embarrassingly parallel; the only shuffle
+    is the state-store partitioning on the cell key.  The seen-set state
+    is the honest O(cell vectors x dim) slab; buffering adds only the
+    in-flight rows inside the watermark horizon.  A hot cell is a real
+    skew risk (unlike md5 band keys); raise k to split it."""
     import numpy as np
 
     from ..functions.similarity import EMB_DIM, SEMDEDUP_COS
@@ -1615,6 +1256,9 @@ def semantic_dedup_stream_watermarked(
             (t for t in pend if t[0] <= wm_us), key=lambda t: (t[0], t[1])
         )
         rest = [t for t in pend if t[0] > wm_us]
+        # One preallocated (state + matured) slab, filled in place — a
+        # per-row np.vstack would re-copy the whole matrix per arrival
+        # (O(m^2 d) per micro-batch, worst exactly on a hot cell).
         n_prior, n_new = prior.shape[0], len(mature)
         mat = np.empty((n_prior + n_new, EMB_DIM))
         mat[:n_prior] = prior
@@ -1678,97 +1322,10 @@ TOKEN_BUDGET_OUTPUT_SCHEMA = T.StructType(
         T.StructField("admitted", T.BooleanType()),
     ]
 )
-# Per-source state: total tokens SEEN (admitted or not) — prefix-truncation
-# semantics, one BIGINT per source.
-TOKEN_BUDGET_STATE_SCHEMA = T.StructType([T.StructField("seen_tokens", T.LongType())])
-
-
-def token_budget_stream(docs: DataFrame) -> DataFrame:
-    """Token-budget gate ON INGEST: each arriving document is admitted
-    iff its source's running token total (counting every document seen,
-    admitted or not) has not yet exceeded ``TOKEN_BUDGET_PER_SOURCE`` —
-    the streaming twin of the batch budget fill, with ONE BIGINT of
-    state per source.
-
-    The running total charges every arrival (prefix-truncation, the
-    ``token_budget_admissions`` closed form), so the admission decision
-    is a pure function of the token PREFIX and never of earlier
-    admission outcomes — which is what makes the batch closed form a
-    single window cumsum instead of a sequential recursion.
-
-    ORDERING CONTRACT: admission equals the batch closed form
-    (``batch_equiv.token_budget_admissions``) only when documents arrive
-    in the deterministic shuffled order (ascending md5 ord_key) across
-    micro-batches; within a batch the operator sorts by ord_key itself.
-    That order is exactly what a curriculum replay of the
-    ``shuffled_shard_manifest`` permutation produces, so the contract
-    is the production feed's by construction.  Out-of-order arrival
-    stays well-defined (the budget still charges every arrival once)
-    but admits the earliest ARRIVALS rather than the earliest order
-    positions.
-
-    100 TB shape: the per-row map (ntok + ord_key md5) runs inside the
-    micro-batch; the only shuffle is the state-store partitioning on
-    source, and state is one long per source.  A power-law hot source
-    concentrates its admission decisions on one state partition — but
-    the per-row work there is a comparison and an add, so the gate
-    keeps up with any realistic per-source arrival rate; the heavy
-    lifting (tokenize/dedup downstream) is gated BEHIND the admission,
-    which is the point of running the budget at ingest."""
-    import pandas as pd
-
-    from ..functions.traindata import TOKEN_BUDGET_PER_SOURCE, _shuffle_cols
-
-    ord_key, _ = _shuffle_cols()
-    keyed = docs.select(
-        "doc_id",
-        "source",
-        F.size(F.split("text", " ")).cast("long").alias("ntok"),
-        ord_key.alias("ord_key"),
-    )
-
-    def admit(key, pdf_iter, state):
-        (source,) = key
-        seen = int(state.get[0]) if state.exists else 0
-        # Drain ALL Arrow chunks before sorting by ord_key (per-chunk
-        # processing would break the ordering contract within a batch).
-        rows = sorted(
-            (str(k), int(d), int(n))
-            for pdf in pdf_iter
-            for k, d, n in zip(pdf["ord_key"], pdf["doc_id"], pdf["ntok"])
-        )
-        out_doc: list[int] = []
-        out_ntok: list[int] = []
-        out_ok: list[bool] = []
-        for _, doc_id, ntok in rows:
-            seen += ntok
-            out_doc.append(doc_id)
-            out_ntok.append(ntok)
-            out_ok.append(seen <= TOKEN_BUDGET_PER_SOURCE)
-        state.update((seen,))
-        yield pd.DataFrame(
-            {
-                "doc_id": out_doc,
-                "source": [source] * len(out_doc),
-                "ntok": out_ntok,
-                "admitted": out_ok,
-            }
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return keyed.groupBy("source").applyInPandasWithState(
-        admit,
-        outputStructType=TOKEN_BUDGET_OUTPUT_SCHEMA,
-        stateStructType=TOKEN_BUDGET_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# Watermark-buffered token budget (VERDICT r12 #4): pending arrays on
-# top of the one-BIGINT running total; matured rows charge the budget in
-# (ingest_ts, ord_key) order.
+# Per-source state: total tokens charged so far (admitted or not —
+# prefix-truncation semantics, one BIGINT per source) plus the parallel
+# pending arrays of buffered not-yet-mature arrivals; matured rows charge
+# the budget in (ingest_ts, ord_key) order.
 WM_TOKEN_BUDGET_STATE_SCHEMA = T.StructType(
     [
         T.StructField("seen_tokens", T.LongType()),
@@ -1783,13 +1340,18 @@ WM_TOKEN_BUDGET_STATE_SCHEMA = T.StructType(
 def token_budget_stream_watermarked(
     docs: DataFrame, delay: str = "10 minutes"
 ) -> DataFrame:
-    """Token-budget gate ON INGEST with a WATERMARK-BUFFERED admission
-    order (VERDICT r12 #4): same per-source running-total state as
-    :func:`token_budget_stream`, but arrivals are buffered until the
-    event-time watermark passes their ``ingest_ts``, then charged to the
-    budget in (ingest_ts, ord_key) order.
+    """Token-budget gate ON INGEST: arrivals are buffered until the
+    event-time watermark passes their ``ingest_ts``, then charged to
+    their source's running token total in (ingest_ts, ord_key) order; a
+    document is admitted iff the total (counting every document charged,
+    admitted or not) has not yet exceeded ``TOKEN_BUDGET_PER_SOURCE``.
+    Charging every arrival (prefix truncation, the
+    ``token_budget_admissions`` closed form) makes the decision a pure
+    function of the token PREFIX, never of earlier admission outcomes —
+    which is what makes the batch closed form a single window cumsum
+    instead of a sequential recursion.
 
-    ORDERING CONTRACT (relaxed): admission equals the batch closed form
+    ORDERING CONTRACT: admission equals the batch closed form
     (``batch_equiv.token_budget_admissions``) for ANY arrival order,
     provided (a) event times are assigned in ord_key order — true by
     construction when the feed is a curriculum replay of the
@@ -1797,12 +1359,16 @@ def token_budget_stream_watermarked(
     replay time — and (b) disorder stays within ``delay`` (later rows
     are dropped at the state handler, never charged or admitted: the
     documented completeness/latency trade, pinned by the late-arrival
-    test).  The unbuffered twin admits the earliest ARRIVALS out of
-    order; this one always admits the earliest ORDER POSITIONS.
+    test).
 
-    100 TB shape: state per source is one BIGINT plus only the in-flight
-    rows inside the watermark horizon (doc ids + token counts — no text);
-    the per-row work at maturity is unchanged (a compare and an add)."""
+    100 TB shape: the per-row map (ntok + ord_key md5) runs inside the
+    micro-batch; the only shuffle is the state-store partitioning on
+    source.  State per source is one BIGINT plus only the in-flight rows
+    inside the watermark horizon (doc ids + token counts — no text).  A
+    power-law hot source concentrates its decisions on one state
+    partition, but the per-row work there is a compare and an add; the
+    heavy lifting (tokenize/dedup downstream) is gated BEHIND the
+    admission, which is the point of running the budget at ingest."""
     from ..functions.traindata import TOKEN_BUDGET_PER_SOURCE, _shuffle_cols
 
     ord_key, _ = _shuffle_cols()
@@ -1885,79 +1451,8 @@ SPAN_DEDUP_OUTPUT_SCHEMA = T.StructType(
         T.StructField("dup", T.BooleanType()),
     ]
 )
-SPAN_DEDUP_STATE_SCHEMA = T.StructType([T.StructField("first_doc", T.LongType())])
-
-
-def span_dedup_stream(docs: DataFrame) -> DataFrame:
-    """Exact-substring span dedup ON INGEST — the streaming twin of
-    ``batch_equiv.span_removal_firstseen`` (the apply half of Lee et al.
-    2022 in incremental form): each arriving document's positioned
-    n-grams probe a per-gram state holding the smallest doc_id ever seen,
-    and a gram occurrence is flagged ``dup`` iff a strictly smaller doc
-    already owns it.  The document rewrite (maximal dup runs -> marker)
-    happens downstream from the emitted verdicts via
-    ``functions.dedup.rewrite_excising`` — the stream never stores or
-    re-emits text, only (doc_id, gram-start, verdict).
-
-    The gram table is a pure per-row map (``positioned_grams``, the same
-    expression as the batch path, so stream and batch verdicts agree
-    exactly); the only shuffle is the state-store partitioning on the
-    md5-derived gram hash — uniform by construction.
-
-    ORDERING CONTRACT (same as ``lsh_dedup_stream``): verdicts are never
-    retracted, so equality with the batch closed form holds under
-    id-ordered (monotone) ingest — pinned in ``tests/test_streaming.py``.
-    Out of order, the state still converges to the per-gram minimum but a
-    late smaller-id doc keeps its spans (first-arrival-wins), mirroring
-    the LSH operator's documented behavior.
-
-    100 TB shape: state is ONE long per distinct gram ever seen — the
-    suffix-array-free incarnation of the Lee et al. pipeline, spread
-    across executors by the state store; daily cost is O(|batch| grams),
-    never a corpus rescan.
-    """
-    import pandas as pd
-
-    from ..functions.dedup import SUBSTRING_GRAM_N, positioned_grams
-
-    t = docs.select("doc_id", F.split("text", " ").alias("toks"))
-    grams = positioned_grams(t, SUBSTRING_GRAM_N)
-
-    def probe(key, pdf_iter, state):
-        first = state.get[0] if state.exists else None
-        # drain ALL Arrow chunks before sorting (same contract note as
-        # lsh_dedup_stream): per-chunk sorting could let a later-chunk
-        # smaller id slip past an earlier-chunk larger one
-        rows = sorted(
-            (int(d), int(i)) for pdf in pdf_iter for d, i in zip(pdf["doc_id"], pdf["i"])
-        )
-        out_d: list[int] = []
-        out_i: list[int] = []
-        out_dup: list[bool] = []
-        for d, i in rows:
-            out_d.append(d)
-            out_i.append(i)
-            out_dup.append(first is not None and first < d)
-            first = d if first is None else min(first, d)
-        state.update((first,))
-        yield pd.DataFrame(
-            {"doc_id": out_d, "i": out_i, "dup": out_dup}
-        ).astype({"doc_id": "int64", "i": "int32", "dup": "bool"})
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return grams.groupBy("gram").applyInPandasWithState(
-        probe,
-        outputStructType=SPAN_DEDUP_OUTPUT_SCHEMA,
-        stateStructType=SPAN_DEDUP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# Watermark-buffered span dedup (VERDICT r12 #4): -1 sentinel for "no
-# owner yet" (the WM_LSH convention) plus pending (doc, start, ts)
-# arrays per gram.
+# Per-gram state: the smallest owning doc_id (-1 sentinel for "no owner
+# yet", the WM_LSH convention) plus pending (doc, start, ts) arrays.
 WM_SPAN_DEDUP_STATE_SCHEMA = T.StructType(
     [
         T.StructField("first_doc", T.LongType()),
@@ -1971,24 +1466,34 @@ WM_SPAN_DEDUP_STATE_SCHEMA = T.StructType(
 def span_dedup_stream_watermarked(
     docs: DataFrame, delay: str = "10 minutes"
 ) -> DataFrame:
-    """Exact-substring span dedup ON INGEST with a WATERMARK-BUFFERED
-    admission order (VERDICT r12 #4): same per-gram smallest-owner state
-    as :func:`span_dedup_stream`, but gram occurrences are buffered
-    until the watermark passes their document's ``ingest_ts``, then
-    judged in (ingest_ts, doc_id) order.
+    """Exact-substring span dedup ON INGEST — the streaming form of
+    ``batch_equiv.span_removal_firstseen`` (the apply half of Lee et al.
+    2022 in incremental form): each arriving document's positioned
+    n-grams are buffered per gram until the watermark passes their
+    document's ``ingest_ts``, then judged in (ingest_ts, doc_id) order
+    against a per-gram state holding the smallest doc_id seen; a gram
+    occurrence is flagged ``dup`` iff a strictly smaller doc already owns
+    it.  The document rewrite (maximal dup runs -> marker) happens
+    downstream from the emitted verdicts via
+    ``functions.dedup.rewrite_excising`` — the stream never stores or
+    re-emits text, only (doc_id, gram-start, verdict).  The gram table
+    is a pure per-row map (``positioned_grams``, the batch path's
+    expression, with the event-time column carried through the explode);
+    the only shuffle is the state-store partitioning on the md5-derived
+    gram hash — uniform by construction.
 
-    ORDERING CONTRACT (relaxed): verdicts equal the batch closed form
+    ORDERING CONTRACT: verdicts equal the batch closed form
     (``batch_equiv.span_removal_firstseen_df``) for ANY arrival order,
     provided doc ids are assigned in event-time order and disorder stays
     within ``delay`` (later rows are dropped at the state handler — the
-    late-arrival boundary test).  The unbuffered twin is first-arrival-
-    wins out of order; this one always keeps the smallest doc_id's
-    spans, matching Lee et al.'s batch first-occurrence semantics.
+    late-arrival boundary test).  The smallest doc_id keeps its spans,
+    matching Lee et al.'s batch first-occurrence semantics.
 
     100 TB shape: state per gram is one long plus the in-flight
-    occurrences inside the watermark horizon; the gram table remains the
-    same pure per-row map (``positioned_grams`` with the event-time
-    column carried through the explode).
+    occurrences inside the watermark horizon — the suffix-array-free
+    incarnation of the Lee et al. pipeline, spread across executors by
+    the state store; daily cost is O(|batch| grams), never a corpus
+    rescan.
 
     Watermark-advancement caveat: documents shorter than the gram
     length are filtered out before the explode, and the optimizer can

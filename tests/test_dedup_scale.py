@@ -201,11 +201,8 @@ def test_star_cc_collapses_adversarial_chain_in_log_rounds(spark):
 
 
 def test_star_cc_refuses_unconverged_labels(spark):
-    """Exhausting max_iter without fingerprint convergence must raise
-    (strict default) or warn (strict=False) — never silently return
-    labels that are not component labels (ADVICE r5)."""
-    import warnings
-
+    """Exhausting max_iter without a confirmed fixpoint must raise —
+    never silently return labels that are not component labels."""
     import pytest
 
     from fawac_cdc_spark.functions.dedup import connected_components_star
@@ -217,11 +214,20 @@ def test_star_cc_refuses_unconverged_labels(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components_star(chain, verts, max_iter=1)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        labels, _ = connected_components_star(chain, verts, max_iter=1, strict=False)
-        labels.count()
-    assert any("did not converge" in str(w.message) for w in caught)
+
+
+def test_star_forest_check_accepts_stars_only(spark):
+    """The exact convergence check behind a star-CC fingerprint match:
+    a union of big→small stars passes; a path (a dst that is also a
+    src) and a src with two edges do not."""
+    from fawac_cdc_spark.functions.dedup import _is_star_forest
+
+    def edges(pairs):
+        return spark.createDataFrame(pairs, "src long, dst long")
+
+    assert _is_star_forest(edges([(2, 1), (3, 1), (4, 1), (9, 7)]))
+    assert not _is_star_forest(edges([(2, 1), (3, 2), (4, 3)]))  # path
+    assert not _is_star_forest(edges([(3, 1), (3, 2)]))
 
 
 # --- parameter dials: the registered queries pin test-scale defaults; ---

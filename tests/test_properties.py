@@ -688,6 +688,28 @@ def test_ivf_multiprobe_dominates_single_probe(spark, sf_dir):
         assert m >= s
 
 
+def test_kmeans_refine_rejects_wrong_length_vector(spark, tmp_path):
+    """A truncated member vector must fail the Lloyd refine loudly
+    instead of silently shifting its cell's per-dim centroid means."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fawac_cdc_spark.functions.similarity import EMB_DIM, N_CENTROIDS
+
+    t = pq.read_table(f"{SF0001}/embeddings.parquet")
+    emb = t.column("embedding").to_pylist()
+    i = t.column("vec_id").to_pylist().index(N_CENTROIDS)  # not a seed
+    emb[i] = emb[i][: EMB_DIM - 1]
+    col = t.schema.get_field_index("embedding")
+    t = t.set_column(
+        col, t.schema.field(col), pa.array(emb, type=t.schema.field(col).type)
+    )
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    fn = _SPECS["kmeans_refined_ivf_cells"].fn
+    with pytest.raises(Exception, match=f"does not have {EMB_DIM} entries"):
+        fn(spark, str(tmp_path)).collect()
+
+
 def test_quality_classifier_matches_pandas(spark, sf_dir):
     """Independent pandas/numpy replica of the logistic quality model:
     per-source keep counts and average quality match the registered

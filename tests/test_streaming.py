@@ -386,58 +386,10 @@ def test_stream_stream_left_outer_join_matches_batch(spark, sf_dir, chunk_dir):
     assert not compare_frames(got, want)
 
 
-def test_ewma_target_stream_matches_sequential(spark, chunk_dir, tmp_path):
-    """The distributed transformWithStateInPandas EWMA must equal the
-    sequential recurrence over micro-batch means (and therefore also the
-    driver-side soft_update_run it replaces at scale)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs protobuf (no installed "
-        "copy and no Cloud SDK fallback for the conftest shim); the "
-        "operator is exercised wherever pyspark's full streaming deps "
-        "are installed",
-    )
-    import glob
-
-    tau = 0.1
-    events = cdc.read_event_stream(spark, chunk_dir)
-    with rocksdb_state_store(spark):
-        q = (
-            cdc.ewma_target_stream(events, tau=tau)
-            .writeStream.format("memory")
-            .queryName("ewma_out")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ewma_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.sql("SELECT * FROM ewma_out").toPandas()
-    # last emission per key = final target
-    got = {
-        r["event_type"]: r["target"]
-        for _, r in out.sort_values("n_batches").iterrows()
-    }
-
-    expected: dict[str, float] = {}
-    for f in sorted(glob.glob(f"{chunk_dir}/*.parquet")):
-        pdf = pd.read_parquet(f)
-        means = pdf.groupby("event_type")["value"].apply(
-            lambda s: float(round(s.astype("float64").sum(), 2)) / len(s)
-        )
-        for k, m in means.items():
-            expected[k] = m if k not in expected else (1 - tau) * expected[k] + tau * m
-
-    assert set(got) == set(expected)
-    for k in expected:
-        assert got[k] == pytest.approx(expected[k], abs=1e-9), k
-
-
 def test_ewma_gs_stream_matches_sequential(spark, chunk_dir, tmp_path):
-    """The applyInPandasWithState EWMA (no protobuf dependency — runs in
-    THIS container, unlike the transformWithState form) must equal the
-    sequential recurrence over micro-batch means, exercising the
-    horizontally scalable A17 path end-to-end."""
+    """The applyInPandasWithState EWMA must equal the sequential
+    recurrence over micro-batch means, exercising the horizontally
+    scalable A17 path end-to-end."""
     import glob
 
     tau = 0.1
@@ -968,8 +920,8 @@ def _write_chunk_feed(spark, tmp_dir, name, chunks, schema):
 @pytest.fixture(scope="module")
 def doc_chunk_dir(spark, sf_dir, tmp_path_factory):
     """Split documents into id-ordered parquet chunks — each chunk one
-    micro-batch, so stream arrival order == doc_id order and the
-    streaming LSH admission converges to the batch closed form."""
+    micro-batch, so stream arrival order == doc_id order, the feed
+    contract of the first-arrival quality gate."""
     tbl = load_table(spark, sf_dir, "documents")
     d = tbl.orderBy("doc_id").collect()
     per = (len(d) + N_CHUNKS - 1) // N_CHUNKS
@@ -977,54 +929,6 @@ def doc_chunk_dir(spark, sf_dir, tmp_path_factory):
     return _write_chunk_feed(
         spark, tmp_path_factory.mktemp("doc_stream"), "feed", chunks, tbl.schema
     )
-
-
-def test_lsh_dedup_stream_matches_batch(spark, sf_dir, doc_chunk_dir):
-    """Streaming near-dedup-on-ingest == batch closed form: reduce the
-    per-(doc, band-key) verdict rows to per-doc admission (AND over the
-    doc's keys) and compare with lsh_dedup_admissions. Id-ordered
-    arrival makes every emitted verdict final, so no last-wins reduction
-    is needed — assert that too (each (doc, band) emitted exactly once)."""
-    from fawac_cdc_spark.streaming.batch_equiv import lsh_dedup_admissions
-
-    docs = cdc.read_document_stream(spark, doc_chunk_dir)
-    emitted = _run_to_memory(
-        spark, cdc.lsh_dedup_stream(docs), "lsh_admit_out", "update"
-    ).toPandas()
-    assert not emitted.duplicated(["doc_id", "band"]).any()
-    got = emitted.groupby("doc_id")["key_ok"].all()
-    want = {
-        r.doc_id: r.admitted for r in lsh_dedup_admissions(spark, sf_dir).collect()
-    }
-    assert dict(got) == want
-
-
-def test_lsh_dedup_stream_out_of_order_admits_both(spark, tmp_path):
-    """Documents the ORDERING CONTRACT of lsh_dedup_stream: verdicts are
-    never retracted, so when a LARGER-id doc arrives first and a
-    smaller-id near-duplicate arrives later, BOTH get key_ok=True on
-    their shared keys (the batch closed form would reject the larger
-    one).  The state itself still converges to the per-key minimum —
-    only the already-emitted verdict is unrecallable."""
-    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows_by_chunk = [
-        [(10, text, "en", "web", len(text))],  # batch 0: the larger id
-        [(5, text, "en", "web", len(text))],  # batch 1: smaller near-dup
-    ]
-    feed = _write_chunk_feed(
-        spark, tmp_path, "ooo_docs", rows_by_chunk, cdc.DOC_STREAM_SCHEMA
-    )
-
-    docs = cdc.read_document_stream(spark, feed)
-    emitted = _run_to_memory(
-        spark, cdc.lsh_dedup_stream(docs), "lsh_ooo_out", "update"
-    ).toPandas()
-    # identical text -> identical signatures -> same band keys for both
-    assert set(emitted["doc_id"]) == {5, 10}
-    per_doc_ok = emitted.groupby("doc_id")["key_ok"].all()
-    assert per_doc_ok[10]  # first arrival: admitted
-    assert per_doc_ok[5]  # later smaller id: ALSO admitted — the
-    # documented out-of-order false admit (batch form rejects doc 10)
 
 
 def test_quality_lsh_dedup_stream_matches_batch(spark, sf_dir, doc_chunk_dir):
@@ -1051,8 +955,8 @@ def test_quality_lsh_dedup_stream_replaces_on_higher_quality(spark, tmp_path):
     """The best-wins upgrade in isolation: a later-arriving near-dup with
     HIGHER quality (more distinct tokens) takes over the band keys
     (key_ok=True), while a later near-dup with LOWER quality is
-    rejected — exactly where lsh_dedup_stream's first-wins rule and
-    this operator diverge."""
+    rejected — exactly where the smallest-id-wins LSH gate and this
+    operator diverge."""
     # 10 tokens with 5 distinct -> uniq_ratio 0.5; the higher-quality twin
     # rewrites ONE repeated token, leaving 9 of 10 shingles shared (the
     # minhash bands still collide) but lifting uniq_ratio to 0.6.
@@ -1093,12 +997,11 @@ _WM_BASE = __import__("datetime").datetime(2024, 1, 1, 0, 0, 0)
 
 
 def test_lsh_dedup_watermarked_fixes_out_of_order_double_admit(spark, tmp_path):
-    """The watermark-buffered gate repairs exactly the case
-    test_lsh_dedup_stream_out_of_order_admits_both documents: the
-    larger-id near-dup arrives FIRST, but both are held until the
-    watermark matures them, then admitted in (ingest_ts, doc_id) order
-    — so the smaller id wins and the larger is rejected, matching the
-    batch closed form without any arrival-order precondition."""
+    """The larger-id near-dup arrives FIRST, but both are held until
+    the watermark matures them, then admitted in (ingest_ts, doc_id)
+    order — so the smaller id wins and the larger is rejected, matching
+    the batch closed form without any arrival-order precondition (a
+    first-arrival gate would admit both)."""
     text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     flush = "flushtok one two three four five six"
     rows_by_chunk = [
@@ -1206,125 +1109,63 @@ def test_lsh_dedup_watermarked_drops_beyond_delay(spark, tmp_path):
     assert per_doc_ok[10]
 
 
-@pytest.fixture(scope="module")
-def emb_chunk_dir(spark, sf_dir, tmp_path_factory):
-    """Split embeddings into id-ordered parquet chunks — each chunk one
-    micro-batch, so arrival order == vec_id order and the streaming
-    semantic admission converges to the batch closed form."""
-    tbl = load_table(spark, sf_dir, "embeddings")
-    rows = tbl.orderBy("vec_id").collect()
-    per = (len(rows) + N_CHUNKS - 1) // N_CHUNKS
-    chunks = [rows[i * per : (i + 1) * per] for i in range(N_CHUNKS)]
-    return _write_chunk_feed(
-        spark, tmp_path_factory.mktemp("emb_stream"), "feed", chunks, tbl.schema
-    )
-
-
-def test_semantic_dedup_stream_matches_batch(spark, sf_dir, emb_chunk_dir):
-    """Streaming semantic dedup-on-ingest == batch closed form
-    (semantic_dedup_admissions) under id-ordered arrival: same cell
-    routing, same earlier-dup counts, same admissions, each vector
-    emitted exactly once."""
-    from fawac_cdc_spark.functions.similarity import N_CENTROIDS
-    from fawac_cdc_spark.streaming.batch_equiv import semantic_dedup_admissions
-
-    cents = [
-        (r.vec_id, list(r.embedding))
-        for r in load_table(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") < N_CENTROIDS)
-        .orderBy("vec_id")
-        .collect()
-    ]
-    embs = cdc.read_embedding_stream(spark, emb_chunk_dir)
-    emitted = _run_to_memory(
-        spark, cdc.semantic_dedup_stream(embs, cents), "sem_admit_out", "update"
-    ).toPandas()
-    assert not emitted.duplicated(["vec_id"]).any()
-    want = semantic_dedup_admissions(spark, sf_dir).toPandas()
-    got = emitted.sort_values("vec_id").reset_index(drop=True)
-    want = want.sort_values("vec_id").reset_index(drop=True)
-    assert len(got) == len(want)
-    for col in ("vec_id", "cent_id", "n_earlier_dups", "admitted"):
-        assert (
-            got[col].to_numpy() == want[col].to_numpy()
-        ).all(), f"mismatch in {col}"
-
-
-def test_semantic_dedup_stream_out_of_order_keeps_first(spark, tmp_path):
-    """Documents the ORDERING CONTRACT of semantic_dedup_stream: the
-    admission check runs against every previously SEEN vector, so —
-    unlike the LSH twin, which can double-admit out of order — exactly
-    ONE member of a close pair is ever admitted.  Out-of-order arrival
-    changes WHICH one: the first arrival wins (larger id here), where
-    the batch closed form admits the smallest id."""
-    import numpy as np
-
-    from fawac_cdc_spark.functions.similarity import EMB_DIM
-
-    rng = np.random.RandomState(7)
-    cents = [(0, rng.standard_normal(EMB_DIM).astype("float32").tolist())]
-    base_vec = rng.standard_normal(EMB_DIM).astype("float32")
-    near_dup = (base_vec + 1e-3).astype("float32")  # cosine ~ 1.0
-    rows_by_chunk = [
-        [(10, base_vec.tolist(), 0)],  # batch 0: the larger id
-        [(5, near_dup.tolist(), 0)],  # batch 1: smaller near-dup
-    ]
-    feed = _write_chunk_feed(
-        spark, tmp_path, "ooo_embs", rows_by_chunk, cdc.EMB_STREAM_SCHEMA
-    )
-
-    embs = cdc.read_embedding_stream(spark, feed)
-    emitted = _run_to_memory(
-        spark, cdc.semantic_dedup_stream(embs, cents), "sem_ooo_out", "update"
-    ).toPandas()
-    got = emitted.set_index("vec_id")
-    assert set(got.index) == {5, 10}
-    assert bool(got.loc[10, "admitted"])  # first arrival wins
-    # the later smaller id is rejected against the seen set — the batch
-    # closed form would instead admit 5 and reject 10 (same count,
-    # different representative), which is why id-ordered ingest is the
-    # condition for exact stream==batch equality
-    assert not bool(got.loc[5, "admitted"])
-    assert int(got.loc[5, "n_earlier_dups"]) == 1
-    assert int(got.loc[10, "n_earlier_dups"]) == 0
-
-
-def test_semantic_dedup_stream_resumes_from_checkpoint(
-    spark, sf_dir, emb_chunk_dir, tmp_path
-):
-    """A33 restore semantics for the semantic admission state: stop after
-    the first half of the embedding feed, restart against the full feed
-    with the SAME checkpoint — the second run replays only unseen files
-    against the RESTORED per-cell state (ids/flat/nrms slab round-trips
-    the state store), and the union of both runs' verdicts equals the
-    batch closed form."""
-    import glob
+def test_semantic_dedup_stream_resumes_from_checkpoint(spark, sf_dir, tmp_path):
+    """A33 restore semantics for the watermarked semantic gate.  Run 1
+    sees the first half of the corpus (shuffled) plus two flush rows
+    that mature it; run 2 restarts on the SAME checkpoint with the
+    second half plus two later flush rows.  Run 2 must judge its vectors
+    against the RESTORED seen set (ids/flat/nrms) and release run 1's
+    flush rows from the RESTORED pending buffer, and the union of both
+    runs' real verdicts must equal the batch closed form."""
     import os
     import shutil
 
-    import pandas as pd
-
-    from fawac_cdc_spark.functions.similarity import N_CENTROIDS
+    from fawac_cdc_spark.functions.similarity import EMB_DIM, N_CENTROIDS
     from fawac_cdc_spark.streaming.batch_equiv import semantic_dedup_admissions
 
+    tbl = load_table(spark, sf_dir, "embeddings")
     cents = [
         (r.vec_id, list(r.embedding))
-        for r in load_table(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") < N_CENTROIDS)
-        .orderBy("vec_id")
-        .collect()
+        for r in tbl.where(F.col("vec_id") < N_CENTROIDS).orderBy("vec_id").collect()
     ]
+    rows = tbl.orderBy("vec_id").collect()
+    half = len(rows) // 2
+    # event times follow vec_id, the second half 10 s after the first.
+    # With the 1 hour delay, run 1's flush rows (t1) leave the watermark
+    # at half + 1 s: past every first-half row, short of every
+    # second-half row, and t1 itself lies after the whole corpus.
+    d = [
+        r + (_ts(_WM_BASE, i + (10 if i >= half else 0)),)
+        for i, r in enumerate(rows)
+    ]
+    t1 = half + 3600
+    t2 = t1 + 2 * 3600
+    fvec = [1.0] + [0.0] * (EMB_DIM - 1)
+    first_half, second_half = d[:half], d[half:]
+    chunks = [
+        first_half[0::2],
+        first_half[1::2],
+        [(999_999, fvec, 0, _ts(_WM_BASE, t1))],
+        [(999_998, fvec, 0, _ts(_WM_BASE, t1 + 1))],
+        second_half[0::2],
+        second_half[1::2],
+        [(999_997, fvec, 0, _ts(_WM_BASE, t2))],
+        [(999_996, fvec, 0, _ts(_WM_BASE, t2 + 1))],
+    ]
+    staged = _write_chunk_feed(
+        spark, tmp_path, "sem_resume_staged", chunks, cdc.EMB_TS_STREAM_SCHEMA
+    )
+    files = sorted(os.listdir(staged))
+    assert len(files) == len(chunks)
     feed_dir = tmp_path / "sem_resume_feed"
     feed_dir.mkdir()
-    files = sorted(glob.glob(f"{emb_chunk_dir}/*.parquet"))
-    assert len(files) >= 2
 
-    def arrive(fs):
-        for f in fs:
-            dest = feed_dir / os.path.basename(f)
-            shutil.copy(f, dest)
-            st = os.stat(f)
-            os.utime(dest, (st.st_mtime, st.st_mtime))
+    def arrive(names):
+        for name in names:
+            src = os.path.join(staged, name)
+            shutil.copy(src, feed_dir / name)
+            st = os.stat(src)
+            os.utime(feed_dir / name, (st.st_mtime, st.st_mtime))
 
     ckpt = str(tmp_path / "sem_resume_ckpt")
 
@@ -1332,9 +1173,9 @@ def test_semantic_dedup_stream_resumes_from_checkpoint(
         # memory sink cannot recover from a checkpoint; foreachBatch can
         # (same shape as cdc_upsert_run's resume)
         batches: list[pd.DataFrame] = []
-        embs = cdc.read_embedding_stream(spark, str(feed_dir))
+        embs = cdc.read_embedding_stream_ts(spark, str(feed_dir))
         q = (
-            cdc.semantic_dedup_stream(embs, cents)
+            cdc.semantic_dedup_stream_watermarked(embs, cents, delay="1 hour")
             .writeStream.foreachBatch(
                 lambda df, bid: batches.append(df.toPandas())
             )
@@ -1353,14 +1194,17 @@ def test_semantic_dedup_stream_resumes_from_checkpoint(
             )
         )
 
-    arrive(files[: len(files) // 2])
+    arrive(files[:4])
     first = run()
-    arrive(files[len(files) // 2 :])
+    arrive(files[4:])
     second = run()
-    # run 2 replays ONLY the unseen files (no duplicate verdicts)
-    assert set(first["vec_id"]) & set(second["vec_id"]) == set()
+    ids = [r[0] for r in rows]
+    first_ids, second_ids = set(first["vec_id"]), set(second["vec_id"])
+    assert first_ids == set(ids[:half])
+    # the restored pending buffer releases run 1's flush rows in run 2
+    assert second_ids == set(ids[half:]) | {999_999, 999_998}
     got = (
-        pd.concat([first, second])
+        pd.concat([first, second[second.vec_id < 999_000]])
         .sort_values("vec_id")
         .reset_index(drop=True)
     )
@@ -1373,175 +1217,6 @@ def test_semantic_dedup_stream_resumes_from_checkpoint(
     assert len(got) == len(want)
     for col in ("vec_id", "cent_id", "n_earlier_dups", "admitted"):
         assert (got[col].to_numpy() == want[col].to_numpy()).all(), col
-
-
-def test_semantic_dedup_stream_subblocked_matches_batch(spark, sf_dir, emb_chunk_dir):
-    """The hot-cell sub-blocking dial (rp_sub_planes=2): stream and
-    batch agree under id-ordered arrival, the oracle replays the batch
-    form exactly, and the dial actually changes the comparison set —
-    sub-blocked admission can only admit MORE (pairs straddling a
-    hyperplane are no longer compared)."""
-    from fawac_cdc_spark.functions.similarity import N_CENTROIDS
-    from fawac_cdc_spark.streaming.batch_equiv import (
-        semantic_admissions_oracle_sql,
-        semantic_dedup_admissions_df,
-    )
-    from tools.parity import compare_frames, make_duckdb
-
-    B = 2
-    want_pdf = semantic_dedup_admissions_df(spark, sf_dir, rp_sub_planes=B).toPandas()
-    oracle_pdf = make_duckdb(sf_dir).execute(semantic_admissions_oracle_sql(B)).df()
-    assert not compare_frames(want_pdf, oracle_pdf)
-
-    cents = [
-        (r.vec_id, list(r.embedding))
-        for r in load_table(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") < N_CENTROIDS)
-        .orderBy("vec_id")
-        .collect()
-    ]
-    embs = cdc.read_embedding_stream(spark, emb_chunk_dir)
-    emitted = _run_to_memory(
-        spark,
-        cdc.semantic_dedup_stream(embs, cents, rp_sub_planes=B),
-        "sem_sub_out",
-        "update",
-    ).toPandas()
-    got = emitted.sort_values("vec_id").reset_index(drop=True)
-    want = want_pdf.sort_values("vec_id").reset_index(drop=True)
-    assert len(got) == len(want)
-    for col in ("vec_id", "cent_id", "n_earlier_dups", "admitted"):
-        assert (got[col].to_numpy() == want[col].to_numpy()).all(), col
-
-    # monotone recall trade vs the unblocked form: every unblocked
-    # admission is still admitted (the comparison set only shrank)
-    base = semantic_dedup_admissions_df(spark, sf_dir).toPandas()
-    base_admitted = set(base[base["admitted"]]["vec_id"])
-    sub_admitted = set(want[want["admitted"]]["vec_id"])
-    assert base_admitted <= sub_admitted
-    assert len(sub_admitted) > len(base_admitted)  # the dial moved
-
-
-# --- token-budget gate on ingest (round 7) ----------------------------------
-
-
-@pytest.fixture(scope="module")
-def ordkey_doc_chunk_dir(spark, sf_dir, tmp_path_factory):
-    """Split documents into ORD-KEY-ordered parquet chunks — the
-    curriculum-replay feed the token-budget stream's ordering contract
-    assumes (ascending md5 ord_key across micro-batches)."""
-    import hashlib
-
-    from fawac_cdc_spark.functions.traindata import SHUFFLE_SALT
-
-    tbl = load_table(spark, sf_dir, "documents")
-    rows = sorted(
-        tbl.collect(),
-        key=lambda r: hashlib.md5(
-            f"{r['doc_id']}{SHUFFLE_SALT}".encode()
-        ).hexdigest(),
-    )
-    per = (len(rows) + N_CHUNKS - 1) // N_CHUNKS
-    chunks = [rows[i * per : (i + 1) * per] for i in range(N_CHUNKS)]
-    return _write_chunk_feed(
-        spark, tmp_path_factory.mktemp("ordkey_stream"), "feed", chunks, tbl.schema
-    )
-
-
-def test_token_budget_stream_matches_batch(spark, sf_dir, ordkey_doc_chunk_dir):
-    """Streaming token-budget gate == batch closed form under the
-    ordering contract (ord_key-ordered feed): per-doc admission flags
-    agree exactly, each doc is emitted exactly once, and the admitted
-    token totals respect the budget."""
-    from fawac_cdc_spark.functions.traindata import TOKEN_BUDGET_PER_SOURCE
-    from fawac_cdc_spark.streaming.batch_equiv import token_budget_admissions
-
-    docs = cdc.read_document_stream(spark, ordkey_doc_chunk_dir)
-    emitted = _run_to_memory(
-        spark, cdc.token_budget_stream(docs), "budget_out", "update"
-    ).toPandas()
-    assert not emitted.duplicated(["doc_id"]).any()
-    got = dict(zip(emitted["doc_id"], emitted["admitted"]))
-    want = {
-        r["doc_id"]: r["admitted"]
-        for r in token_budget_admissions(spark, sf_dir).collect()
-    }
-    assert got == want
-    per_src = emitted[emitted["admitted"]].groupby("source")["ntok"].sum()
-    assert (per_src <= TOKEN_BUDGET_PER_SOURCE).all()
-
-
-def test_token_budget_stream_out_of_order_admits_first_arrival(spark, tmp_path):
-    """Documents the ORDERING CONTRACT: the budget charges every arrival
-    once, so out-of-order ingest admits the earliest ARRIVALS, not the
-    earliest order positions.  Two 600-token docs against a 1000-token
-    budget: whichever arrives first is admitted, the other rejected —
-    the batch closed form would admit the one with the smaller ord_key."""
-    text600 = " ".join(["tok"] * 600)
-    import hashlib
-
-    from fawac_cdc_spark.functions.traindata import SHUFFLE_SALT
-
-    # pick ids so doc A has the SMALLER ord_key (batch form admits A)
-    a, b = sorted(
-        (1, 2),
-        key=lambda i: hashlib.md5(f"{i}{SHUFFLE_SALT}".encode()).hexdigest(),
-    )
-    rows_by_chunk = [
-        [(b, text600, "en", "web", len(text600))],  # later-order doc arrives FIRST
-        [(a, text600, "en", "web", len(text600))],
-    ]
-    feed = _write_chunk_feed(
-        spark, tmp_path, "ooo_budget", rows_by_chunk, cdc.DOC_STREAM_SCHEMA
-    )
-    docs = cdc.read_document_stream(spark, feed)
-    emitted = _run_to_memory(
-        spark, cdc.token_budget_stream(docs), "budget_ooo_out", "update"
-    ).toPandas()
-    got = dict(zip(emitted["doc_id"], emitted["admitted"]))
-    assert got == {b: True, a: False}  # first arrival wins, budget holds
-
-
-def test_span_dedup_stream_matches_batch(spark, sf_dir, doc_chunk_dir):
-    """Streaming span-dedup-on-ingest == batch closed form: rebuild every
-    document from the stream's per-gram verdicts (dup starts -> covered
-    positions -> rewrite_excising) and compare text hashes and span/char
-    counts with span_removal_firstseen_df.  Id-ordered arrival makes
-    every emitted verdict final — assert each (doc, gram-start) emitted
-    exactly once too."""
-    from fawac_cdc_spark.functions.dedup import (
-        SUBSTRING_GRAM_N,
-        rewrite_excising,
-    )
-    from fawac_cdc_spark.streaming.batch_equiv import span_removal_firstseen_df
-
-    docs = cdc.read_document_stream(spark, doc_chunk_dir)
-    emitted = _run_to_memory(
-        spark, cdc.span_dedup_stream(docs), "span_dedup_out", "update"
-    )
-    epdf = emitted.toPandas()
-    assert not epdf.duplicated(["doc_id", "i"]).any()
-    assert epdf["dup"].any()  # the fixture has cross-doc verbatim spans
-
-    n = SUBSTRING_GRAM_N
-    covered = (
-        emitted.where("dup")
-        .select("doc_id", F.explode(F.expr(f"sequence(i, i + {n - 1})")).alias("p"))
-        .distinct()
-    )
-    t = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("toks")
-    )
-    got = rewrite_excising(t, covered).toPandas().set_index("doc_id").sort_index()
-    want = (
-        span_removal_firstseen_df(spark, sf_dir)
-        .toPandas()
-        .set_index("doc_id")
-        .sort_index()
-    )
-    assert (got["kept_text"] == want["kept_text"]).all()
-    assert (got["n_spans_removed"] == want["n_spans_removed"]).all()
-    assert (got["chars_removed"] == want["chars_removed"]).all()
 
 
 def test_decontam_span_stream_matches_batch(spark, sf_dir, doc_chunk_dir):
