@@ -7,7 +7,8 @@ materialization. Batch equivalents live in ``streaming/batch_equiv.py``
 
 Reference anchors:
 - micro-batch orchestration (``fawac.py:521-551`` — A32) → trigger loop
-- EWMA soft target update (``fawac.py:15-17`` — A17) → ``soft_update_run``
+- EWMA soft target update (``fawac.py:15-17`` — A17) →
+  ``ewma_target_stream_gs``
 - episode accumulation (``fawac.py:597-611`` — A35) → ``session_window``
 - checkpoint serialize/restore (``fawac.py:555-583`` — A33) → versioned
   snapshot state dirs + streaming checkpointLocation
@@ -175,8 +176,8 @@ def _latest_per_key(df: DataFrame) -> DataFrame:
     )
 
 
-def _bucket_col(n_buckets: int) -> F.Column:
-    return F.pmod(F.hash(F.col("user_id")), F.lit(n_buckets)).cast("int")
+def _bucket_col() -> F.Column:
+    return F.pmod(F.hash(F.col("user_id")), F.lit(N_STATE_BUCKETS)).cast("int")
 
 
 def _state_versions(state_dir: str) -> list[int]:
@@ -231,9 +232,7 @@ def read_upsert_state(
     return spark.read.parquet(*paths)
 
 
-def write_state_snapshot(
-    df: DataFrame, state_dir: str, epoch_id: int, n_buckets: int = N_STATE_BUCKETS
-) -> None:
+def write_state_snapshot(df: DataFrame, state_dir: str, epoch_id: int) -> None:
     """Batch-mode FULL-snapshot commit through the SAME manifest machinery
     the streaming upsert sink uses: ``df`` is the complete state, so the
     committed manifest references ONLY this epoch's buckets (unlike the
@@ -245,19 +244,19 @@ def write_state_snapshot(
     Delta/Iceberg snapshot-commit shape).  Epoch ids are immutable:
     reusing a committed id would overwrite data files older manifests
     still reference, so that is refused loudly.  The touched-bucket
-    collect runs on the RAW keys (no window job; bounded by n_buckets)."""
+    collect runs on the RAW keys (no window job; bounded by N_STATE_BUCKETS)."""
     if epoch_id in _state_versions(state_dir):
         raise ValueError(
             f"epoch {epoch_id} already committed in {state_dir}; epochs are "
             "immutable — pick an unused id (see state_versions())"
         )
     epoch_rel = f"data/e{epoch_id}"
-    _latest_per_key(df).withColumn("bucket", _bucket_col(n_buckets)).write.mode(
+    _latest_per_key(df).withColumn("bucket", _bucket_col()).write.mode(
         "overwrite"
     ).partitionBy("bucket").parquet(os.path.join(state_dir, epoch_rel))
     touched = sorted(
         r["bucket"]
-        for r in df.select(_bucket_col(n_buckets).alias("bucket"))
+        for r in df.select(_bucket_col().alias("bucket"))
         .distinct()
         .collect()
     )
@@ -275,7 +274,6 @@ def cdc_upsert_run(
     source_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    n_buckets: int = N_STATE_BUCKETS,
 ) -> DataFrame:
     """Run the CDC upsert pipeline to completion over a finite stream.
 
@@ -285,13 +283,19 @@ def cdc_upsert_run(
     an epoch-scoped directory, and commit a manifest that re-references
     every untouched bucket's existing files unchanged.  Returns the final
     materialized state.
+
+    A replayed epoch whose manifest is already committed (the manifest
+    landed, Spark's commit log did not) is a no-op: its data files are
+    immutable and the manifest already references them.
     """
     events = read_event_stream(spark, source_dir)
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+        if os.path.exists(os.path.join(state_dir, f"v{epoch_id}.json")):
+            return
         sess = batch_df.sparkSession
         manifest = _read_manifest(state_dir)
-        batch = batch_df.withColumn("bucket", _bucket_col(n_buckets))
+        batch = batch_df.withColumn("bucket", _bucket_col())
         touched = sorted(
             r["bucket"] for r in batch.select("bucket").distinct().collect()
         )
@@ -306,7 +310,7 @@ def cdc_upsert_run(
         merged = batch
         if prev_paths:
             prev = sess.read.parquet(*prev_paths).withColumn(
-                "bucket", _bucket_col(n_buckets)
+                "bucket", _bucket_col()
             )
             merged = prev.unionByName(batch)
         epoch_rel = f"data/e{epoch_id}"
@@ -338,49 +342,10 @@ def cdc_upsert_run(
     )
 
 
-# --- A17: EWMA soft-update of an aggregate state ---------------------------
-
-
-def soft_update_run(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    tau: float = 0.1,
-) -> dict[str, float]:
-    """Streaming soft update: ``target = (1 - tau) * target + tau * batch_mean``
-    per event_type — the reference's target-network EWMA merge
-    (``soft_update``, ``fawac.py:15-17``, A17) as incremental state over
-    micro-batches. Returns the final target values.
-    """
-    events = read_event_stream(spark, source_dir)
-    target: dict[str, float] = {}
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        means = (
-            batch_df.groupBy("event_type")
-            .agg((F.sum(money("value")).cast("double") / F.count(F.lit(1))).alias("m"))
-            .collect()
-        )
-        for row in means:
-            k, m = row["event_type"], row["m"]
-            target[k] = m if k not in target else (1 - tau) * target[k] + tau * m
-
-    q = (
-        events.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return dict(target)
-
-
-# --- A17 EWMA as a DISTRIBUTED stateful operator (applyInPandasWithState) --
+# --- A17 EWMA as a stateful operator (applyInPandasWithState) -------------
 #
-# ``soft_update_run`` above mirrors the reference's driver-side scalar
-# state (fine at ≤5 keys, noted ceiling).  This is the horizontally
-# scalable form: the EWMA target lives in per-key state inside the state
-# store (partitioned by event_type, checkpointed), updated through
+# The EWMA target lives in per-key state inside the state store
+# (partitioned by event_type, checkpointed), updated through
 # applyInPandasWithState — no driver round-trip, any key cardinality.
 
 EWMA_OUTPUT_SCHEMA = T.StructType(
@@ -650,7 +615,7 @@ def enrich_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-# --- A35 with event-time timers (transformWithState, round 5) --------------
+# --- A35 with event-time timeouts (applyInPandasWithState) -----------------
 
 # the ONE session-gap constant: importing (not mirroring) keeps the
 # stream==batch equivalence contract from silently diverging
@@ -665,35 +630,36 @@ SESSION_CLOSE_OUTPUT_SCHEMA = T.StructType(
         T.StructField("total_value", T.DoubleType()),
     ]
 )
+SESSION_CLOSE_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("start_us", T.LongType()),
+        T.StructField("last_us", T.LongType()),
+        T.StructField("n", T.LongType()),
+        T.StructField("cents", T.LongType()),
+    ]
+)
 
 
 def session_close_stream(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> DataFrame:
-    """Inactivity-closed sessions via ``transformWithStateInPandas`` with
-    EVENT-TIME TIMERS — the reference's episode rollout with early stop
+    """Inactivity-closed sessions via ``applyInPandasWithState`` with an
+    EVENT-TIME TIMEOUT — the reference's episode rollout with early stop
     (``fawac.py:597-611``, A35) as a push-based stateful operator: a
     session row is EMITTED the moment the watermark passes
     ``last_event + gap``, instead of being recomputed by a batch query.
 
-    Per user, a ValueState holds (start, last, n, cents, armed timer);
+    Per user the state is the open session (start, last, n, cents);
     each batch folds its rows in (ts, event_id) order, emitting any
-    sessions already closed by an in-batch gap, then re-arms one timer at
-    ``last + gap`` (the previous timer is deleted — exactly one timer per
-    key). ``handleExpiredTimer`` emits the final session and clears
-    state; a stale-timer guard ignores expiries that newer events have
-    superseded. State is per-user scalars in the state store (RocksDB —
-    transformWithState keeps state variables in column families), so the
-    operator partitions horizontally like every other keyed pipeline.
+    sessions already closed by an in-batch gap, then sets the key's one
+    timeout to ``last + gap`` (GroupState keeps a single timeout per
+    key, so setting it replaces the previous one).  On timeout the
+    session is emitted and the state removed.  State is per-user scalars
+    in the state store, so the operator partitions horizontally like
+    every other keyed pipeline.
 
     Batch equivalence: ``session_agg_30min_gap`` — every session whose
     close (last + gap) the final watermark passes is emitted with
     identical aggregates (tests/test_streaming.py pins it).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
     gap_us = gap_min * 60_000_000
     gap_ms = gap_min * 60_000
 
@@ -708,71 +674,50 @@ def session_close_stream(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> D
             }
         )
 
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._h = handle
-            self._state = handle.getValueState(
-                "sess",
-                "start_us bigint, last_us bigint, n bigint, cents bigint, "
-                "timer_ms bigint",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            if self._state.exists():
-                start_us, last_us, n, cents, timer_ms = self._state.get()
-            else:
-                start_us = last_us = timer_ms = None
-                n = cents = 0
-            frames = [pdf[["ts_ltz", "event_id", "value"]] for pdf in rows]
-            pdf = pd.concat(frames).sort_values(["ts_ltz", "event_id"])
-            closed = []
-            for ts, v in zip(pdf["ts_ltz"], pdf["value"]):
-                t_us = ts.value // 1000
-                if start_us is None:
-                    start_us, last_us = t_us, t_us
-                elif t_us > last_us + gap_us:
-                    closed.append((start_us, last_us, n, cents))
-                    start_us, last_us, n, cents = t_us, t_us, 0, 0
-                n += 1
-                cents += _money_cents(v)
-                last_us = max(last_us, t_us)
-            if timer_ms is not None:
-                self._h.deleteTimer(timer_ms)
-            new_timer = last_us // 1000 + gap_ms
-            self._h.registerTimer(new_timer)
-            self._state.update((start_us, last_us, n, cents, new_timer))
-            for s in closed:
-                yield _emit(user_id, *s)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if not self._state.exists():
-                return
-            (user_id,) = key
-            start_us, last_us, n, cents, _ = self._state.get()
-            # stale-timer guard: only the timer matching the CURRENT
-            # session end may close it
-            if expiredTimerInfo.getExpiryTimeInMs() >= last_us // 1000 + gap_ms:
-                self._state.clear()
+    def sessionize(key, pdf_iter, state):
+        (user_id,) = key
+        if state.hasTimedOut:
+            start_us, last_us, n, cents = state.get
+            state.remove()
+            yield _emit(user_id, start_us, last_us, n, cents)
+            return
+        if state.exists:
+            start_us, last_us, n, cents = state.get
+        else:
+            start_us = last_us = None
+            n = cents = 0
+        frames = [pdf[["ts_ltz", "event_id", "value"]] for pdf in pdf_iter]
+        pdf = pd.concat(frames).sort_values(["ts_ltz", "event_id"])
+        for ts, v in zip(pdf["ts_ltz"], pdf["value"]):
+            t_us = ts.value // 1000
+            if start_us is None:
+                start_us, last_us = t_us, t_us
+            elif t_us > last_us + gap_us:
                 yield _emit(user_id, start_us, last_us, n, cents)
+                start_us, last_us, n, cents = t_us, t_us, 0, 0
+            n += 1
+            cents += _money_cents(v)
+            last_us = max(last_us, t_us)
+        state.update((start_us, last_us, n, cents))
+        state.setTimeoutTimestamp(last_us // 1000 + gap_ms)
 
-        def close(self) -> None:
-            pass
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
         _with_event_time(events)
         .withWatermark("ts_ltz", "0 seconds")
         .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=SessionProcessor(),
+        .applyInPandasWithState(
+            sessionize,
             outputStructType=SESSION_CLOSE_OUTPUT_SCHEMA,
+            stateStructType=SESSION_CLOSE_STATE_SCHEMA,
             outputMode="append",
-            timeMode="eventTime",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 
 
-# --- typed composite state: ListState + MapState (round 5) -----------------
+# --- composite per-user profile state (applyInPandasWithState) -------------
 
 PROFILE_TOP_K = 3
 
@@ -785,75 +730,60 @@ PROFILE_OUTPUT_SCHEMA = T.StructType(
         T.StructField("n_total", T.LongType()),
     ]
 )
+PROFILE_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("top", T.ArrayType(T.DoubleType())),
+        T.StructField("types", T.ArrayType(T.StringType())),
+        T.StructField("counts", T.ArrayType(T.LongType())),
+        T.StructField("upd_seq", T.LongType()),
+    ]
+)
 
 
 def stateful_user_profile_stream(events: DataFrame) -> DataFrame:
-    """Running per-user profile on ``transformWithStateInPandas`` with
-    TYPED COMPOSITE STATE — the state-variable surface beyond a single
-    value: a ListState holds the running top-{PROFILE_TOP_K} purchase
-    values, a MapState counts events per type, and a ValueState numbers
-    the emissions so consumers can identify the newest row in update
-    mode. Each state variable lives in its own RocksDB column family and
-    partitions by user like every keyed pipeline; the top-k list is
-    bounded, the map is bounded by the event-type domain, so state size
-    is O(1) per user regardless of stream length.
+    """Running per-user profile on ``applyInPandasWithState`` with a
+    COMPOSITE state row: the running top-{PROFILE_TOP_K} purchase
+    values, the event count per type, and an emission number
+    (``upd_seq``) so consumers can identify the newest row in update
+    mode.  The state partitions by user like every keyed pipeline; the
+    top-k list is bounded and the per-type counts are bounded by the
+    event-type domain, so state size is O(1) per user regardless of
+    stream length.
 
     Batch equivalence: the final emission per user equals the one-shot
     batch profile (top-k purchase values, distinct type count, total
     events) — pinned in tests/test_streaming.py."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
-    class ProfileProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._top = handle.getListState("top_vals", "value double")
-            self._counts = handle.getMapState(
-                "type_counts", "event_type string", "n bigint"
-            )
-            self._seq = handle.getValueState("seq", "upd_seq bigint")
+    def profile(key, pdf_iter, state):
+        (user_id,) = key
+        top, types, counts, seq = state.get if state.exists else ([], [], [], 0)
+        type_counts = dict(zip(types, counts))
+        for pdf in pdf_iter:
+            for et, v in zip(pdf["event_type"], pdf["value"]):
+                type_counts[et] = type_counts.get(et, 0) + 1
+                if et == "purchase":
+                    top.append(float(v))
+        top = sorted(top, reverse=True)[:PROFILE_TOP_K]
+        seq += 1
+        state.update((top, list(type_counts), list(type_counts.values()), seq))
+        yield pd.DataFrame(
+            {
+                "user_id": pd.Series([user_id], dtype="int64"),
+                "upd_seq": pd.Series([seq], dtype="int64"),
+                "top_purchases": [top],
+                "n_types": pd.Series([len(type_counts)], dtype="int32"),
+                "n_total": pd.Series([sum(type_counts.values())], dtype="int64"),
+            }
+        )
 
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            top = [r[0] for r in self._top.get()] if self._top.exists() else []
-            for pdf in rows:
-                for et, v in zip(pdf["event_type"], pdf["value"]):
-                    cur = (
-                        self._counts.getValue((et,))[0]
-                        if self._counts.containsKey((et,))
-                        else 0
-                    )
-                    self._counts.updateValue((et,), (cur + 1,))
-                    if et == "purchase":
-                        top.append(float(v))
-            top = sorted(top, reverse=True)[:PROFILE_TOP_K]
-            self._top.put([(v,) for v in top])
-            n_types, n_total = 0, 0
-            for _, (n,) in self._counts.iterator():
-                n_types += 1
-                n_total += n
-            seq = (self._seq.get()[0] if self._seq.exists() else 0) + 1
-            self._seq.update((seq,))
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.Series([user_id], dtype="int64"),
-                    "upd_seq": pd.Series([seq], dtype="int64"),
-                    "top_purchases": [top],
-                    "n_types": pd.Series([n_types], dtype="int32"),
-                    "n_total": pd.Series([n_total], dtype="int64"),
-                }
-            )
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=ProfileProcessor(),
+    return events.groupBy("user_id").applyInPandasWithState(
+        profile,
         outputStructType=PROFILE_OUTPUT_SCHEMA,
+        stateStructType=PROFILE_STATE_SCHEMA,
         outputMode="update",
-        timeMode="none",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -966,15 +896,62 @@ def quality_lsh_dedup_stream(docs: DataFrame) -> DataFrame:
     )
 
 
-# --- watermark-buffered near-dedup on ingest ---------------------------------
+# --- event-time maturity buffer of the *_watermarked ingest gates -----------
 #
-# Arrivals are HELD in per-band-key state until the event-time watermark
-# passes their timestamp, then admitted in deterministic (ingest_ts,
-# doc_id) order.  Any feed whose doc ids are assigned in event-time order
-# (the production case: ingest-sequence or timestamp-derived ids) matches
-# the batch closed form under ARBITRARY arrival order, as long as
-# disorder stays within the watermark delay; later rows are dropped (the
-# documented boundary, pinned by the late-arrival test).
+# Arrivals are HELD in keyed state until the event-time watermark passes
+# their ``ingest_ts``, then judged in deterministic (ingest_ts, id...)
+# order.  Any feed whose ids are assigned in event-time order (the
+# production case: ingest-sequence or timestamp-derived ids) matches the
+# batch closed form under ARBITRARY arrival order, as long as disorder
+# stays within the watermark delay; later rows are dropped (the
+# documented boundary, pinned by each gate's late-arrival test).
+
+
+def _pend_field(*fields: T.StructField) -> T.StructField:
+    """The buffer's slot in a gate's state row (always the LAST field):
+    buffered arrivals as ``(us, *fields)`` structs, ``us`` being the
+    row's ``ingest_ts`` in µs."""
+    return T.StructField(
+        "pend",
+        T.ArrayType(T.StructType([T.StructField("us", T.LongType()), *fields])),
+    )
+
+
+def _release_matured(state, pdf_iter, cols: tuple[str, ...]):
+    """Buffer a gate's arrivals until the watermark passes them.
+
+    Returns ``(mature, pend)``: ``mature`` are the rows to judge now,
+    sorted as ``(us, *cols)`` tuples — (ingest_ts, id...) order, so a
+    gate lists its id columns first; ``pend`` is what the gate stores
+    back as the last field of its state row.  The rules:
+
+    - a NEW arrival at or behind the watermark is late beyond the delay
+      and is dropped, never judged — Spark's upstream late-row drop is
+      best-effort for arbitrary stateful ops (see the append-rollup
+      test's note), so the boundary is enforced here;
+    - a BUFFERED row at or behind the watermark arrived on time and has
+      matured;
+    - while rows stay pending, the event-time timeout is re-armed at the
+      oldest pending ms + 1 (strictly beyond the current watermark after
+      the µs → ms floor), so the key fires again once it can release.
+    """
+    wm_us = state.getCurrentWatermarkMs() * 1000
+    pend = list(state.get[-1]) if state.exists else []
+    for pdf in pdf_iter:
+        # pandas Timestamp .value is ns since epoch; values go through
+        # tolist() so the state pickles plain Python types
+        us = [ts.value // 1000 for ts in pdf["ingest_ts"]]
+        vals = [
+            [v.tolist() if hasattr(v, "tolist") else v for v in pdf[c].tolist()]
+            for c in cols
+        ]
+        pend += [row for row in zip(us, *vals) if row[0] > wm_us]
+    mature = sorted(row for row in pend if row[0] <= wm_us)
+    pend = [row for row in pend if row[0] > wm_us]
+    if pend:
+        state.setTimeoutTimestamp(min(row[0] for row in pend) // 1000 + 1)
+    return mature, pend
+
 
 DOC_TS_STREAM_SCHEMA = T.StructType(
     list(DOC_STREAM_SCHEMA) + [T.StructField("ingest_ts", T.TimestampType())]
@@ -989,13 +966,11 @@ LSH_DEDUP_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 # first_doc uses -1 as the "no survivor yet" sentinel (state tuples
-# round-trip more robustly without nullable scalars); pend_* are the
-# parallel arrays of buffered not-yet-mature arrivals.
+# round-trip more robustly without nullable scalars).
 WM_LSH_STATE_SCHEMA = T.StructType(
     [
         T.StructField("first_doc", T.LongType()),
-        T.StructField("pend_ids", T.ArrayType(T.LongType())),
-        T.StructField("pend_us", T.ArrayType(T.LongType())),
+        _pend_field(T.StructField("doc_id", T.LongType())),
     ]
 )
 
@@ -1056,27 +1031,8 @@ def lsh_dedup_stream_watermarked(
 
     def admit(key, pdf_iter, state):
         band, band_key = key
-        if state.exists:
-            first, pend_ids, pend_us = state.get
-            pend = list(zip((int(u) for u in pend_us), (int(i) for i in pend_ids)))
-        else:
-            first, pend = -1, []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        for pdf in pdf_iter:
-            for r in pdf.itertuples():
-                # pandas Timestamp .value is ns since epoch.  A NEW
-                # arrival already at-or-behind the watermark is late
-                # beyond the delay: Spark's upstream late-row drop is
-                # best-effort for arbitrary stateful ops (see the
-                # append-rollup test's note), so the boundary is
-                # enforced here — dropped, never admitted.  Buffered
-                # rows at-or-behind the watermark are different: they
-                # arrived on time and are now MATURE.
-                ts_us = int(r.ingest_ts.value) // 1000
-                if ts_us > wm_us:
-                    pend.append((ts_us, int(r.doc_id)))
-        mature = sorted(t for t in pend if t[0] <= wm_us)
-        rest = [t for t in pend if t[0] > wm_us]
+        first = state.get[0] if state.exists else -1
+        mature, pend = _release_matured(state, pdf_iter, ("doc_id",))
         out_docs: list[int] = []
         out_ok: list[bool] = []
         for _, d in mature:
@@ -1085,12 +1041,7 @@ def lsh_dedup_stream_watermarked(
                 first = d
             out_docs.append(d)
             out_ok.append(ok)
-        state.update((first, [d for _, d in rest], [u for u, _ in rest]))
-        if rest:
-            # fire again once the watermark passes the oldest buffered
-            # row (+1 ms: the timeout must sit strictly beyond the
-            # current watermark after the µs→ms floor)
-            state.setTimeoutTimestamp(min(u for u, _ in rest) // 1000 + 1)
+        state.update((first, pend))
         if out_docs:
             yield pd.DataFrame(
                 {
@@ -1127,8 +1078,8 @@ SEM_DEDUP_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 # Per-cell state: every judged vector in the cell (ids +
-# row-major flat embedding matrix + hoisted norms) plus the parallel
-# pending arrays of buffered not-yet-mature arrivals.  Embeddings ARE the
+# row-major flat embedding matrix + hoisted norms) plus the pending
+# buffer of not-yet-mature arrivals.  Embeddings ARE the
 # state here — unlike the LSH path there is no sketch that preserves
 # cosine exactly, so the honest per-cell memory is O(cell vectors x dim),
 # which is the point of the cell blocking: k ~ sqrt(n) keeps each cell's
@@ -1138,9 +1089,10 @@ WM_SEM_DEDUP_STATE_SCHEMA = T.StructType(
         T.StructField("ids", T.ArrayType(T.LongType())),
         T.StructField("flat", T.ArrayType(T.DoubleType())),
         T.StructField("nrms", T.ArrayType(T.DoubleType())),
-        T.StructField("pend_ids", T.ArrayType(T.LongType())),
-        T.StructField("pend_flat", T.ArrayType(T.DoubleType())),
-        T.StructField("pend_us", T.ArrayType(T.LongType())),
+        _pend_field(
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        ),
     ]
 )
 
@@ -1225,37 +1177,15 @@ def semantic_dedup_stream_watermarked(
     def admit(key, pdf_iter, state):
         cent_id = int(key[0])
         if state.exists:
-            ids, flat, nrms, pend_ids, pend_flat, pend_us = state.get
+            ids, flat, nrms, _ = state.get
             ids = list(ids)
             prior = np.asarray(flat, dtype=np.float64).reshape(len(ids), EMB_DIM)
             prior_nrm = np.asarray(nrms, dtype=np.float64)
-            pmat = np.asarray(pend_flat, dtype=np.float64).reshape(
-                len(pend_ids), EMB_DIM
-            )
-            pend = [
-                (int(u), int(i), pmat[j])
-                for j, (u, i) in enumerate(zip(pend_us, pend_ids))
-            ]
         else:
             ids = []
             prior = np.zeros((0, EMB_DIM))
             prior_nrm = np.zeros(0)
-            pend = []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        for pdf in pdf_iter:
-            for vid, vec, ts in zip(
-                pdf["vec_id"], pdf["embedding"], pdf["ingest_ts"]
-            ):
-                # same boundary note as lsh_dedup_stream_watermarked: a
-                # NEW arrival already at-or-behind the watermark is late
-                # beyond the delay — dropped here, never admitted.
-                ts_us = int(ts.value) // 1000
-                if ts_us > wm_us:
-                    pend.append((ts_us, int(vid), np.asarray(vec, dtype=np.float64)))
-        mature = sorted(
-            (t for t in pend if t[0] <= wm_us), key=lambda t: (t[0], t[1])
-        )
-        rest = [t for t in pend if t[0] > wm_us]
+        mature, pend = _release_matured(state, pdf_iter, ("vec_id", "embedding"))
         # One preallocated (state + matured) slab, filled in place — a
         # per-row np.vstack would re-copy the whole matrix per arrival
         # (O(m^2 d) per micro-batch, worst exactly on a hot cell).
@@ -1268,6 +1198,7 @@ def semantic_dedup_stream_watermarked(
         out_n: list[int] = []
         for j, (_, vid, vec) in enumerate(mature):
             seen = n_prior + j
+            vec = np.asarray(vec, dtype=np.float64)
             vnrm = float(np.sqrt((vec * vec).sum()))
             if seen:
                 cos = np.round((mat[:seen] @ vec) / (nrm[:seen] * vnrm), 6)
@@ -1279,18 +1210,7 @@ def semantic_dedup_stream_watermarked(
             ids.append(vid)
             mat[seen] = vec
             nrm[seen] = vnrm
-        state.update(
-            (
-                ids,
-                mat.reshape(-1).tolist(),
-                nrm.tolist(),
-                [i for _, i, _ in rest],
-                np.concatenate([v for _, _, v in rest]).tolist() if rest else [],
-                [u for u, _, _ in rest],
-            )
-        )
-        if rest:
-            state.setTimeoutTimestamp(min(u for u, _, _ in rest) // 1000 + 1)
+        state.update((ids, mat.reshape(-1).tolist(), nrm.tolist(), pend))
         if out_ids:
             yield pd.DataFrame(
                 {
@@ -1323,16 +1243,17 @@ TOKEN_BUDGET_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 # Per-source state: total tokens charged so far (admitted or not —
-# prefix-truncation semantics, one BIGINT per source) plus the parallel
-# pending arrays of buffered not-yet-mature arrivals; matured rows charge
-# the budget in (ingest_ts, ord_key) order.
+# prefix-truncation semantics, one BIGINT per source) plus the pending
+# buffer of not-yet-mature arrivals; matured rows charge the budget in
+# (ingest_ts, ord_key) order.
 WM_TOKEN_BUDGET_STATE_SCHEMA = T.StructType(
     [
         T.StructField("seen_tokens", T.LongType()),
-        T.StructField("pend_keys", T.ArrayType(T.StringType())),
-        T.StructField("pend_ids", T.ArrayType(T.LongType())),
-        T.StructField("pend_ntok", T.ArrayType(T.LongType())),
-        T.StructField("pend_us", T.ArrayType(T.LongType())),
+        _pend_field(
+            T.StructField("ord_key", T.StringType()),
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("ntok", T.LongType()),
+        ),
     ]
 )
 
@@ -1382,26 +1303,10 @@ def token_budget_stream_watermarked(
 
     def admit(key, pdf_iter, state):
         (source,) = key
-        if state.exists:
-            seen, pend_keys, pend_ids, pend_ntok, pend_us = state.get
-            seen = int(seen)
-            pend = [
-                (int(u), str(k), int(d), int(n))
-                for u, k, d, n in zip(pend_us, pend_keys, pend_ids, pend_ntok)
-            ]
-        else:
-            seen, pend = 0, []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        for pdf in pdf_iter:
-            for k, d, n, ts in zip(
-                pdf["ord_key"], pdf["doc_id"], pdf["ntok"], pdf["ingest_ts"]
-            ):
-                # late beyond the delay: dropped, never charged/admitted
-                ts_us = int(ts.value) // 1000
-                if ts_us > wm_us:
-                    pend.append((ts_us, str(k), int(d), int(n)))
-        mature = sorted(t for t in pend if t[0] <= wm_us)
-        rest = [t for t in pend if t[0] > wm_us]
+        seen = state.get[0] if state.exists else 0
+        mature, pend = _release_matured(
+            state, pdf_iter, ("ord_key", "doc_id", "ntok")
+        )
         out_doc: list[int] = []
         out_ntok: list[int] = []
         out_ok: list[bool] = []
@@ -1410,17 +1315,7 @@ def token_budget_stream_watermarked(
             out_doc.append(doc_id)
             out_ntok.append(ntok)
             out_ok.append(seen <= TOKEN_BUDGET_PER_SOURCE)
-        state.update(
-            (
-                seen,
-                [k for _, k, _, _ in rest],
-                [d for _, _, d, _ in rest],
-                [n for _, _, _, n in rest],
-                [u for u, _, _, _ in rest],
-            )
-        )
-        if rest:
-            state.setTimeoutTimestamp(min(u for u, _, _, _ in rest) // 1000 + 1)
+        state.update((seen, pend))
         if out_doc:
             yield pd.DataFrame(
                 {
@@ -1452,13 +1347,14 @@ SPAN_DEDUP_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 # Per-gram state: the smallest owning doc_id (-1 sentinel for "no owner
-# yet", the WM_LSH convention) plus pending (doc, start, ts) arrays.
+# yet", the WM_LSH convention) plus the pending (ts, doc, start) buffer.
 WM_SPAN_DEDUP_STATE_SCHEMA = T.StructType(
     [
         T.StructField("first_doc", T.LongType()),
-        T.StructField("pend_ids", T.ArrayType(T.LongType())),
-        T.StructField("pend_i", T.ArrayType(T.IntegerType())),
-        T.StructField("pend_us", T.ArrayType(T.LongType())),
+        _pend_field(
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("i", T.IntegerType()),
+        ),
     ]
 )
 
@@ -1510,23 +1406,8 @@ def span_dedup_stream_watermarked(
     grams = positioned_grams(t, SUBSTRING_GRAM_N, carry=("ingest_ts",))
 
     def probe(key, pdf_iter, state):
-        if state.exists:
-            first, pend_ids, pend_i, pend_us = state.get
-            first = int(first)
-            pend = [
-                (int(u), int(d), int(i))
-                for u, d, i in zip(pend_us, pend_ids, pend_i)
-            ]
-        else:
-            first, pend = -1, []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        for pdf in pdf_iter:
-            for d, i, ts in zip(pdf["doc_id"], pdf["i"], pdf["ingest_ts"]):
-                ts_us = int(ts.value) // 1000
-                if ts_us > wm_us:
-                    pend.append((ts_us, int(d), int(i)))
-        mature = sorted(t for t in pend if t[0] <= wm_us)
-        rest = [t for t in pend if t[0] > wm_us]
+        first = state.get[0] if state.exists else -1
+        mature, pend = _release_matured(state, pdf_iter, ("doc_id", "i"))
         out_d: list[int] = []
         out_i: list[int] = []
         out_dup: list[bool] = []
@@ -1535,16 +1416,7 @@ def span_dedup_stream_watermarked(
             out_i.append(i)
             out_dup.append(first >= 0 and first < d)
             first = d if first < 0 else min(first, d)
-        state.update(
-            (
-                first,
-                [d for _, d, _ in rest],
-                [i for _, _, i in rest],
-                [u for u, _, _ in rest],
-            )
-        )
-        if rest:
-            state.setTimeoutTimestamp(min(u for u, _, _ in rest) // 1000 + 1)
+        state.update((first, pend))
         if out_d:
             yield pd.DataFrame(
                 {"doc_id": out_d, "i": out_i, "dup": out_dup}

@@ -8,24 +8,6 @@ import pytest
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-# transformWithStateInPandas needs google.protobuf at runtime (driver AND
-# Spark's Python workers). When no real protobuf is installed, route it to
-# the unmodified protobuf runtime the image's Cloud SDK ships, via the
-# shim package in tools/pbshim (which also relaxes the 6.32-vs-6.33
-# minor-version check). PYTHONPATH (not just sys.path) so the worker
-# processes forked by the JVM inherit it.
-try:
-    import google.protobuf  # noqa: F401
-except ImportError:
-    _SHIM = os.path.join(_REPO, "tools", "pbshim")
-    if os.path.isdir(
-        "/usr/lib/google-cloud-sdk/platform/google_appengine/google/protobuf"
-    ):
-        sys.path.insert(0, _SHIM)
-        os.environ["PYTHONPATH"] = (
-            _SHIM + os.pathsep + os.environ.get("PYTHONPATH", "")
-        ).rstrip(os.pathsep)
-
 SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
 

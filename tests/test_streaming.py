@@ -25,34 +25,6 @@ from tools.parity import compare_frames
 N_CHUNKS = 4
 
 
-from contextlib import contextmanager  # noqa: E402
-
-
-@contextmanager
-def rocksdb_state_store(spark):
-    """Scope the RocksDB state-store provider to one streaming query.
-
-    transformWithState keeps each state variable in its own column
-    family — only the RocksDB provider supports that (the default
-    HDFS-backed provider refuses). The previous provider is always
-    restored so the session-scoped spark fixture never leaks it into
-    unrelated tests."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 @pytest.fixture(scope="module")
 def chunk_dir(spark, sf_dir, tmp_path_factory):
     """Split events into N ts-ordered parquet chunks — each chunk becomes
@@ -219,26 +191,6 @@ def test_cdc_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert len(row) == 64
 
 
-def test_soft_update_sequential_semantics(spark, chunk_dir, tmp_path):
-    """Streaming EWMA equals the sequential recurrence over micro-batch means."""
-    tau = 0.1
-    got = cdc.soft_update_run(spark, chunk_dir, str(tmp_path / "ckpt2"), tau=tau)
-
-    # recompute sequentially from the chunk files in arrival order
-    import glob
-
-    expected: dict[str, float] = {}
-    for f in sorted(glob.glob(f"{chunk_dir}/*.parquet")):
-        pdf = pd.read_parquet(f)
-        means = pdf.groupby("event_type")["value"].apply(
-            lambda s: float(round(s.astype("float64").sum(), 2)) / len(s)
-        )
-        for k, m in means.items():
-            expected[k] = m if k not in expected else (1 - tau) * expected[k] + tau * m
-    assert set(got) == set(expected)
-    for k in got:
-        assert abs(got[k] - expected[k]) < 1e-9, (k, got[k], expected[k])
-
 def test_sliding_rollup_stream_matches_batch(spark, sf_dir, chunk_dir):
     from fawac_cdc_spark.streaming.batch_equiv import sliding_1h_15min_rollup
 
@@ -312,6 +264,50 @@ def test_cdc_upsert_resumes_from_checkpoint(spark, sf_dir, chunk_dir, tmp_path):
 
     want = cdc_latest_state_per_user(spark, sf_dir).toPandas()
     assert not compare_frames(final, want)
+
+
+def test_cdc_upsert_replays_committed_epoch_as_noop(spark, chunk_dir, tmp_path):
+    """Micro-batch replay: the sink committed epoch N's manifest but
+    Spark's commit log lost batch N (a crash between the two), so the
+    restart re-delivers batch N.  The replay must leave the final state,
+    the newest manifest and every data file exactly as the un-replayed
+    run left them: committed data files are immutable (older manifests
+    and open time-travel reads reference them)."""
+    import glob
+    import json
+    import os
+
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    first = cdc.cdc_upsert_run(spark, chunk_dir, state_dir, ckpt).toPandas()
+    versions = cdc.state_versions(state_dir)
+
+    def newest_manifest():
+        with open(os.path.join(state_dir, f"v{versions[-1]}.json")) as f:
+            return json.load(f)
+
+    def data_files():
+        pattern = os.path.join(state_dir, "data", "**", "*.parquet")
+        return {p: os.stat(p).st_mtime_ns for p in glob.glob(pattern, recursive=True)}
+
+    manifest, files = newest_manifest(), data_files()
+    commits = sorted(
+        glob.glob(os.path.join(ckpt, "commits", "[0-9]*")),
+        key=lambda p: int(os.path.basename(p)),
+    )
+    last = os.path.basename(commits[-1])
+    assert int(last) == versions[-1]
+    for name in (last, f".{last}.crc"):
+        p = os.path.join(ckpt, "commits", name)
+        if os.path.exists(p):
+            os.remove(p)
+
+    replayed = cdc.cdc_upsert_run(spark, chunk_dir, state_dir, ckpt).toPandas()
+    assert os.path.exists(os.path.join(ckpt, "commits", last)), "batch not replayed"
+    assert cdc.state_versions(state_dir) == versions
+    assert newest_manifest() == manifest
+    assert data_files() == files
+    assert not compare_frames(replayed, first)
 
 
 def test_rate_source_produces_event_shaped_rows(spark):
@@ -579,26 +575,24 @@ def test_watermark_drops_late_data(spark, tmp_path):
 
 
 def test_session_close_stream_matches_batch_sessions(spark, chunk_dir, tmp_path):
-    """The event-time-timer sessionizer must emit exactly the sessions the
+    """The event-time-timeout sessionizer must emit exactly the sessions the
     batch gap-sessionization computes, for every session the final
     watermark closes (last_event + gap <= max event time), with identical
     aggregates."""
-    pytest.importorskip("google.protobuf")
     from fawac_cdc_spark.registry import all_specs
     from tests.conftest import SF0001
 
-    with rocksdb_state_store(spark):
-        events = cdc.read_event_stream(spark, chunk_dir)
-        q = (
-            cdc.session_close_stream(events)
-            .writeStream.format("memory")
-            .queryName("session_close_out")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    events = cdc.read_event_stream(spark, chunk_dir)
+    q = (
+        cdc.session_close_stream(events)
+        .writeStream.format("memory")
+        .queryName("session_close_out")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     got = spark.sql(
         "SELECT user_id, session_start, session_end, n_events, total_value "
         "FROM session_close_out"
@@ -634,23 +628,21 @@ def test_session_close_stream_matches_batch_sessions(spark, chunk_dir, tmp_path)
 
 def test_stateful_profile_stream_matches_batch(spark, chunk_dir, tmp_path):
     """The composite-state profile operator's NEWEST emission per user
-    (ListState top-k + MapState counts + ValueState seq) must equal the
-    one-shot batch profile."""
-    pytest.importorskip("google.protobuf")
+    (top-k values, per-type counts and upd_seq in one state row) must
+    equal the one-shot batch profile."""
     from tests.conftest import SF0001
 
-    with rocksdb_state_store(spark):
-        events = cdc.read_event_stream(spark, chunk_dir)
-        q = (
-            cdc.stateful_user_profile_stream(events)
-            .writeStream.format("memory")
-            .queryName("profile_out")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "prof_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    events = cdc.read_event_stream(spark, chunk_dir)
+    q = (
+        cdc.stateful_user_profile_stream(events)
+        .writeStream.format("memory")
+        .queryName("profile_out")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "prof_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     out = spark.sql("SELECT * FROM profile_out").toPandas()
     latest = out.loc[out.groupby("user_id")["upd_seq"].idxmax()]
     got = {
@@ -1799,3 +1791,102 @@ def test_money_cents_is_half_up_not_bankers():
     assert cdc._money_cents(2.675) == 268  # float 2.675 binary-rounds DOWN via round()
     assert cdc._money_cents(12.34) == 1234
     assert cdc._money_cents(0.0) == 0
+
+
+# --- the *_watermarked gates' shared maturity buffer, without Spark ---------
+
+
+def _gate_state(wm_ms, value=None):
+    """A GroupState exactly as the applyInPandasWithState worker builds
+    it: the stored value in its pickled internal form, event-time
+    timeouts, the watermark set."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    schema = cdc.WM_SPAN_DEDUP_STATE_SCHEMA
+    return GroupState(
+        optionalValue=None if value is None else schema.toInternal(value),
+        batchProcessingTimeMs=0,
+        eventTimeWatermarkMs=wm_ms,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        hasTimedOut=False,
+        watermarkPresent=True,
+        defined=value is not None,
+        updated=False,
+        removed=False,
+        timeoutTimestamp=GroupState.NO_TIMESTAMP,
+        keyAsUnsafe=b"",
+        valueSchema=schema,
+    )
+
+
+def _span_arrivals(rows):
+    """One Arrow chunk of span-gate input: (us, doc_id, i) rows."""
+    return pd.DataFrame(
+        {
+            "doc_id": [d for _, d, _ in rows],
+            "i": [i for _, _, i in rows],
+            "ingest_ts": pd.to_datetime([u for u, _, _ in rows], unit="us"),
+        }
+    )
+
+
+def _timeout_ms(state):
+    import json
+
+    return json.loads(state.json())["timeoutTimestamp"]
+
+
+def test_watermark_buffer_drops_new_arrival_at_watermark():
+    state = _gate_state(wm_ms=1_000)
+    arrivals = [(1_000_000, 1, 0), (999_999, 2, 0), (1_000_001, 3, 0)]
+    mature, pend = cdc._release_matured(
+        state, iter([_span_arrivals(arrivals)]), ("doc_id", "i")
+    )
+    assert mature == []
+    assert pend == [(1_000_001, 3, 0)]
+
+
+def test_watermark_buffer_matures_buffered_row_at_watermark():
+    state = _gate_state(
+        wm_ms=1_000, value=(-1, [(1_000_000, 7, 0), (1_000_001, 8, 0)])
+    )
+    mature, pend = cdc._release_matured(state, iter([]), ("doc_id", "i"))
+    assert mature == [(1_000_000, 7, 0)]
+    assert pend == [(1_000_001, 8, 0)]
+
+
+def test_watermark_buffer_judges_in_ingest_ts_then_id_order():
+    """Shuffled arrivals over two chunks, buffered through a state
+    round trip, mature in (ingest_ts, doc_id, i) order."""
+    rows = [
+        (900_000, 4, 0),
+        (500_000, 9, 1),
+        (500_000, 2, 3),
+        (500_000, 2, 1),
+        (700_000, 1, 0),
+    ]
+    state = _gate_state(wm_ms=0)
+    mature, pend = cdc._release_matured(
+        state,
+        iter([_span_arrivals(rows[:2]), _span_arrivals(rows[2:])]),
+        ("doc_id", "i"),
+    )
+    assert mature == [] and len(pend) == len(rows)
+    state = _gate_state(wm_ms=900, value=(-1, pend))
+    mature, pend = cdc._release_matured(state, iter([]), ("doc_id", "i"))
+    assert mature == sorted(rows)
+    assert pend == []
+
+
+def test_watermark_buffer_rearms_timeout_at_oldest_pending_ms_plus_one():
+    state = _gate_state(wm_ms=1_000, value=(-1, [(3_500_999, 1, 0)]))
+    cdc._release_matured(
+        state, iter([_span_arrivals([(2_000_500, 2, 0)])]), ("doc_id", "i")
+    )
+    assert _timeout_ms(state) == 2_001
+
+    # nothing left pending: the timeout is not re-armed
+    state = _gate_state(wm_ms=5_000, value=(-1, [(3_500_999, 1, 0)]))
+    mature, pend = cdc._release_matured(state, iter([]), ("doc_id", "i"))
+    assert pend == [] and len(mature) == 1
+    assert _timeout_ms(state) == -1
