@@ -129,78 +129,102 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 
 
-_TS_LAYOUT_CACHE: dict[str, object] = {}
+_FOOTER_CACHE: dict[str, object] = {}
 
 
-def _events_ts_layout(path: str):
-    """Decode the physical parquet type of ``events.ts`` from the footer.
+def _checked_footer(path: str, name: str):
+    """The pyarrow schema of table ``name``'s parquet footer at ``path``
+    (one file, or a directory of part files as Spark writes it), checked
+    against ``SCHEMAS[name]``.
 
-    Driver-side, footer-only (pyarrow), no Spark conf touched. Returns the
-    pyarrow type. Raises if ``ts`` is not a timestamp — a fixture that
-    ships plain int64 (no logical type) is ambiguous (nanos? micros?) and
-    must fail loudly at load time rather than be silently misscaled
-    (the round-2 regression class, see VERDICT r3 "what's wrong" #1).
+    Driver-side and footer-only: no Spark job. Each column must decode
+    the way Spark decodes it (NTZ for a timestamp without a zone) to its
+    declared type, and the column sets must agree; a mismatch raises
+    ``ValueError`` naming the table and column. This is what makes the
+    explicit read schema safe: with ``.schema()``, a missing or renamed
+    column would read back silently as NULLs. ``events.ts`` only has to
+    be a parquet TIMESTAMP (:func:`load_table` picks its decode); a
+    plain int64 ``ts`` is ambiguous (nanos? micros?) and is refused
+    rather than silently misscaled.
+
     Cached per path: fixtures are immutable, and load_table is on the
-    construction path of every events query.
+    construction path of every query.
     """
-    if path in _TS_LAYOUT_CACHE:
-        return _TS_LAYOUT_CACHE[path]
+    if path in _FOOTER_CACHE:
+        return _FOOTER_CACHE[path]
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    t = pq.ParquetDataset(path).schema.field("ts").type
-    if not pa.types.is_timestamp(t):
-        raise ValueError(
-            f"events.ts has unsupported physical type {t}; expected a parquet "
-            "TIMESTAMP (NANOS or MICROS). Plain integers are ambiguous — "
-            "refusing to guess a unit."
-        )
-    _TS_LAYOUT_CACHE[path] = t
-    return t
+    footer = pq.ParquetDataset(path).schema
+    got = {
+        f.name: f.dataType
+        for f in from_arrow_schema(footer, prefer_timestamp_ntz=True)
+    }
+    want = {f.name: f.dataType for f in SCHEMAS[name]}
+    if name == "events" and "ts" in got:
+        t = footer.field("ts").type
+        if not pa.types.is_timestamp(t):
+            raise ValueError(
+                f"events.ts has unsupported physical type {t}; expected a parquet "
+                "TIMESTAMP (NANOS or MICROS). Plain integers are ambiguous — "
+                "refusing to guess a unit."
+            )
+        got["ts"] = want["ts"]
+    for col in [*want, *sorted(got.keys() - want.keys())]:
+        if got.get(col) != want.get(col):
+            have, decl = (
+                "no such column" if dt is None else dt.simpleString()
+                for dt in (got.get(col), want.get(col))
+            )
+            raise ValueError(f"{name}.{col}: {path} has {have}, SCHEMAS declares {decl}")
+    _FOOTER_CACHE[path] = footer
+    return footer
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan for one fixture table.
+    """Parquet scan for one fixture table, read with ``SCHEMAS[name]``.
 
-    Deliberately does NOT pass ``.schema(...)``: parquet is self-describing
-    and letting Spark use the file footer keeps vectorized reading +
-    filter/column pushdown on the native path. ``SCHEMAS`` is the contract
-    we assert in tests and the schema handed to ``readStream``.
+    The footer is checked against the declared schema once per path
+    (:func:`_checked_footer`), so the read needs no schema-inference job
+    and drift fails here, loudly. The explicit schema keeps vectorized
+    reading and filter/column pushdown.
 
     ``events.ts`` has shipped in two physical layouts across fixture
     generations: parquet TIMESTAMP(NANOS) (which Spark cannot read
     natively — surfaced as raw int64 nanos via ``legacy.parquet.nanosAsLong``)
-    and native TIMESTAMP(MICROS) NTZ. We branch on the FOOTER type read
-    driver-side via pyarrow, so the ``nanosAsLong`` session conf is set
-    only when the fixture genuinely needs it (it is required for Spark to
-    read NANOS files at all, and is read-path-only). Nanos are truncated
-    to µs with integer division — the same truncation DuckDB applies. A
-    non-NTZ decode (e.g. a UTC-adjusted MICROS file, which Spark surfaces
-    as LTZ TimestampType) is cast to TIMESTAMP_NTZ; with the session
-    timezone pinned to UTC this preserves the wall clock DuckDB reads.
-    All paths yield the ``TimestampNTZType`` declared in ``SCHEMAS``.
+    and native TIMESTAMP(MICROS) NTZ. The footer type picks the decode,
+    so the ``nanosAsLong`` session conf is set only when the fixture
+    genuinely needs it (it is required for Spark to read NANOS files at
+    all, and is read-path-only). Nanos are truncated to µs with integer
+    division — the same truncation DuckDB applies. A UTC-adjusted
+    timestamp (which Spark decodes as LTZ TimestampType) is cast to
+    TIMESTAMP_NTZ; with the session timezone pinned to UTC this preserves
+    the wall clock DuckDB reads. All paths yield ``SCHEMAS["events"]``.
     """
-    if name == "events":
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        path = table_path(sf_dir, name)
-        ts_type = _events_ts_layout(path)
-        if ts_type.unit == "ns":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-            # NTZ via pure integer arithmetic — independent of session
-            # timezone, matching the naive wall-clock values DuckDB reads.
-            return df.withColumn(
-                "ts",
-                F.expr(
-                    "timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                ),
-            )
-        df = spark.read.parquet(path)
-        if not isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast(T.TimestampNTZType()))
-        return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    schema = SCHEMAS[name]
+    footer = _checked_footer(path, name)
+    if name != "events":
+        return spark.read.schema(schema).parquet(path)
+    ts_type = footer.field("ts").type
+    if ts_type.unit == "ns":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # NTZ via pure integer arithmetic — independent of session
+        # timezone, matching the naive wall-clock values DuckDB reads.
+        read_ts, ts = T.LongType(), F.expr(
+            "timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+        )
+    elif ts_type.tz is not None:
+        read_ts, ts = T.TimestampType(), F.col("ts").cast(T.TimestampNTZType())
+    else:
+        return spark.read.schema(schema).parquet(path)
+    read_schema = T.StructType(
+        [T.StructField("ts", read_ts) if f.name == "ts" else f for f in schema]
+    )
+    return spark.read.schema(read_schema).parquet(path).withColumn("ts", ts)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -71,12 +71,11 @@ def _doc_grams(
 ) -> DataFrame:
     """(doc_id, is_eval, gram) — distinct 60-bit n-gram hashes per doc
     (default the module's 4-gram order; the n-frontier passes others)."""
-    from ..operators.helpers import fan_out_if_narrow
+    from ..operators.helpers import fan_out
 
-    # fan_out_if_narrow before the gram explode (md5 per n-gram —
-    # guarded explode discipline: shuffle-free once the scan has ample
-    # splits, repartitioned only over the single-split fixture layout).
-    d = fan_out_if_narrow(load_table(spark, sf_dir, "documents"), "doc_id")
+    # fan_out before the gram explode (md5 per n-gram — the explode
+    # discipline).
+    d = fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
     is_eval = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint")
@@ -342,11 +341,11 @@ def decontam_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``substring_span_removal``."""
     from .dedup import positioned_grams, rewrite_excising
 
-    from ..operators.helpers import fan_out_if_narrow
+    from ..operators.helpers import fan_out
 
-    # fan_out_if_narrow before the gram explode (guarded explode
-    # discipline: one md5 per n-gram; only a narrow scan repartitions).
-    d = fan_out_if_narrow(load_table(spark, sf_dir, "documents"), "doc_id")
+    # fan_out before the gram explode (explode discipline: one md5 per
+    # n-gram).
+    d = fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
     is_eval = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("bigint")

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.helpers import fan_out, fan_out_if_narrow, md5_bucket, md5_bucket_sql
+from ..operators.helpers import fan_out, md5_bucket, md5_bucket_sql
 from ..registry import register
 
 # MinHash parameters: k=8 affine hashes mod a Mersenne prime.
@@ -64,14 +64,11 @@ _SHINGLES_SQL = (
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) pairs — distinct 3-token shingles per document.
 
-    ``fan_out_if_narrow`` before the explode: the shingle expansion runs
-    one md5 per 3-gram (~n_tokens per doc), a ~100x CPU amplification of
-    the scanned bytes, so the explode stage must not inherit the scan's
-    split count (one row group at fixture scale = ONE task).  Guarded:
-    with ample scan splits (any real deployment) the plan stays
-    shuffle-free — the scan's natural parallelism carries the per-row
-    CPU and shuffling the text payload would be pure waste (guide §8)."""
-    d = fan_out_if_narrow(load_table(spark, sf_dir, "documents"), "doc_id")
+    ``fan_out`` before the explode: the shingle expansion runs one md5
+    per 3-gram (~n_tokens per doc), a ~100x CPU amplification of the
+    scanned bytes, so the explode stage must not inherit the scan's
+    parallelism (one row group at fixture scale = ONE task)."""
+    d = fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
     return (
         d.select("doc_id", F.split("text", " ").alias("toks"))
         .where(F.size("toks") >= 3)
@@ -112,10 +109,9 @@ _HASHED_SHINGLES_SQL = (
 def _shingled_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle-hash) pairs — distinct 60-bit 3-gram hashes.
 
-    ``fan_out_if_narrow`` before the explode — same guarded
-    CPU-amplification discipline as :func:`_shingled` (one md5 per
-    3-gram; shuffle-free once the scan has ample splits)."""
-    d = fan_out_if_narrow(load_table(spark, sf_dir, "documents"), "doc_id")
+    ``fan_out`` before the explode — same CPU-amplification discipline
+    as :func:`_shingled` (one md5 per 3-gram)."""
+    d = fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
     return (
         d.select("doc_id", F.split("text", " ").alias("toks"))
         .where(F.size("toks") >= 3)
@@ -353,14 +349,13 @@ def minhash_signatures_for(d: DataFrame, carry: tuple[str, ...] = ()) -> DataFra
 def minhash_signatures_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`minhash_signatures_for` over the ``documents`` table.
 
-    ``fan_out_if_narrow`` here in the BATCH wrapper (not in ..._for,
-    which the streaming twins share): the per-row shingle transform runs
-    one md5 per 3-gram plus 8 affine folds — the explode-discipline CPU
+    ``fan_out`` here in the BATCH wrapper (not in ..._for, which the
+    streaming twins share): the per-row shingle transform runs one md5
+    per 3-gram plus 8 affine folds — the explode-discipline CPU
     amplification — while a micro-batch frame is already partitioned by
-    its source and must not pay a per-batch shuffle.  Guarded: with
-    ample scan splits the batch plan is shuffle-free too."""
+    its source and must not pay a per-batch shuffle."""
     return minhash_signatures_for(
-        fan_out_if_narrow(load_table(spark, sf_dir, "documents"), "doc_id")
+        fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
     )
 
 
@@ -561,12 +556,11 @@ _WIDE_TOKEN_HASHES_SQL = (
 def wide_simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit fingerprints for the ``documents`` table.
 
-    ``fan_out_if_narrow`` in the BATCH wrapper (the streaming twin
-    partitions by its source): one md5 per distinct token plus 60
-    bit-sum aggregates is the explode-discipline amplification profile.
-    Guarded: shuffle-free once the scan has ample splits."""
+    ``fan_out`` in the BATCH wrapper (the streaming twin partitions by
+    its source): one md5 per distinct token plus 60 bit-sum aggregates
+    is the explode-discipline amplification profile."""
     return wide_simhash_from(
-        fan_out_if_narrow(load_table(spark, sf_dir, "documents"), "doc_id")
+        fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
     )
 
 
@@ -2760,11 +2754,10 @@ def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH side everywhere.
     """
     d = load_table(spark, sf_dir, "documents")
-    # fan_out_if_narrow before the signature map (guarded explode
-    # discipline, same as minhash_signatures_df / lsh_param_frontier:
-    # shuffle-free once the scan has ample splits).
+    # fan_out before the signature map (explode discipline, same as
+    # minhash_signatures_df / lsh_param_frontier).
     bands = band_table_for(
-        minhash_signatures_for(fan_out_if_narrow(d, "doc_id"))
+        minhash_signatures_for(fan_out(d, "doc_id"))
     ).localCheckpoint(eager=True)
     cand = lsh_candidate_pairs_for(bands)
     exact = ppjoin_pairs_df(spark, sf_dir).select("doc_a", "doc_b")
@@ -2969,10 +2962,9 @@ def lsh_param_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this harness runs on a hash-sampled slice (the exact side is
     the bounded cost), exactly like lsh_recall_vs_exact."""
     d = load_table(spark, sf_dir, "documents")
-    # fan_out_if_narrow before the per-doc signature map (md5 per 3-gram
-    # + 8 affine folds — guarded explode discipline: only the narrow
-    # fixture scan pays the repartition).
-    sig = minhash_signatures_for(fan_out_if_narrow(d, "doc_id")).localCheckpoint(
+    # fan_out before the per-doc signature map (md5 per 3-gram + 8
+    # affine folds — the explode discipline).
+    sig = minhash_signatures_for(fan_out(d, "doc_id")).localCheckpoint(
         eager=True
     )
     exact = (

@@ -897,13 +897,14 @@ def multimodal_curation_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides two Arrow ``mapInPandas`` maps (payload synth + header parse /
     numpy raster stats) — pure maps, as wide as the scan at 100 TB;
     (2) the embedding cell comes from ``cosine_assigned_cells`` — the
-    shuffle-free folded-broadcast argmax (no join key on the corpus
-    side); (3) caption stats are plain column expressions.  The three
-    modalities meet in one equi-join on doc_id and one final aggregate
-    on at most (n_cells x sources) groups, so the only shuffles are the
-    doc_id join and the tiny final groupBy.  Cross-row float aggregation
-    is limited to order-independent MIN/MAX; counted/summed payloads
-    stay integer, so the driver hash is float-order-proof.  Per-doc
+    folded-broadcast argmax (no join key on the corpus side); (3)
+    caption stats are plain column expressions.  The three modalities
+    meet in one equi-join on doc_id and one final aggregate on at most
+    (n_cells x sources) groups, so the only shuffles are the argmax's
+    fan_out, the doc_id join and the tiny final groupBy.  Cross-row
+    float aggregation is limited to order-independent MIN/MAX;
+    counted/summed payloads stay integer, so the driver hash is
+    float-order-proof.  Per-doc
     brightness divides exact integer channel sums identically on both
     engines (same IEEE expression shape)."""
     from .similarity import cosine_assigned_cells

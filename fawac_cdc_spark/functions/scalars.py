@@ -177,16 +177,13 @@ def outlier_filtered_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE array-argument percentile (one sort-based aggregation buffer
     instead of two — ~1.6x faster). At 100 TB swap in ``approxQuantile``
     — same plan shape, bounded memory."""
-    from ..operators.helpers import fan_out_if_narrow
+    from ..operators.helpers import fan_out
 
     li = load_table(spark, sf_dir, "lineitem")
-    # fan_out_if_narrow the exact-percentile input: the sort-based
-    # aggregation buffer otherwise collects every value in the single
-    # fixture scan task (measured 2.01 -> 1.40 s).  Guarded: with ample
-    # scan splits the partial percentile buffers already build per-task
-    # with NO shuffle of raw values — an unconditional repartition would
-    # move the entire projected column for nothing.
-    bounds = fan_out_if_narrow(li.select("l_extendedprice"), "l_extendedprice").agg(
+    # fan_out the exact-percentile input: the sort-based aggregation
+    # buffer otherwise collects every value in the single fixture scan
+    # task (measured 2.01 -> 1.40 s).
+    bounds = fan_out(li.select("l_extendedprice"), "l_extendedprice").agg(
         F.expr("percentile(l_extendedprice, array(0.05, 0.95))").alias("pq")
     ).select(
         F.round(F.element_at("pq", 1), 2).alias("lo"),

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.helpers import fan_out, fan_out_if_narrow
+from ..operators.helpers import fan_out
 from ..registry import register
 
 EMB_DIM = 64
@@ -270,9 +270,8 @@ def cosine_assigned_cells(e: DataFrame, n_cells: int = N_CENTROIDS) -> DataFrame
     their norms hoisted) fold into ONE array-of-structs row via a tiny
     k-row aggregate, that single row broadcasts, and each vector's
     argmax is a sorted-struct expression over the array — so the CORPUS
-    side sees no join key, no window, and — once the input scan has
-    ample splits — NO SHUFFLE (a narrow fixture-layout input pays one
-    slim guarded repartition so the k·d fold runs at full width).  The
+    side sees no join key, no window, and exactly one exchange: the slim
+    explicit-width ``fan_out`` that runs the k·d fold at full width.  The
     previous form (broadcast crossJoin + row_number window) materialized
     n x k rows WITH their embedding payloads and hash-shuffled them on
     vec_id just to take an argmax — k times the corpus bytes through the
@@ -314,17 +313,14 @@ def cosine_assigned_cells(e: DataFrame, n_cells: int = N_CENTROIDS) -> DataFrame
         "'cent_id', c.cent_id))).cent_id"
     )
 
-    # fan_out_if_narrow the corpus side of the broadcast fold: the
-    # argmax costs k x d fused mult-adds per row (~512x the scanned
-    # bytes) and the fixture scan is one split (explode discipline) —
-    # but ONLY a narrow input repartitions: with ample scan splits the
-    # corpus side stays a pure shuffle-free map (the broadcast side is
-    # untouched either way).  Callers feeding a known AQE-coalesced
-    # intermediate (the composed traindata pipeline's semi-join) apply
-    # an unconditional fan_out themselves, which makes the guard here a
-    # no-op — one exchange total.
+    # fan_out the corpus side of the broadcast fold: the argmax costs
+    # k x d fused mult-adds per row (~512x the scanned bytes), so it
+    # must run at full width whether the input is a one-task fixture
+    # scan or an AQE-coalesced intermediate such as the composed
+    # traindata pipeline's semi-join (explode discipline).  The
+    # broadcast side is untouched.
     return (
-        fan_out_if_narrow(
+        fan_out(
             e.select(
                 "vec_id",
                 "embedding",
@@ -529,10 +525,9 @@ def kmeans_refined_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cid"), F.expr(rounded).alias("cvec")
     )
 
-    # fan_out_if_narrow the corpus once: both Lloyd assignment passes
-    # fold k x d mult-adds per row over the single-split fixture scan
-    # (guarded explode discipline — shuffle-free with ample splits).
-    e = fan_out_if_narrow(e, "vec_id")
+    # fan_out the corpus once: both Lloyd assignment passes fold k x d
+    # mult-adds per row (explode discipline).
+    e = fan_out(e, "vec_id")
     a1 = _assign_min_l2(e, init)
 
     # centroid update: per-dim mean over members, rounded — identical
@@ -2636,13 +2631,11 @@ def hopkins_clusterability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probes = rp.unionByName(sp)
     d2 = F.expr(_HOPKINS_D2_SPARK.format(a="pvec", b="embedding"))
-    # fan_out_if_narrow the streamed scan side of the broadcast NLJ:
-    # each corpus row pays 2m 64-dim distance folds (the CPU
-    # amplification the explode discipline names), and the fixture scan
-    # is one split — with ample splits the probe stays shuffle-free.
-
+    # fan_out the streamed scan side of the broadcast NLJ: each corpus
+    # row pays 2m 64-dim distance folds (the CPU amplification the
+    # explode discipline names).
     dmin = (
-        fan_out_if_narrow(e, "vec_id")
+        fan_out(e, "vec_id")
         .crossJoin(F.broadcast(probes))
         .where((F.col("is_real") == 0) | (F.col("vec_id") != F.col("pid")))
         .groupBy("is_real", "pid")

@@ -333,16 +333,13 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluate all windows as one higher-order array expression — same
     fingerprint, embarrassingly parallel. md5-derived hashes keep Spark
     and the oracle bit-identical."""
-    from ..operators.helpers import fan_out_if_narrow
+    from ..operators.helpers import fan_out
 
-    # fan_out_if_narrow: one md5 per CHARACTER position is the heaviest
-    # per-row amplification in the registry, but this is a pure map — the
-    # repartition is load-bearing only when the scan yields fewer splits
-    # than cores (the single-split fixture); with ample splits the guard
-    # leaves the plan shuffle-free.  The hash array is also projected
+    # fan_out: one md5 per CHARACTER position is the heaviest per-row
+    # amplification in the registry.  The hash array is also projected
     # ONCE so the min and the distinct-count read the same evaluation
     # instead of re-running ~|text| md5s per row.
-    d = fan_out_if_narrow(
+    d = fan_out(
         load_table(spark, sf_dir, "documents").where(F.length("text") >= WINNOW_K),
         "doc_id",
     )

@@ -628,17 +628,8 @@ def modern_corpus_stages(
 
     survivors = corpus_survivors(spark, sf_dir).localCheckpoint(eager=True)
     # -- semantic dedup over the survivors' embeddings
-    # Unconditional fan_out here, at the CALL SITE: the semi-join output
-    # is a known AQE-coalesced intermediate (a few MB collapses to ~one
-    # partition), which the scan-split guard inside
-    # cosine_assigned_cells cannot see (pre-AQE width == session shuffle
-    # width, so its fan_out_if_narrow no-ops) — and the k·d assignment
-    # fold downstream is CPU-amplified past its bytes.
-    e = fan_out(
-        load_table(spark, sf_dir, "embeddings").join(
-            survivors.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
-        ),
-        "vec_id",
+    e = load_table(spark, sf_dir, "embeddings").join(
+        survivors.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
     )
     assigned = (
         cosine_assigned_cells(e)

@@ -1833,17 +1833,14 @@ def quantile_loss_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     every per-row loss term and the sum are EXACT decimal arithmetic;
     one double division at the end.  One percentile aggregate + one
     broadcast join back over the scan."""
-    from .helpers import fan_out_if_narrow
+    from .helpers import fan_out
 
     li = load_table(spark, sf_dir, "lineitem")
     p = money("l_extendedprice")
-    # fan_out_if_narrow the exact-percentile input (the
-    # outlier_filtered_totals discipline): the sort-based buffers
-    # otherwise collect every value inside the single fixture scan task
-    # (measured 1.47 -> 1.23 s).  Guarded: with ample scan splits the
-    # grouped partial percentile buffers build per-task with no shuffle
-    # of raw values.
-    q = fan_out_if_narrow(
+    # fan_out the exact-percentile input (the outlier_filtered_totals
+    # discipline): the sort-based buffers otherwise collect every value
+    # inside the single fixture scan task (measured 1.47 -> 1.23 s).
+    q = fan_out(
         li.select("l_returnflag", "l_extendedprice"), "l_extendedprice"
     ).groupBy("l_returnflag").agg(
         F.round(

@@ -124,57 +124,30 @@ def rank_bucket(col: Column | str) -> Column:
 
 
 def fan_out(df, *keys: str):
-    """Explicit-width hash repartition BEFORE a CPU-amplifying explode.
+    """Explicit-width hash repartition BEFORE a CPU-amplifying stage.
 
     The round-15 poisson_bootstrap_ci profile (BASELINE.md) established
     the discipline this helper names: a stage whose per-row CPU is
     k-fold amplified past its input bytes (shingle/n-gram explodes with
-    an md5 per element, replicate explodes, wide ``stack()`` melts) must
-    run at full width even when the scan yields few input splits — the
-    sf fixtures are single-row-group parquet files, so every scan is ONE
-    task, and size-based AQE coalescing cannot see downstream CPU
-    amplification (a column-only repartition of a few-MB grain is
-    coalesced right back to one partition; an explicit count is exempt).
+    an md5 per element, replicate explodes, wide ``stack()`` melts, the
+    k·d cosine argmax, exact-percentile buffers) must run at full width
+    whatever its input's partitioning.  A single-row-group parquet file
+    is read by ONE task however many byte-range splits it has (the
+    split count says nothing about row groups), an AQE-coalesced
+    intermediate collapses to one partition, and size-based coalescing
+    cannot see downstream CPU amplification; an explicit count is
+    exempt from it.  So the repartition is unconditional.
 
     Width: ``defaultParallelism`` — scale-adaptive via the session,
     never a constant.  Keys must be high-cardinality (doc_id, orderkey)
     so the hash spreads evenly.  The shuffle moves only the slim
     pre-explode rows; at 100 TB it is one extra pass of the base grain
     against a k~100x amplified compute stage downstream — and the
-    pipelines this guards all shuffle their exploded stream right after
+    pipelines this serves all shuffle their exploded stream right after
     anyway, so the relative cost stays bounded by ~1/k.
     """
     width = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(width, *[F.col(k) for k in keys])
-
-
-def fan_out_if_narrow(df, *keys: str):
-    """:func:`fan_out`, applied ONLY when the input's physical
-    parallelism is below the fan-out width.
-
-    For a PURE MAP directly over a scan the repartition is load-bearing
-    exactly when the scan yields fewer splits than cores (the
-    single-row-group fixture layout); with ample splits the scan's
-    natural parallelism already carries the per-row CPU and the
-    repartition would move the full payload once for nothing (guide §8:
-    move heavy bytes minimally).  This guard derives the decision from
-    the input's split count — scale-adaptive, never a constant.
-
-    VALIDITY: only apply this helper DIRECTLY over a file scan (or a
-    plain projection/filter of one).  ``df.rdd.getNumPartitions()``
-    reads the PRE-AQE partition count — exact for a scan (AQE never
-    coalesces scan splits) but misleading for a shuffled/coalesced
-    intermediate, where the pre-AQE count is the session shuffle width,
-    not the executed width: the guard would silently no-op on a frame
-    AQE later collapses to one partition.  For a known one-partition
-    checkpoint or AQE-coalesced intermediate use unconditional
-    :func:`fan_out` at the call site instead.  The RDD conversion also
-    costs a driver-side physical planning pass per call — fine at query
-    build time, not inside per-round loops.
-    """
-    if df.rdd.getNumPartitions() >= df.sparkSession.sparkContext.defaultParallelism:
-        return df
-    return fan_out(df, *keys)
 
 
 def one_row_audit(

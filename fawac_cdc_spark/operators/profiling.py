@@ -98,19 +98,17 @@ def table_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, melted to 11 rows and broadcast-joined back.  The plan
     is pinned Expand-free in ``tests/test_plans.py``.
     """
-    from .helpers import fan_out_if_narrow
+    from .helpers import fan_out
 
     li = load_table(spark, sf_dir, "lineitem")
     k = len(PROFILE_COLS)
 
     melt_args = ", ".join(f"'{c}', cast({c} as string)" for c, _ in PROFILE_COLS)
-    # fan_out_if_narrow before the stack() melt (the depth-histogram
-    # discipline, round-15): the melt amplifies per-row work k-fold (one
-    # string cast per profiled column) over a single-split fixture scan.
-    # Guarded: with ample scan splits the repartition would move all 11
-    # profiled columns once for nothing.
+    # fan_out before the stack() melt (the depth-histogram discipline,
+    # round-15): the melt amplifies per-row work k-fold (one string cast
+    # per profiled column).
     counts = (
-        fan_out_if_narrow(li, "l_orderkey", "l_linenumber")
+        fan_out(li, "l_orderkey", "l_linenumber")
         .selectExpr(f"stack({k}, {melt_args}) as (col_name, sval)")
         .groupBy("col_name", "sval")
         .agg(F.count(F.lit(1)).alias("cnt"))

@@ -224,12 +224,15 @@ def read_upsert_state(
     """Read a committed snapshot (A33 restore semantics): resolve the
     manifest — newest by default, or any committed epoch via ``version``
     (time travel; data files are immutable, so every historical manifest
-    stays readable until its epochs are vacuumed)."""
+    stays readable until its epochs are vacuumed).  State rows are
+    ``SCHEMAS["events"]`` rows, read with that schema (no inference job);
+    a snapshot written from a narrower frame reads back its missing
+    columns as NULL."""
     buckets = _read_manifest(state_dir, version)
     if not buckets:
         return None
     paths = [os.path.join(state_dir, rel) for rel in buckets.values()]
-    return spark.read.parquet(*paths)
+    return spark.read.schema(SCHEMAS["events"]).parquet(*paths)
 
 
 def write_state_snapshot(df: DataFrame, state_dir: str, epoch_id: int) -> None:
@@ -309,8 +312,10 @@ def cdc_upsert_run(
         ]
         merged = batch
         if prev_paths:
-            prev = sess.read.parquet(*prev_paths).withColumn(
-                "bucket", _bucket_col()
+            prev = (
+                sess.read.schema(SCHEMAS["events"])
+                .parquet(*prev_paths)
+                .withColumn("bucket", _bucket_col())
             )
             merged = prev.unionByName(batch)
         epoch_rel = f"data/e{epoch_id}"

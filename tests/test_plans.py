@@ -605,14 +605,13 @@ def test_incremental_semantic_probe_is_equi_join(spark, sf_dir):
 def test_cell_assignment_is_shuffle_free(spark, sf_dir):
     """The IVF/SemDeDup cell assignment is a pure map over the
     embeddings input: the k centroids fold into one broadcast array
-    row, so the corpus side crosses NO window and — once the input has
-    ample splits — NO hashpartitioning exchange (the former crossJoin +
-    row_number form pushed k times the corpus bytes through a shuffle
-    just to take an argmax).  A NARROW input (the single-row-group
-    fixture scan) pays exactly one guarded explicit-width repartition
-    (``fan_out_if_narrow``) so the k·d argmax fold runs at full width;
-    REPARTITION_BY_NUM marks the guard, ENSURE_REQUIREMENTS exchanges
-    stay banned either way."""
+    row, so the corpus side crosses NO window and NO requirement-driven
+    hashpartitioning exchange (the former crossJoin + row_number form
+    pushed k times the corpus bytes through a shuffle just to take an
+    argmax).  Its one exchange is the explicit-width ``fan_out``
+    (REPARTITION_BY_NUM) that runs the k·d argmax fold at full width,
+    whatever the input's partitioning; ENSURE_REQUIREMENTS exchanges
+    stay banned."""
     from pyspark.sql import functions as F
 
     from fawac_cdc_spark.catalog import load_table
@@ -623,7 +622,7 @@ def test_cell_assignment_is_shuffle_free(spark, sf_dir):
             df._jdf.queryExecution(), "formatted"
         )
 
-    # narrow fixture scan: exactly ONE exchange, and it is the guard's
+    # fixture scan: exactly ONE exchange, and it is the fan-out's
     # explicit-count repartition, not a requirement-driven shuffle
     plan = fmt(cosine_assigned_cells(load_table(spark, sf_dir, "embeddings")))
     ex = _hash_exchanges(plan)
@@ -633,8 +632,8 @@ def test_cell_assignment_is_shuffle_free(spark, sf_dir):
     # (formatted explain prints each node twice: tree line + detail block)
     assert plan.count("BroadcastNestedLoopJoin") == 2
 
-    # already-wide input (>= fan-out width splits): the 100 TB contract —
-    # the corpus side is a genuinely shuffle-free map
+    # already-wide input (>= fan-out width partitions): the same one
+    # explicit-count repartition, still no requirement-driven shuffle
     width = spark.sparkContext.defaultParallelism
     wide = spark.range(0, 512, 1, width).select(
         F.col("id").alias("vec_id"),
@@ -644,8 +643,34 @@ def test_cell_assignment_is_shuffle_free(spark, sf_dir):
         ).alias("embedding"),
     )
     wide_plan = fmt(cosine_assigned_cells(wide))
-    assert not _hash_exchanges(wide_plan), _hash_exchanges(wide_plan)
+    wide_ex = _hash_exchanges(wide_plan)
+    assert len(wide_ex) == 1 and "REPARTITION_BY_NUM" in wide_ex[0], wide_ex
     assert "Window" not in wide_plan
+
+
+def test_cell_assignment_fans_out_shuffled_semi_join(spark, sf_dir):
+    """A shuffled intermediate fed to ``cosine_assigned_cells`` (here a
+    semi-join over a round-robin-repartitioned corpus) still gets
+    exactly one explicit-width repartition on vec_id before the k·d
+    argmax fold.  A split-count guard skipped it: the input already
+    had as many partitions as the fan-out width."""
+    from pyspark.sql import functions as F
+
+    from fawac_cdc_spark.catalog import load_table
+    from fawac_cdc_spark.functions.similarity import cosine_assigned_cells
+
+    width = spark.sparkContext.defaultParallelism
+    e = load_table(spark, sf_dir, "embeddings")
+    keep = load_table(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("vec_id")
+    ).where(F.col("vec_id") % 3 != 0)
+    semi = e.repartition(width).join(keep, "vec_id", "left_semi")
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        cosine_assigned_cells(semi)._jdf.queryExecution(), "formatted"
+    )
+    fanned = [x for x in _hash_exchanges(plan) if "REPARTITION_BY_NUM" in x]
+    assert len(fanned) == 1 and "hashpartitioning(vec_id" in fanned[0], fanned
+    assert f", {width})" in fanned[0], fanned
 
 
 def test_mixture_materialization_is_map_plus_aggregate(spark, sf_dir):
@@ -1554,56 +1579,18 @@ def test_l_moments_windows_are_bucket_blocked(spark, sf_dir):
         assert "bucket" in line, line
 
 
-def test_fan_out_width_and_conditional_guard(spark):
+def test_fan_out_width_and_multiset(spark):
     """Round-15 optimization internals: ``helpers.fan_out`` repartitions
-    to ``defaultParallelism`` (explicit count — AQE-coalesce-exempt), and
-    ``helpers.fan_out_if_narrow`` is a NO-OP when the input already has
-    at least that many partitions (pure-map-over-scan guard: at scale
-    the plan stays shuffle-free)."""
+    to ``defaultParallelism`` (explicit count — AQE-coalesce-exempt) and
+    moves rows without changing them."""
     from pyspark.sql import functions as F
 
-    from fawac_cdc_spark.operators.helpers import fan_out, fan_out_if_narrow
+    from fawac_cdc_spark.operators.helpers import fan_out
 
     width = spark.sparkContext.defaultParallelism
     narrow = spark.range(0, 1000, 1, 1).select(F.col("id").alias("k"))
-    wide = spark.range(0, 1000, 1, width).select(F.col("id").alias("k"))
 
     assert fan_out(narrow, "k").rdd.getNumPartitions() == width
-    assert fan_out_if_narrow(narrow, "k").rdd.getNumPartitions() == width
-    # already-wide input: the guard must leave the plan untouched
-    guarded = fan_out_if_narrow(wide, "k")
-    assert "Exchange" not in guarded._jdf.queryExecution().executedPlan().toString()
     # values are a pure repartition: identical multiset
     a = sorted(r["k"] for r in fan_out(narrow, "k").collect())
     assert a == list(range(1000))
-
-
-def test_fan_out_if_narrow_scan_direct(spark, tmp_path):
-    """The guard's 100 TB contract on REAL file scans (VERDICT r15 #2):
-    a parquet scan with >= width splits keeps a fully shuffle-free plan
-    (the helper must no-op), while a single-file narrow scan pays
-    exactly the one explicit-count repartition."""
-    from pyspark.sql import functions as F
-
-    from fawac_cdc_spark.operators.helpers import fan_out_if_narrow
-
-    width = spark.sparkContext.defaultParallelism
-    base = spark.range(0, 10_000).select(F.col("id").alias("k"))
-
-    wide_dir = str(tmp_path / "wide_scan")
-    base.repartition(width).write.parquet(wide_dir)
-    wide_scan = spark.read.parquet(wide_dir)
-    assert wide_scan.rdd.getNumPartitions() >= width  # sanity: multi-split
-    guarded = fan_out_if_narrow(wide_scan, "k")
-    assert "Exchange" not in guarded._jdf.queryExecution().executedPlan().toString()
-
-    narrow_dir = str(tmp_path / "narrow_scan")
-    base.coalesce(1).write.parquet(narrow_dir)
-    narrow_scan = spark.read.parquet(narrow_dir)
-    fanned = fan_out_if_narrow(narrow_scan, "k")
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        fanned._jdf.queryExecution(), "formatted"
-    )
-    ex = re.findall(r"Arguments: hashpartitioning\([^\n]*", plan)
-    assert len(ex) == 1 and "REPARTITION_BY_NUM" in ex[0], ex
-    assert fanned.rdd.getNumPartitions() == width

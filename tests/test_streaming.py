@@ -12,7 +12,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from fawac_cdc_spark.catalog import load_table
+from fawac_cdc_spark.catalog import SCHEMAS, load_table
 from fawac_cdc_spark.streaming import cdc
 from fawac_cdc_spark.streaming.batch_equiv import (
     cdc_latest_state_per_user,
@@ -504,11 +504,10 @@ def test_snapshot_time_travel(spark, chunk_dir, tmp_path):
 
     files = sorted(glob.glob(f"{chunk_dir}/*.parquet"))
     mid = versions[1]
-    got = (
-        cdc.read_upsert_state(spark, str(tmp_path / "state"), version=mid)
-        .select("user_id", "ts", "event_type", "value", "event_id")
-        .toPandas()
-    )
+    state = cdc.read_upsert_state(spark, str(tmp_path / "state"), version=mid)
+    # state rows are read with the declared events schema, not inferred
+    assert state.schema == SCHEMAS["events"]
+    got = state.select("user_id", "ts", "event_type", "value", "event_id").toPandas()
     want = (
         pd.concat([pd.read_parquet(f) for f in files[:2]])
         .sort_values(["ts", "event_id"])

@@ -93,7 +93,7 @@ def build_fixtures(spark, sf_dir: str, out: str) -> dict[int, str]:
                 "source",
                 "k",
             )
-            .withColumn("n_chars", F.length("text").cast("int"))
+            .withColumn("n_chars", F.length("text").cast("long"))
             .drop("k")
             .select("doc_id", "text", "lang", "source", "n_chars")
         )
