@@ -36,21 +36,6 @@ def money(col: Column | str) -> Column:
     return _c(col).cast(MONEY)
 
 
-def dmoney_sql(col: str) -> str:
-    """DuckDB-side equivalent of :func:`money`."""
-    return f"CAST({col} AS DECIMAL(18,2))"
-
-
-def sum_money_as_double(col: Column | str) -> Column:
-    """Exact decimal sum surfaced as double (bit-identical across engines)."""
-    return F.sum(money(col)).cast("double")
-
-
-def avg_money_as_double(col: Column | str) -> Column:
-    """Exact average: decimal sum cast to double, divided by count."""
-    return F.sum(money(col)).cast("double") / F.count(F.lit(1))
-
-
 def md5_int32(col: Column | str, prefix_len: int = 8) -> Column:
     """First ``prefix_len`` hex chars of md5 as a non-negative bigint.
 

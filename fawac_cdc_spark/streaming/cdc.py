@@ -9,9 +9,20 @@ Reference anchors:
 - micro-batch orchestration (``fawac.py:521-551`` — A32) → trigger loop
 - EWMA soft target update (``fawac.py:15-17`` — A17) →
   ``ewma_target_stream_gs``
-- episode accumulation (``fawac.py:597-611`` — A35) → ``session_window``
+- episode accumulation (``fawac.py:597-611`` — A35) → ``session_window``,
+  ``capped_totals_stream``, ``session_close_stream``
+- per-key fold-then-emit recurrences (A17, A35) → ``_keyed_scan``
 - checkpoint serialize/restore (``fawac.py:555-583`` — A33) → versioned
   snapshot state dirs + streaming checkpointLocation
+
+The timeout-free stateful operators (EWMA, capped totals, user profile,
+quality-aware LSH gate, Holt, Holt–Winters, Page–Hinkley) are step
+functions on ONE keyed scan, ``_keyed_scan``: it owns the
+``applyInPandasWithState`` call, the state restore, the drain-then-sort
+of a group's rows and the schema-typed output frame.  The dispersion
+moments are associative, so they are a native streaming aggregation
+with no Python worker.  Operators with event-time timeouts (session
+close, the watermarked gates) keep their own calls.
 
 Scale notes: every pipeline keys its state by user_id/event_type so the
 state store partitions horizontally; watermarks bound state size; the
@@ -45,6 +56,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..catalog import SCHEMAS
 from ..operators.helpers import money
@@ -289,8 +301,20 @@ def cdc_upsert_run(
 
     A replayed epoch whose manifest is already committed (the manifest
     landed, Spark's commit log did not) is a no-op: its data files are
-    immutable and the manifest already references them.
+    immutable and the manifest already references them.  That same rule
+    would silently skip a NEW feed's first batches if a fresh checkpoint
+    (epoch ids restart at 0) were pointed at a state dir that already
+    holds commits, so that pairing is refused before any Spark job.
     """
+    offsets = os.path.join(checkpoint_dir, "offsets")
+    started = os.path.isdir(offsets) and any(n.isdigit() for n in os.listdir(offsets))
+    if not started and _state_versions(state_dir):
+        raise ValueError(
+            f"checkpoint {checkpoint_dir} has no offsets but state dir "
+            f"{state_dir} already holds committed epochs; a fresh checkpoint "
+            "would replay over them — resume with the checkpoint that wrote "
+            "them, or start a new state dir"
+        )
     events = read_event_stream(spark, source_dir)
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
@@ -347,11 +371,80 @@ def cdc_upsert_run(
     )
 
 
-# --- A17 EWMA as a stateful operator (applyInPandasWithState) -------------
+# --- keyed scans: the one shape of the timeout-free stateful operators -----
 #
-# The EWMA target lives in per-key state inside the state store
-# (partitioned by event_type, checkpointed), updated through
-# applyInPandasWithState — no driver round-trip, any key cardinality.
+# Every per-key recurrence below has one shape, the reference's per-key
+# folds (``soft_update``, ``fawac.py:15-17``, A17; ``rollout``,
+# ``fawac.py:597-611``, A35): restore the key's state, fold this
+# micro-batch's rows into it in a fixed order, store it, emit.
+# ``_keyed_scan`` owns that shape and the ``applyInPandasWithState``
+# call; an operator supplies its step function, initial state, row
+# order and schemas.  State lives in the state store, partitioned by the
+# key and checkpointed — state never leaves the executors, any key
+# cardinality.
+
+_PANDAS_DTYPES = {
+    T.LongType: "int64",
+    T.IntegerType: "int32",
+    T.DoubleType: "float64",
+    T.BooleanType: "bool",
+}
+
+
+def _frame(rows: list[tuple], schema: T.StructType) -> pd.DataFrame:
+    """Output tuples (in ``schema`` field order) as a pandas frame whose
+    dtypes follow ``schema`` — also when ``rows`` is empty, so a group
+    that emits nothing still matches the output StructType."""
+    return pd.DataFrame(rows, columns=schema.names).astype(
+        {f.name: _PANDAS_DTYPES.get(type(f.dataType), "object") for f in schema}
+    )
+
+
+def _scan_group(out_schema: T.StructType, init: tuple, step, order):
+    """The per-group function ``_keyed_scan`` hands to Spark.  It drains
+    ALL of the group's Arrow chunks before sorting: a group larger than
+    ``arrow.maxRecordsPerBatch`` arrives as several chunks, and a
+    per-chunk sort would fold its rows out of order."""
+
+    def scan(key, pdf_iter, state):
+        pdf = pd.concat(list(pdf_iter), ignore_index=True)
+        if order:
+            pdf = pdf.sort_values(order, kind="stable", ignore_index=True)
+        new_state, rows = step(key, state.get if state.exists else init, pdf)
+        state.update(new_state)
+        yield _frame(rows, out_schema)
+
+    return scan
+
+
+def _keyed_scan(
+    df: DataFrame,
+    keys: list[str],
+    state_schema: T.StructType,
+    out_schema: T.StructType,
+    init: tuple,
+    step,
+    order: list[str] | None = None,
+) -> DataFrame:
+    """Fold each key's rows into a small state and emit, as one
+    ``applyInPandasWithState`` operator in update mode without timeouts.
+
+    ``step(key, state, pdf) -> (new_state, rows)``: ``state`` is the
+    key's stored tuple, or ``init`` for a new key (shared by every new
+    key, so a step builds new values instead of mutating it); ``pdf`` is
+    all of the key's rows in this micro-batch, sorted by ``order`` when
+    given; ``rows`` are output tuples in ``out_schema`` field order,
+    possibly none."""
+    return df.groupBy(*keys).applyInPandasWithState(
+        _scan_group(out_schema, init, step, order),
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+# --- A17 EWMA soft update in keyed state ------------------------------------
 
 EWMA_OUTPUT_SCHEMA = T.StructType(
     [
@@ -376,35 +469,15 @@ def ewma_target_stream_gs(events: DataFrame, tau: float = 0.1) -> DataFrame:
     (tests/test_streaming.py pins it against that replay and against the
     registered ``ewma_state_batch_equiv`` fold).
     """
-    import pandas as pd
 
-    def update(key, pdf_iter, state):
-        cents = 0
-        n = 0
-        for pdf in pdf_iter:
-            cents += int(pdf["value"].map(_money_cents).sum())
-            n += len(pdf)
-        if n == 0:
-            return
-        mean = (cents / 100.0) / n
-        if state.exists:
-            prev_target, prev_batches = state.get
-            target, batches = (1 - tau) * prev_target + tau * mean, prev_batches + 1
-        else:
-            target, batches = mean, 1
-        state.update((target, batches))
-        yield pd.DataFrame(
-            {"event_type": [key[0]], "target": [target], "n_batches": [batches]}
-        )
+    def step(key, st, pdf):
+        target, batches = st
+        mean = (int(pdf["value"].map(_money_cents).sum()) / 100.0) / len(pdf)
+        target = mean if batches == 0 else (1 - tau) * target + tau * mean
+        return (target, batches + 1), [(key[0], target, batches + 1)]
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        events, ["event_type"], EWMA_STATE_SCHEMA, EWMA_OUTPUT_SCHEMA, (0.0, 0), step
     )
 
 
@@ -432,7 +505,7 @@ def sliding_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> Data
     )
 
 
-# --- A35 as a custom stateful operator (applyInPandasWithState) ------------
+# --- A35 as a custom stateful operator (keyed scan) ------------------------
 
 CAP_TOTAL_CENTS = 1000 * 100  # mirror batch_equiv.CAP_TOTAL in integer cents
 
@@ -456,47 +529,32 @@ def capped_totals_stream(events: DataFrame) -> DataFrame:
     """The reference's episode rollout (``rollout``, ``fawac.py:597-611``,
     A35) as a *custom stateful streaming operator*: per-user running
     accumulation with permanent early stop once the total reaches the cap
-    (crossing event included), via ``applyInPandasWithState``.
+    (crossing event included).
 
     State per key is three scalars (integer cents — exact — plus a count
     and the stop flag), so the state store stays tiny and partitions by
-    user. Arrow moves each group's micro-batch rows in one batch; rows are
-    re-sorted by (ts, event_id) inside the batch because intra-batch file
-    order is not guaranteed, while cross-batch order is the arrival order
-    of the CDC feed (batch equiv: capped_user_totals)."""
-    import pandas as pd
+    user.  Each micro-batch's rows fold in (ts, event_id) order, because
+    intra-batch file order is not guaranteed, while cross-batch order is
+    the arrival order of the CDC feed (batch equiv: capped_user_totals)."""
 
-    def accumulate(key, pdf_iter, state):
-        (user_id,) = key
-        total_cents, n, stopped = state.get if state.exists else (0, 0, False)
-        for pdf in pdf_iter:
+    def step(key, st, pdf):
+        total_cents, n, stopped = st
+        for v in pdf["value"]:
             if stopped:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for v in pdf["value"]:
-                if stopped:
-                    break
-                total_cents += _money_cents(v)
-                n += 1
-                if total_cents >= CAP_TOTAL_CENTS:
-                    stopped = True
-        state.update((total_cents, n, stopped))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n],
-                "total_value": [total_cents / 100.0],
-            }
-        )
+                break
+            total_cents += _money_cents(v)
+            n += 1
+            stopped = total_cents >= CAP_TOTAL_CENTS
+        return (total_cents, n, stopped), [(key[0], n, total_cents / 100.0)]
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        accumulate,
-        outputStructType=CAPPED_OUTPUT_SCHEMA,
-        stateStructType=CAPPED_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        events,
+        ["user_id"],
+        CAPPED_STATE_SCHEMA,
+        CAPPED_OUTPUT_SCHEMA,
+        (0, 0, False),
+        step,
+        order=["ts", "event_id"],
     )
 
 
@@ -706,8 +764,6 @@ def session_close_stream(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> D
         state.update((start_us, last_us, n, cents))
         state.setTimeoutTimestamp(last_us // 1000 + gap_ms)
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     return (
         _with_event_time(events)
         .withWatermark("ts_ltz", "0 seconds")
@@ -722,7 +778,7 @@ def session_close_stream(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> D
     )
 
 
-# --- composite per-user profile state (applyInPandasWithState) -------------
+# --- composite per-user profile state (keyed scan) ------------------------
 
 PROFILE_TOP_K = 3
 
@@ -746,49 +802,40 @@ PROFILE_STATE_SCHEMA = T.StructType(
 
 
 def stateful_user_profile_stream(events: DataFrame) -> DataFrame:
-    """Running per-user profile on ``applyInPandasWithState`` with a
-    COMPOSITE state row: the running top-{PROFILE_TOP_K} purchase
-    values, the event count per type, and an emission number
-    (``upd_seq``) so consumers can identify the newest row in update
-    mode.  The state partitions by user like every keyed pipeline; the
-    top-k list is bounded and the per-type counts are bounded by the
-    event-type domain, so state size is O(1) per user regardless of
-    stream length.
+    """Running per-user profile as a keyed scan with a COMPOSITE state
+    row: the running top-{PROFILE_TOP_K} purchase values, the event
+    count per type, and an emission number (``upd_seq``) so consumers
+    can identify the newest row in update mode.  The state partitions by
+    user like every keyed pipeline; the top-k list is bounded and the
+    per-type counts are bounded by the event-type domain, so state size
+    is O(1) per user regardless of stream length.
 
     Batch equivalence: the final emission per user equals the one-shot
     batch profile (top-k purchase values, distinct type count, total
     events) — pinned in tests/test_streaming.py."""
 
-    def profile(key, pdf_iter, state):
-        (user_id,) = key
-        top, types, counts, seq = state.get if state.exists else ([], [], [], 0)
+    def step(key, st, pdf):
+        top, types, counts, seq = st
         type_counts = dict(zip(types, counts))
-        for pdf in pdf_iter:
-            for et, v in zip(pdf["event_type"], pdf["value"]):
-                type_counts[et] = type_counts.get(et, 0) + 1
-                if et == "purchase":
-                    top.append(float(v))
+        top = list(top)
+        for et, v in zip(pdf["event_type"], pdf["value"]):
+            type_counts[et] = type_counts.get(et, 0) + 1
+            if et == "purchase":
+                top.append(float(v))
         top = sorted(top, reverse=True)[:PROFILE_TOP_K]
         seq += 1
-        state.update((top, list(type_counts), list(type_counts.values()), seq))
-        yield pd.DataFrame(
-            {
-                "user_id": pd.Series([user_id], dtype="int64"),
-                "upd_seq": pd.Series([seq], dtype="int64"),
-                "top_purchases": [top],
-                "n_types": pd.Series([len(type_counts)], dtype="int32"),
-                "n_total": pd.Series([sum(type_counts.values())], dtype="int64"),
-            }
-        )
+        n_types, n_total = len(type_counts), sum(type_counts.values())
+        return (top, list(type_counts), list(type_counts.values()), seq), [
+            (key[0], seq, top, n_types, n_total)
+        ]
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        profile,
-        outputStructType=PROFILE_OUTPUT_SCHEMA,
-        stateStructType=PROFILE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        events,
+        ["user_id"],
+        PROFILE_STATE_SCHEMA,
+        PROFILE_OUTPUT_SCHEMA,
+        ([], [], [], 0),
+        step,
     )
 
 
@@ -844,8 +891,6 @@ def quality_lsh_dedup_stream(docs: DataFrame) -> DataFrame:
     replay converges in state but emits first-arrival verdicts (there
     is no watermarked form of this gate).  State is two scalars per
     live band key, partitioned by the uniform md5-derived key."""
-    import pandas as pd
-
     from ..functions.dedup import band_table_for, minhash_signatures_for
     from ..functions.text import uniq_ratio_col
 
@@ -856,48 +901,25 @@ def quality_lsh_dedup_stream(docs: DataFrame) -> DataFrame:
         minhash_signatures_for(qdocs, carry=("q",)), carry=("q",)
     )
 
-    def admit(key, pdf_iter, state):
+    def step(key, st, pdf):
         band, band_key = key
-        best_doc, best_q = (state.get[0], state.get[1]) if state.exists else (
-            None,
-            None,
-        )
-        # Drain ALL Arrow chunks before sorting: a group larger than
-        # arrow.maxRecordsPerBatch arrives as several chunks, and sorting
-        # per chunk would let a later-chunk smaller id slip past an
-        # earlier-chunk larger one.
-        rows = sorted(
-            ((int(r.doc_id), float(r.q)) for pdf in pdf_iter for r in pdf.itertuples()),
-        )
-        out: list[tuple[int, float, bool]] = []
-        for d, qv in rows:
-            better = (
-                best_doc is None
-                or qv > best_q
-                or (qv == best_q and d < best_doc)
-            )
+        best_doc, best_q = st
+        rows = []
+        for d, qv in zip(pdf["doc_id"].tolist(), pdf["q"].tolist()):
+            better = best_doc is None or qv > best_q or (qv == best_q and d < best_doc)
             if better:
                 best_doc, best_q = d, qv
-            out.append((d, qv, better))
-        state.update((best_doc, best_q))
-        yield pd.DataFrame(
-            {
-                "doc_id": [d for d, _, _ in out],
-                "band": [band] * len(out),
-                "key": [band_key] * len(out),
-                "q": [qv for _, qv, _ in out],
-                "key_ok": [ok for _, _, ok in out],
-            }
-        )
+            rows.append((d, band, band_key, qv, better))
+        return (best_doc, best_q), rows
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bands.groupBy("band", "key").applyInPandasWithState(
-        admit,
-        outputStructType=QUALITY_LSH_OUTPUT_SCHEMA,
-        stateStructType=QUALITY_LSH_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        bands,
+        ["band", "key"],
+        QUALITY_LSH_STATE_SCHEMA,
+        QUALITY_LSH_OUTPUT_SCHEMA,
+        (None, None),
+        step,
+        order=["doc_id"],
     )
 
 
@@ -1025,8 +1047,6 @@ def lsh_dedup_stream_watermarked(
     standard completeness/latency trade.  Verdicts for a doc can land
     in different micro-batches per band key; the per-doc admission
     reduction (AND over keys) is unchanged."""
-    import pandas as pd
-
     from ..functions.dedup import band_table_for, minhash_signatures_for
 
     wdocs = docs.withWatermark("ingest_ts", delay)
@@ -1038,26 +1058,15 @@ def lsh_dedup_stream_watermarked(
         band, band_key = key
         first = state.get[0] if state.exists else -1
         mature, pend = _release_matured(state, pdf_iter, ("doc_id",))
-        out_docs: list[int] = []
-        out_ok: list[bool] = []
+        rows = []
         for _, d in mature:
             ok = first < 0 or d < first
             if ok:
                 first = d
-            out_docs.append(d)
-            out_ok.append(ok)
+            rows.append((d, band, band_key, ok))
         state.update((first, pend))
-        if out_docs:
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_docs,
-                    "band": [band] * len(out_docs),
-                    "key": [band_key] * len(out_docs),
-                    "key_ok": out_ok,
-                }
-            )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
+        if rows:
+            yield _frame(rows, LSH_DEDUP_OUTPUT_SCHEMA)
 
     return bands.groupBy("band", "key").applyInPandasWithState(
         admit,
@@ -1199,8 +1208,7 @@ def semantic_dedup_stream_watermarked(
         mat[:n_prior] = prior
         nrm = np.empty(n_prior + n_new)
         nrm[:n_prior] = prior_nrm
-        out_ids: list[int] = []
-        out_n: list[int] = []
+        rows = []
         for j, (_, vid, vec) in enumerate(mature):
             seen = n_prior + j
             vec = np.asarray(vec, dtype=np.float64)
@@ -1210,23 +1218,13 @@ def semantic_dedup_stream_watermarked(
                 n_dups = int((cos >= SEMDEDUP_COS).sum())
             else:
                 n_dups = 0
-            out_ids.append(vid)
-            out_n.append(n_dups)
+            rows.append((vid, cent_id, n_dups, n_dups == 0))
             ids.append(vid)
             mat[seen] = vec
             nrm[seen] = vnrm
         state.update((ids, mat.reshape(-1).tolist(), nrm.tolist(), pend))
-        if out_ids:
-            yield pd.DataFrame(
-                {
-                    "vec_id": pd.Series(out_ids, dtype="int64"),
-                    "cent_id": pd.Series([cent_id] * len(out_ids), dtype="int64"),
-                    "n_earlier_dups": pd.Series(out_n, dtype="int64"),
-                    "admitted": [n == 0 for n in out_n],
-                }
-            )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
+        if rows:
+            yield _frame(rows, SEM_DEDUP_OUTPUT_SCHEMA)
 
     return routed.groupBy("cent_id").applyInPandasWithState(
         admit,
@@ -1312,26 +1310,13 @@ def token_budget_stream_watermarked(
         mature, pend = _release_matured(
             state, pdf_iter, ("ord_key", "doc_id", "ntok")
         )
-        out_doc: list[int] = []
-        out_ntok: list[int] = []
-        out_ok: list[bool] = []
+        rows = []
         for _, _, doc_id, ntok in mature:
             seen += ntok
-            out_doc.append(doc_id)
-            out_ntok.append(ntok)
-            out_ok.append(seen <= TOKEN_BUDGET_PER_SOURCE)
+            rows.append((doc_id, source, ntok, seen <= TOKEN_BUDGET_PER_SOURCE))
         state.update((seen, pend))
-        if out_doc:
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_doc,
-                    "source": [source] * len(out_doc),
-                    "ntok": out_ntok,
-                    "admitted": out_ok,
-                }
-            )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
+        if rows:
+            yield _frame(rows, TOKEN_BUDGET_OUTPUT_SCHEMA)
 
     return keyed.groupBy("source").applyInPandasWithState(
         admit,
@@ -1413,21 +1398,13 @@ def span_dedup_stream_watermarked(
     def probe(key, pdf_iter, state):
         first = state.get[0] if state.exists else -1
         mature, pend = _release_matured(state, pdf_iter, ("doc_id", "i"))
-        out_d: list[int] = []
-        out_i: list[int] = []
-        out_dup: list[bool] = []
+        rows = []
         for _, d, i in mature:
-            out_d.append(d)
-            out_i.append(i)
-            out_dup.append(first >= 0 and first < d)
+            rows.append((d, i, first >= 0 and first < d))
             first = d if first < 0 else min(first, d)
         state.update((first, pend))
-        if out_d:
-            yield pd.DataFrame(
-                {"doc_id": out_d, "i": out_i, "dup": out_dup}
-            ).astype({"doc_id": "int64", "i": "int32", "dup": "bool"})
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
+        if rows:
+            yield _frame(rows, SPAN_DEDUP_OUTPUT_SCHEMA)
 
     return grams.groupBy("gram").applyInPandasWithState(
         probe,
@@ -1486,9 +1463,10 @@ HOLT_STATE_SCHEMA = T.StructType(
 
 def holt_stream(events: DataFrame) -> DataFrame:
     """Holt double-exponential smoothing ON INGEST — the streaming twin
-    of ``operators.windows.holt_smoothed_values``: per-user (level,
-    trend, rn) live in keyed state, each arriving event advances the
-    recurrence once and emits its smoothed row.  Same a=b=0.5 arithmetic
+    of ``operators.windows.holt_smoothed_values`` as a keyed scan:
+    per-user (level, trend, rn) live in keyed state, each event, in
+    (ts, event_id) order within its micro-batch, advances the recurrence
+    once and emits its smoothed row.  Same a=b=0.5 arithmetic
     (every multiply exact) and the same round(6)-after-1e-9-nudge as the
     batch scan, so under ts-ordered ingest stream == batch exactly
     (pinned in tests/test_streaming.py).
@@ -1497,20 +1475,12 @@ def holt_stream(events: DataFrame) -> DataFrame:
     user.  Events beyond the 30-event prefix are consumed (state counts
     them) but emit nothing, matching the batch prefix contract.
     """
-    import pandas as pd
-
     from ..operators.windows import _HOLT_PREFIX, HOLT_ALPHA, HOLT_BETA
 
-    def advance(key, pdf_iter, state):
-        (user_id,) = key
-        level, trend, rn = state.get if state.exists else (0.0, 0.0, 0)
-        rows = sorted(
-            (r.ts, int(r.event_id), float(r.value))
-            for pdf in pdf_iter
-            for r in pdf.itertuples()
-        )
-        out = {"event_id": [], "rn": [], "level": [], "trend": [], "forecast": []}
-        for _, eid, x in rows:
+    def step(key, st, pdf):
+        level, trend, rn = st
+        rows = []
+        for eid, x in zip(pdf["event_id"].tolist(), pdf["value"].tolist()):
             rn += 1
             if rn > _HOLT_PREFIX:
                 continue
@@ -1520,40 +1490,26 @@ def holt_stream(events: DataFrame) -> DataFrame:
                 new_level = HOLT_ALPHA * x + (1.0 - HOLT_ALPHA) * (level + trend)
                 trend = HOLT_BETA * (new_level - level) + (1.0 - HOLT_BETA) * trend
                 level = new_level
-            out["event_id"].append(eid)
-            out["rn"].append(rn)
-            out["level"].append(round(level + 1e-9, 6))
-            out["trend"].append(round(trend + 1e-9, 6))
-            out["forecast"].append(round(level + trend + 1e-9, 6))
-        state.update((level, trend, rn))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(out["event_id"]),
-                "event_id": out["event_id"],
-                "rn": out["rn"],
-                "level": out["level"],
-                "trend": out["trend"],
-                "forecast": out["forecast"],
-            }
-        ).astype(
-            {
-                "user_id": "int64",
-                "event_id": "int64",
-                "rn": "int32",
-                "level": "float64",
-                "trend": "float64",
-                "forecast": "float64",
-            }
-        )
+            rows.append(
+                (
+                    key[0],
+                    eid,
+                    rn,
+                    round(level + 1e-9, 6),
+                    round(trend + 1e-9, 6),
+                    round(level + trend + 1e-9, 6),
+                )
+            )
+        return (level, trend, rn), rows
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        advance,
-        outputStructType=HOLT_OUTPUT_SCHEMA,
-        stateStructType=HOLT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        events,
+        ["user_id"],
+        HOLT_STATE_SCHEMA,
+        HOLT_OUTPUT_SCHEMA,
+        (0.0, 0.0, 0),
+        step,
+        order=["ts", "event_id"],
     )
 
 
@@ -1627,9 +1583,10 @@ def vacuum_state(state_dir: str, retain_last: int = 2) -> dict[str, int]:
 #
 # Streaming twin of operators.windows.holt_winters_hourly: the hourly
 # count series arrives as a metrics feed and each (event_type)-keyed
-# state advances the triple recurrence once per row.  State is the
-# honest forecaster state — 2 floats, the 24-slot seasonal vector, and
-# (during warmup) the first-period buffer used to seed level/season.
+# scan advances the triple recurrence once per row, in rn order within
+# a micro-batch.  State is the honest forecaster state — 2 floats, the
+# 24-slot seasonal vector, and (during warmup) the first-period buffer
+# used to seed level/season.
 
 HW_SERIES_SCHEMA = T.StructType(
     [
@@ -1672,24 +1629,14 @@ def holt_winters_stream(series: DataFrame) -> DataFrame:
     its smoothed (level, trend, seasonal, one-step-forecast) tuple.
     State per event type: the warmup buffer (≤24 longs, dropped after
     seeding), two floats, and the 24-slot seasonal vector."""
-    import pandas as pd
-
     from ..operators.windows import HW_ALPHA, HW_BETA, HW_GAMMA, HW_PERIOD
 
-    def advance(key, pdf_iter, state):
-        (etype,) = key
+    def step(key, st, pdf):
         m = HW_PERIOD
-        if state.exists:
-            rn_seen, buf, level, trend, season = state.get
-            buf = list(buf) if buf is not None else []
-            season = list(season) if season is not None else []
-        else:
-            rn_seen, buf, level, trend, season = 0, [], 0.0, 0.0, []
-        rows = sorted(
-            (int(r.rn), int(r.n_events)) for pdf in pdf_iter for r in pdf.itertuples()
-        )
-        out = []
-        for rn, x in rows:
+        rn_seen, buf, level, trend, season = st
+        buf, season = list(buf or []), list(season or [])
+        rows = []
+        for rn, x in zip(pdf["rn"].tolist(), pdf["n_events"].tolist()):
             rn_seen += 1
             if rn_seen <= m:
                 buf.append(x)
@@ -1710,9 +1657,9 @@ def holt_winters_stream(series: DataFrame) -> DataFrame:
                 HW_GAMMA * (xv - new_level) + (1.0 - HW_GAMMA) * season[slot]
             )
             level = new_level
-            out.append(
+            rows.append(
                 (
-                    etype,
+                    key[0],
                     rn,
                     slot,
                     x,
@@ -1722,40 +1669,16 @@ def holt_winters_stream(series: DataFrame) -> DataFrame:
                     round(level + trend + season[(t + 1) % m] + 1e-9, 6),
                 )
             )
-        state.update((rn_seen, buf, level, trend, season))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "event_type",
-                "rn",
-                "hour_slot",
-                "n_events",
-                "level",
-                "trend",
-                "seasonal",
-                "onestep",
-            ],
-        ).astype(
-            {
-                "event_type": "object",
-                "rn": "int32",
-                "hour_slot": "int32",
-                "n_events": "int64",
-                "level": "float64",
-                "trend": "float64",
-                "seasonal": "float64",
-                "onestep": "float64",
-            }
-        )
+        return (rn_seen, buf, level, trend, season), rows
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return series.groupBy("event_type").applyInPandasWithState(
-        advance,
-        outputStructType=HW_STREAM_OUTPUT_SCHEMA,
-        stateStructType=HW_STREAM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        series,
+        ["event_type"],
+        HW_STREAM_STATE_SCHEMA,
+        HW_STREAM_OUTPUT_SCHEMA,
+        (0, [], 0.0, 0.0, []),
+        step,
+        order=["rn"],
     )
 
 
@@ -1766,10 +1689,11 @@ def holt_winters_stream(series: DataFrame) -> DataFrame:
 # (operators.stats_ext.ph_daily_series is the feed contract, carrying
 # the PINNED reference mean — the monitoring semantics where the
 # baseline was fit offline and ingest only advances the detector), and
-# each (event_type)-keyed state advances run/running-min once per row.
-# Identical float op order to the batch window scan, so under
-# rn-ordered ingest stream == batch exactly (pinned in
-# tests/test_streaming.py).  State per type: 3 numbers.
+# each (event_type)-keyed scan advances run/running-min once per row,
+# in rn order within a micro-batch.  Identical float op order to the
+# batch window scan, so under rn-ordered ingest stream == batch exactly
+# (pinned in tests/test_streaming.py).  State per type: the row count,
+# the running sum and its running minimum.
 
 PH_SERIES_SCHEMA = T.StructType(
     [
@@ -1805,23 +1729,14 @@ def page_hinkley_stream(series: DataFrame) -> DataFrame:
     contract and the stream==batch argument.  Emits every row's rounded
     PH statistic and its alarm flag (ph > λ, compared AFTER round(6),
     the batch op's bounds-before-compare rule)."""
-    import pandas as pd
-
     from ..operators.stats_ext import PH_DELTA, PH_LAMBDA
 
-    def advance(key, pdf_iter, state):
-        (etype,) = key
-        if state.exists:
-            rn_seen, run, runmin = state.get
-        else:
-            rn_seen, run, runmin = 0, 0.0, None
-        rows = sorted(
-            (int(r.rn), r.day, float(r.m), float(r.mu))
-            for pdf in pdf_iter
-            for r in pdf.itertuples()
-        )
-        out = []
-        for rn, day, m, mu in rows:
+    def step(key, st, pdf):
+        rn_seen, run, runmin = st
+        rows = []
+        for rn, day, m, mu in zip(
+            pdf["rn"].tolist(), pdf["day"], pdf["m"].tolist(), pdf["mu"].tolist()
+        ):
             rn_seen += 1
             run += m - mu - PH_DELTA
             runmin = run if runmin is None else min(runmin, run)
@@ -1830,28 +1745,17 @@ def page_hinkley_stream(series: DataFrame) -> DataFrame:
             # (operators/stats_ext.py page_hinkley_by_type, ADVICE r12)
             # — Python round() is banker's, SQL ROUND is half-up.
             ph = round(run - runmin + 1e-9, 6)
-            out.append((etype, rn, day, ph, int(ph > PH_LAMBDA)))
-        state.update((rn_seen, run, runmin))
-        yield pd.DataFrame(
-            out, columns=["event_type", "rn", "day", "ph", "alarmed"]
-        ).astype(
-            {
-                "event_type": "object",
-                "rn": "int32",
-                "day": "object",
-                "ph": "float64",
-                "alarmed": "int32",
-            }
-        )
+            rows.append((key[0], rn, day, ph, int(ph > PH_LAMBDA)))
+        return (rn_seen, run, runmin), rows
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return series.groupBy("event_type").applyInPandasWithState(
-        advance,
-        outputStructType=PH_STREAM_OUTPUT_SCHEMA,
-        stateStructType=PH_STREAM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        series,
+        ["event_type"],
+        PH_STREAM_STATE_SCHEMA,
+        PH_STREAM_OUTPUT_SCHEMA,
+        (0, 0.0, None),
+        step,
+        order=["rn"],
     )
 
 
@@ -1859,11 +1763,13 @@ def page_hinkley_stream(series: DataFrame) -> DataFrame:
 #
 # Streaming twin of operators.stats_ext.dispersion_index_hourly: the
 # zero-filled hourly count series (operators.windows.hourly_count_spine
-# is the feed contract) advances exact INTEGER moments (n, Σx, Σx²) per
-# event type — so the state is 3 numbers, every emission's moments are
-# exactly the batch scan's over the rows seen so far, and at
-# end-of-feed stream == batch with NO float caveat at all (the
-# statistic derives from the integer moments).
+# is the feed contract) maintains exact INTEGER moments (n, Σx, Σx²) per
+# event type.  The moments are associative, so the engine's own
+# streaming aggregation maintains them (the maintained-aggregate model
+# of incremental view maintenance) — no Python worker, no hand-written
+# state.  Every emission's moments are exactly the batch scan's over the
+# rows seen so far, and at end-of-feed stream == batch with NO float
+# caveat at all (the statistic derives from the integer moments).
 
 DISP_SERIES_SCHEMA = T.StructType(
     [
@@ -1873,53 +1779,16 @@ DISP_SERIES_SCHEMA = T.StructType(
     ]
 )
 
-DISP_STREAM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("n_hours", T.LongType()),
-        T.StructField("sx", T.LongType()),
-        T.StructField("sxx", T.LongType()),
-    ]
-)
-
-DISP_STREAM_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("sx", T.LongType()),
-        T.StructField("sxx", T.LongType()),
-    ]
-)
-
 
 def dispersion_stream(series: DataFrame) -> DataFrame:
     """Exact running count moments ON INGEST — see the section comment.
-    Emits the per-type (n, Σx, Σx²) after every micro-batch; the Fano
-    index is a pure function of the final emission (the batch op's
-    formula), so the stream==batch pin compares integers."""
-    import pandas as pd
-
-    def advance(key, pdf_iter, state):
-        (etype,) = key
-        n, sx, sxx = state.get if state.exists else (0, 0, 0)
-        for pdf in pdf_iter:
-            for x in pdf["n_events"]:
-                xi = int(x)
-                n += 1
-                sx += xi
-                sxx += xi * xi
-        state.update((n, sx, sxx))
-        yield pd.DataFrame(
-            [(etype, n, sx, sxx)], columns=["event_type", "n_hours", "sx", "sxx"]
-        ).astype(
-            {"event_type": "object", "n_hours": "int64", "sx": "int64", "sxx": "int64"}
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return series.groupBy("event_type").applyInPandasWithState(
-        advance,
-        outputStructType=DISP_STREAM_OUTPUT_SCHEMA,
-        stateStructType=DISP_STREAM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    In update mode it emits the per-type (n_hours, sx, sxx) of every type
+    a micro-batch touched; the Fano index is a pure function of the final
+    emission (the batch op's formula), so the stream==batch pin compares
+    integers."""
+    x = F.col("n_events")
+    return series.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_hours"),
+        F.sum(x).alias("sx"),
+        F.sum(x * x).alias("sxx"),
     )

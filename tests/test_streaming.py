@@ -29,31 +29,13 @@ N_CHUNKS = 4
 def chunk_dir(spark, sf_dir, tmp_path_factory):
     """Split events into N ts-ordered parquet chunks — each chunk becomes
     one micro-batch (arrival order == event-time order, like a CDC feed)."""
-    out = tmp_path_factory.mktemp("event_chunks")
-    e = load_table(spark, sf_dir, "events").orderBy("ts", "event_id").collect()
-    schema = load_table(spark, sf_dir, "events").schema
+    tbl = load_table(spark, sf_dir, "events")
+    e = tbl.orderBy("ts", "event_id").collect()
     per = (len(e) + N_CHUNKS - 1) // N_CHUNKS
-    for i in range(N_CHUNKS):
-        rows = e[i * per : (i + 1) * per]
-        if not rows:
-            continue
-        spark.createDataFrame(rows, schema=schema).coalesce(1).write.parquet(
-            str(out / f"chunk_{i}")
-        )
-    # flatten: move part files up so the source dir is a flat file list.
-    # FileStreamSource orders by modification time — stamp strictly
-    # increasing mtimes so arrival order == chunk order.
-    import os
-    import time
-
-    files = sorted(out.rglob("part-*.parquet"))
-    flat = tmp_path_factory.mktemp("event_stream")
-    base = time.time() - 3600
-    for i, f in enumerate(files):
-        dest = flat / f"{i:04d}.parquet"
-        dest.write_bytes(f.read_bytes())
-        os.utime(dest, (base + 10 * i, base + 10 * i))
-    return str(flat)
+    chunks = [e[i * per : (i + 1) * per] for i in range(N_CHUNKS)]
+    return _write_chunk_feed(
+        spark, tmp_path_factory.mktemp("event_stream"), "feed", chunks, tbl.schema
+    )
 
 
 def _run_to_memory(spark, stream_df, name, output_mode):
@@ -223,6 +205,67 @@ def test_capped_totals_stream_matches_batch(spark, sf_dir, chunk_dir):
     )
     want = capped_user_totals(spark, sf_dir).toPandas()
     assert not compare_frames(got, want)
+
+
+def test_capped_totals_stream_sorts_across_arrow_chunks(spark, sf_dir, tmp_path):
+    """A user's micro-batch rows reach the state function as several
+    Arrow chunks once they outnumber ``arrow.maxRecordsPerBatch``; the
+    fold must still run in (ts, event_id) order over ALL of them.  Rows
+    are shuffled within each ts-ordered chunk file and the chunk size is
+    cut to 3, so a per-chunk sort folds most users out of order."""
+    import random
+
+    from fawac_cdc_spark.streaming.batch_equiv import capped_user_totals
+
+    tbl = load_table(spark, sf_dir, "events")
+    e = tbl.orderBy("ts", "event_id").collect()
+    per = (len(e) + N_CHUNKS - 1) // N_CHUNKS
+    rng = random.Random(7)
+    chunks = []
+    for i in range(N_CHUNKS):
+        chunk = list(e[i * per : (i + 1) * per])
+        rng.shuffle(chunk)
+        chunks.append(chunk)
+    feed = _write_chunk_feed(spark, tmp_path, "capped_shuf", chunks, tbl.schema)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(conf, "3")
+    try:
+        emitted = _run_to_memory(
+            spark,
+            cdc.capped_totals_stream(cdc.read_event_stream(spark, feed)),
+            "capped_arrow_chunks_out",
+            "update",
+        ).toPandas()
+    finally:
+        spark.conf.unset(conf)
+    got = (
+        emitted.sort_values("n_events")
+        .drop_duplicates("user_id", keep="last")
+        .reset_index(drop=True)
+    )
+    want = capped_user_totals(spark, sf_dir).toPandas()
+    assert not compare_frames(got, want)
+
+
+def test_cdc_upsert_refuses_fresh_checkpoint_over_existing_state(
+    spark, chunk_dir, tmp_path
+):
+    """A fresh checkpoint restarts epoch ids at 0 and the upsert skips
+    every epoch whose manifest exists (the replay rule), so a new
+    checkpoint over a state dir that already holds commits would drop
+    the feed's first batches silently.  It is refused, naming both dirs,
+    before the stream starts."""
+    import os
+
+    state_dir = str(tmp_path / "state")
+    cdc.cdc_upsert_run(spark, chunk_dir, state_dir, str(tmp_path / "ckpt"))
+    versions = cdc.state_versions(state_dir)
+    fresh = str(tmp_path / "fresh_ckpt")
+    with pytest.raises(ValueError) as err:
+        cdc.cdc_upsert_run(spark, chunk_dir, state_dir, fresh)
+    assert fresh in str(err.value) and state_dir in str(err.value)
+    assert not os.path.exists(fresh)
+    assert cdc.state_versions(state_dir) == versions
 
 
 def test_cdc_upsert_resumes_from_checkpoint(spark, sf_dir, chunk_dir, tmp_path):
@@ -1461,6 +1504,8 @@ def test_dispersion_stream_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
+    plan = cdc.dispersion_stream(stream)._jdf.queryExecution().logical().toString()
+    assert "FlatMapGroupsInPandasWithState" not in plan, "needs no Python worker"
     emitted = _run_to_memory(
         spark, cdc.dispersion_stream(stream), "disp_stream_out", "update"
     ).toPandas()
@@ -1795,20 +1840,21 @@ def test_money_cents_is_half_up_not_bankers():
 # --- the *_watermarked gates' shared maturity buffer, without Spark ---------
 
 
-def _gate_state(wm_ms, value=None):
+def _group_state(schema, value=None, wm_ms=None):
     """A GroupState exactly as the applyInPandasWithState worker builds
-    it: the stored value in its pickled internal form, event-time
-    timeouts, the watermark set."""
+    it: the stored value in its pickled internal form; with ``wm_ms``,
+    event-time timeouts and that watermark, else no timeout."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = cdc.WM_SPAN_DEDUP_STATE_SCHEMA
     return GroupState(
         optionalValue=None if value is None else schema.toInternal(value),
         batchProcessingTimeMs=0,
-        eventTimeWatermarkMs=wm_ms,
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        eventTimeWatermarkMs=-1 if wm_ms is None else wm_ms,
+        timeoutConf=GroupStateTimeout.NoTimeout
+        if wm_ms is None
+        else GroupStateTimeout.EventTimeTimeout,
         hasTimedOut=False,
-        watermarkPresent=True,
+        watermarkPresent=wm_ms is not None,
         defined=value is not None,
         updated=False,
         removed=False,
@@ -1816,6 +1862,10 @@ def _gate_state(wm_ms, value=None):
         keyAsUnsafe=b"",
         valueSchema=schema,
     )
+
+
+def _gate_state(wm_ms, value=None):
+    return _group_state(cdc.WM_SPAN_DEDUP_STATE_SCHEMA, value, wm_ms)
 
 
 def _span_arrivals(rows):
@@ -1889,3 +1939,69 @@ def test_watermark_buffer_rearms_timeout_at_oldest_pending_ms_plus_one():
     mature, pend = cdc._release_matured(state, iter([]), ("doc_id", "i"))
     assert pend == [] and len(mature) == 1
     assert _timeout_ms(state) == -1
+
+
+# --- the keyed scan, without Spark --------------------------------------------
+
+
+def test_keyed_scan_sorts_after_draining_every_chunk():
+    """A group split over two Arrow chunks folds in ONE (ts, event_id)
+    order: ``_scan_group`` concatenates the chunks before sorting, where a
+    per-chunk sort would fold ts 4 before ts 1."""
+    seen = []
+
+    def step(key, st, pdf):
+        seen.extend(zip(pdf["ts"].tolist(), pdf["event_id"].tolist()))
+        return st, []
+
+    scan = cdc._scan_group(
+        cdc.HOLT_OUTPUT_SCHEMA, (0.0, 0.0, 0), step, ["ts", "event_id"]
+    )
+    chunks = [
+        pd.DataFrame({"ts": [4, 2], "event_id": [0, 9]}),
+        pd.DataFrame({"ts": [1, 2], "event_id": [0, 3]}),
+    ]
+    list(scan((7,), iter(chunks), _group_state(cdc.HOLT_STATE_SCHEMA)))
+    assert seen == [(1, 0), (2, 3), (2, 9), (4, 0)]
+
+
+def test_keyed_scan_restores_stored_state_else_init():
+    from pyspark.sql import types as T
+
+    state_schema = T.StructType(
+        [T.StructField("total", T.LongType()), T.StructField("n", T.LongType())]
+    )
+    out_schema = T.StructType(
+        [T.StructField("k", T.LongType()), *state_schema.fields]
+    )
+
+    def step(key, st, pdf):
+        new = (st[0] + int(pdf["x"].sum()), st[1] + len(pdf))
+        return new, [(key[0], *new)]
+
+    scan = cdc._scan_group(out_schema, (100, 0), step, None)
+    rows = [pd.DataFrame({"x": [1, 2]})]
+
+    fresh = _group_state(state_schema)
+    (out,) = scan((5,), iter(rows), fresh)
+    assert fresh.get == (103, 2)
+    assert out.values.tolist() == [[5, 103, 2]]
+
+    stored = _group_state(state_schema, value=(10, 4))
+    (out,) = scan((5,), iter(rows), stored)
+    assert stored.get == (13, 6)
+    assert out.values.tolist() == [[5, 13, 6]]
+
+
+def test_frame_types_an_empty_emission_from_the_schema():
+    """A Holt group past its 30-event prefix emits no rows; its frame
+    still carries the output schema's columns and dtypes."""
+    f = cdc._frame([], cdc.HOLT_OUTPUT_SCHEMA)
+    assert f.empty and list(f.columns) == cdc.HOLT_OUTPUT_SCHEMA.names
+    assert [str(t) for t in f.dtypes] == [
+        "int64", "int64", "int32", "float64", "float64", "float64"
+    ]
+    f = cdc._frame([("view", 3, "2024-01-02", 0.5, 1)], cdc.PH_STREAM_OUTPUT_SCHEMA)
+    assert [str(t) for t in f.dtypes] == [
+        "object", "int32", "object", "float64", "int32"
+    ]
