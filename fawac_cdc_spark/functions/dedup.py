@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.helpers import fan_out, md5_bucket, md5_bucket_sql
+from ..operators.helpers import fan_out, materialize, materialize_probed
+from ..operators.helpers import md5_bucket, md5_bucket_sql
 from ..registry import register
 
 # MinHash parameters: k=8 affine hashes mod a Mersenne prime.
@@ -144,11 +145,28 @@ def capped_shingles(sh: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFrame:
     return sh.join(F.broadcast(hot), "shingle", "left_anti")
 
 
+def _capped_shingle_groups(sh: DataFrame, max_df: int) -> DataFrame:
+    """(shingle, ids): the lazy grouped build behind
+    :func:`jaccard_candidate_pairs` — capped stream, sorted doc-id list.
+
+    ``fan_out`` on the groupBy key BEFORE the aggregation: the
+    explicit-width exchange is reused by the groupBy (same key, same
+    count) and, unlike the bare groupBy shuffle, is exempt from AQE
+    size-based coalescing, so the collect_list aggregation and both
+    downstream explode branches run at full width instead of
+    inheriting a one-partition coalesce (the pair stage measured
+    1.83 s -> 0.58 s at sf0.1 from the width change alone)."""
+    return (
+        fan_out(capped_shingles(sh, max_df), "shingle")
+        .groupBy("shingle")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+    )
+
+
 def jaccard_candidate_pairs(
     sh: DataFrame,
     threshold: float = 0.05,
     max_df: int = MAX_SHINGLE_DF,
-    persist: bool = True,
     keep_counts: bool = False,
 ) -> DataFrame:
     """Near-dup candidate pairs (doc_a, doc_b, shared, jaccard) from a
@@ -173,41 +191,10 @@ def jaccard_candidate_pairs(
     ``llm_corpus_pipeline`` so the skew-bounding semantics stay identical
     across the family (and unit-testable on synthetic frames).
     """
-    # one aggregation subtree feeds both branches below (pairs + per-doc
-    # counts).  Catalyst does not reliably reuse the exchange across the
-    # branches, so ``persist=True`` (default) materializes the capped
-    # shingle-group table once (eager localCheckpoint; lazy checkpoints
-    # emit accumulator noise when reused) and both branches read it —
-    # measured −5.7% to −17.6% across the callers at sf0.1, BASELINE.md,
-    # and at 100 TB the grouped table is the expensive subtree that must
-    # not run twice.  persist=False restores a fully lazy single plan
-    # (synthetic unit-test frames, plan inspection).
-    if persist:
-        # the hot-list count and the anti-join probe both consume the
-        # shingle stream; materialize the explode+hash once so the cap
-        # pass does not recompute it (the un-materialized form pays a
-        # second tokenize+md5 scan — measured +22-33% at sf0.1 in r6;
-        # RE-MEASURED in the round-15 optimization pass after the
-        # fan_out width change: removal is a wash on a quiet host
-        # (interleaved stash A/B 2.28/3.60/3.34 vs 2.51/3.21/3.29 s for
-        # ngram/llm/traindata), so the checkpoint stays)
-        sh = sh.localCheckpoint(eager=True)
-    # fan_out on the groupBy key BEFORE the aggregation: the explicit-width
-    # exchange is reused by the groupBy (same key, same count) and — unlike
-    # the bare groupBy shuffle — is exempt from AQE size-based coalescing,
-    # so the collect_list aggregation, the checkpoint, AND both downstream
-    # explode branches (the ≤C(max_df,2)-per-shingle pair expansion and the
-    # per-doc count explode) run at full width instead of inheriting the
-    # one-partition coalesce of a few-MB grouped table whose downstream CPU
-    # is quadratically amplified (round-15 explode discipline; the pair
-    # stage measured 1.83 s -> 0.58 s at sf0.1 from the width change alone).
-    groups = (
-        fan_out(capped_shingles(sh, max_df), "shingle")
-        .groupBy("shingle")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+    # kept: two or more consumers, no ReusedExchange without it
+    groups = materialize(
+        _capped_shingle_groups(sh, max_df), "jaccard_candidate_pairs.groups"
     )
-    if persist:
-        groups = groups.localCheckpoint(eager=True)
     # all i<j pairs within the sorted id list, as one array expression
     pair_expr = F.expr(
         "flatten(transform(ids, (x, i) -> "
@@ -394,6 +381,17 @@ def band_table_for(sig: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     )
 
 
+def minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents' (doc_id, band, key) LSH band table, materialized —
+    the ONE batch build shared by ``minhash_lsh_candidates``,
+    ``capture_recapture_dups`` and ``lsh_dedup_admissions``, each of
+    which self-joins it on (band, key)."""
+    # kept: the perfbench analytics workload runs it (minhash_lsh_candidates)
+    return materialize(
+        band_table_for(minhash_signatures_df(spark, sf_dir)), "minhash_bands"
+    )
+
+
 # --- registered queries ----------------------------------------------------
 
 
@@ -439,10 +437,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``MAX_SHINGLE_DF``) → shuffle on shingle (equi-join) → pair groupBy.
     The cap bounds every join key at df ≤ 100, so candidate generation
     stays near-linear even when the corpus contains stop-phrase shingles.
-    persist=True: measured −17.6% at sf0.1 min-of-3 (BASELINE.md) — the
-    grouped-shingle subtree feeds both internal branches even here.
     """
-    return jaccard_candidate_pairs(_shingled_hashed(spark, sf_dir), persist=True)
+    return jaccard_candidate_pairs(_shingled_hashed(spark, sf_dir))
 
 
 @register(
@@ -473,15 +469,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding (4 bands × 2 rows): near-dup candidates are pairs
     sharing any band key — an equi-join on (band, key), never a cross
     join. This is the O(n)-ish scale path for 100 TB near-dedup."""
-    # the self-join below references the band table twice and Catalyst
-    # does not reuse the exchange, so the signature subtree (the shingle
-    # explode + 8 min-hash aggregates) would run twice — materialize once
-    # (measured −25% at sf0.1; at scale the signature table is a persisted
-    # artifact anyway, exactly like the SimHash fingerprint table)
-    bands = band_table_for(minhash_signatures_df(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
-    return lsh_candidate_pairs_for(bands)
+    return lsh_candidate_pairs_for(minhash_bands(spark, sf_dir))
 
 
 def _simhash_sql() -> str:
@@ -647,13 +635,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The fingerprint rides along the band explode, so the self-join's
     # two sides are the ONLY references to the fingerprint subtree and no
     # join-back to the fingerprint table is needed for the Hamming verify.
-    # The subtree is still referenced twice (Catalyst plans the self-join
-    # without exchange reuse here), so materialize it once — at scale the
-    # fingerprint table is a persisted artifact anyway, like MinHash
-    # signature tables.  Eager, not lazy: a lazy checkpoint materializes
-    # mid-job and measured +8.4% over eager at sf0.1 (BASELINE.md).
-    fp = wide_simhash_df(spark, sf_dir).localCheckpoint(eager=True)
-    return simhash_candidate_pairs(fp)
+    return simhash_candidate_pairs(wide_simhash_df(spark, sf_dir))
 
 
 def simhash_candidate_pairs(
@@ -898,13 +880,8 @@ def corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.size("toks") >= 3)
         .select("doc_id", F.explode(F.expr(_HASHED_SHINGLES_EXPR)).alias("shingle"))
     )
-    # persist=True: the capped shingle-group table feeds both the pairs
-    # and per-doc-count branches; materializing it once measured -5.7%
-    # (llm_corpus_pipeline) / -11.3% (traindata_end_to_end) at sf0.1
-    # (BASELINE.md), and at 100 TB the grouped table is the expensive
-    # subtree that must not be recomputed.
     near_dropped = (
-        jaccard_candidate_pairs(sh, persist=True)
+        jaccard_candidate_pairs(sh)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -995,13 +972,14 @@ def connected_components_min_label(
     so this simpler loop stays the shared default.  Exhausting
     ``max_iter`` (seed round included) before a round confirms the
     fixpoint raises ``RuntimeError`` — unconverged labels are not
-    component labels.
+    component labels.  An edge endpoint missing from ``vertices`` raises
+    ``ValueError``: it could become some vertex's component label.
 
     Each round is ONE join + ONE grouped min (self-loops in the edge
     list carry the own-label term, so there is no join back to the old
-    label table); ``localCheckpoint`` truncates the lineage so the plan
+    label table); ``materialize`` truncates the lineage so the plan
     doesn't grow with iterations, and the convergence probe (label-set
-    fingerprint) PIGGYBACKS on each checkpoint job via ``observe()``.
+    fingerprint) rides each round's job (``materialize_probed``).
     Round-7 measured A/B at sf0.1 (min-of-3, same session, identical
     labels): the edge checkpoint below is the dominant win —
     ``connected_component_survivors`` 22.5 s -> 5.2 s,
@@ -1028,7 +1006,7 @@ def connected_components_min_label(
     # explicit count) is deliberately AQE-coalescible: partition count
     # follows the edge bytes (1 at fixture scale, wide at 100 TB) — the
     # loop body is join+min, not a CPU-amplified stage, so size-based
-    # width is the RIGHT width here.
+    # width is the RIGHT width here.  Kept: every round re-reads it.
     # SELF-LOOPS at both endpoints ride along (round-16): with (v, v)
     # rows present, one round of propagation is ONE join + ONE grouped
     # min — min over {self} ∪ neighbors — instead of the former
@@ -1038,7 +1016,7 @@ def connected_components_min_label(
     # stream.  The round-15 one-join-per-round prototype measured 3x
     # slower because its self-loops spanned the FULL vertex set; these
     # span edge-touched vertices only.
-    sym = (
+    sym = materialize(
         edges.select(
             F.explode(
                 F.array(
@@ -1058,8 +1036,8 @@ def connected_components_min_label(
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .repartition("src")
-        .localCheckpoint(eager=True)
+        .repartition("src"),
+        "connected_components_min_label.edges",
     )
 
     # Iterate over EDGE-TOUCHED vertices only (round-16; guide §2.3 —
@@ -1068,42 +1046,48 @@ def connected_components_min_label(
     # every round's join + checkpoint scales the loop with |V| instead
     # of |V_edges| (at 100 TB: every document vs the near-dup graph).
     # Untouched vertices re-enter as self-labeled singletons in the
-    # final left join.  PRECONDITION (holds for every caller — edges
-    # are derived from the vertex table): edge endpoints are members of
-    # ``vertices``.
+    # final left join.  PRECONDITION: edge endpoints are members of
+    # ``vertices``; the seed's job counts the ones that are not.
     #
     # Convergence is a label-set fingerprint comparison (count + exact
-    # label sum piggybacked on each checkpoint via observe()): the
+    # label sum probed on each round's materialize job): the
     # vertex set is fixed and labels are monotone non-increasing per
     # vertex, so an unchanged decimal(38,0) sum means no label moved —
     # an exact fixpoint witness, not a probabilistic hash.  The SEED is
     # round 1 of propagation, fused into one aggregate: with self-loops
     # present, min(src) over dst's group is exactly
     # min(self, min(neighbors)).
-    def _labels_ckpt(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        out = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.col("component").cast("decimal(38,0)")), F.lit(0)
-            ).alias("s"),
-        ).localCheckpoint(eager=True)
-        return out, (int(obs.get["n"]), int(obs.get["s"]))
-
-    labels, fp = _labels_ckpt(
+    # kept: loop lineage cut; the loop reads each round's fingerprint
+    fp_metrics = (
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.sum(F.col("component").cast("decimal(38,0)")), F.lit(0)
+        ).alias("s"),
+    )
+    label = "connected_components_min_label.labels round {}"
+    labels, (n, s, dangling) = materialize_probed(
         sym.groupBy("dst")
         .agg(F.min("src").alias("component"))
         .select(F.col("dst").alias("doc_id"), "component")
+        .join(vertices.select("doc_id", F.lit(True).alias("known")), "doc_id", "left"),
+        label.format(1),
+        *fp_metrics,
+        F.count_if(F.col("known").isNull()).alias("dangling"),
     )
-    for _ in range(max_iter - 1):
-        labels, new_fp = _labels_ckpt(
+    if dangling:
+        raise ValueError(
+            f"connected_components_min_label: {dangling} edge endpoint(s) "
+            "are not in vertices"
+        )
+    fp = (n, s)
+    for r in range(2, max_iter + 1):
+        labels, new_fp = materialize_probed(
             sym.join(labels, sym["src"] == labels["doc_id"])
             .groupBy("dst")
             .agg(F.min("component").alias("component"))
-            .select(F.col("dst").alias("doc_id"), "component")
+            .select(F.col("dst").alias("doc_id"), "component"),
+            label.format(r),
+            *fp_metrics,
         )
         if new_fp == fp:
             break
@@ -1246,7 +1230,9 @@ def connected_components_star(
     labels are NOT component labels (edges still span multiple stars),
     so it raises ``RuntimeError``: callers like ``cc_star_survivors`` and
     ``leakage_safe_split_counts`` would otherwise silently dedup/split
-    on wrong components.
+    on wrong components.  An edge endpoint missing from ``vertices``
+    raises ``ValueError`` (counted on the first round's job): it could
+    become some vertex's component label.
     """
 
     def _parts(n_edges: int) -> int:
@@ -1258,28 +1244,40 @@ def connected_components_star(
         # same rule still scales the width up with the data.
         return max(1, min(2048, n_edges // 500_000 + 1))
 
-    def _ckpt_with_fp(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-        # convergence probe PIGGYBACKS on the checkpoint job via
-        # observe() (the min-label loop's pattern) — the former separate
-        # _edge_fingerprint aggregate was one extra job per round.
-        from pyspark.sql import Observation
+    # kept: loop lineage cut; the loop reads each round's fingerprint
+    fp_metrics = (
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(F.hash("src", "dst")), F.lit(0)).alias("h"),
+    )
+    label = "connected_components_star.edges round {}"
 
-        obs = Observation()
-        out = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.hash("src", "dst")), F.lit(0)).alias("h"),
-        ).localCheckpoint(eager=True)
-        return out, (int(obs.get["n"]), int(obs.get["h"]))
+    def known(end: str) -> DataFrame:
+        return vertices.select(
+            F.col("doc_id").alias(end), F.lit(True).alias(f"known_{end}")
+        )
 
-    cur, fp = _ckpt_with_fp(
+    cur, (n, h, dangling) = materialize_probed(
         edges.where(F.col("doc_a") != F.col("doc_b"))
         .select(
             F.greatest("doc_a", "doc_b").alias("src"),
             F.least("doc_a", "doc_b").alias("dst"),
         )
         .distinct()
+        .join(known("src"), "src", "left")
+        .join(known("dst"), "dst", "left"),
+        label.format(0),
+        *fp_metrics,
+        (
+            F.count_if(F.col("known_src").isNull())
+            + F.count_if(F.col("known_dst").isNull())
+        ).alias("dangling"),
     )
+    if dangling:
+        raise ValueError(
+            f"connected_components_star: {dangling} edge endpoint(s) are "
+            "not in vertices"
+        )
+    cur, fp = cur.select("src", "dst"), (n, h)
     rounds = 0
     converged = fp[0] == 0  # no edges: nothing to contract
     for _ in range(max_iter):
@@ -1311,13 +1309,15 @@ def connected_components_star(
             .where(F.col("src") != F.col("dst"))
             .unionAll(small_min.select("src", F.col("m").alias("dst")))
         )
-        cur, new_fp = _ckpt_with_fp(
+        cur, new_fp = materialize_probed(
             small.select(
                 F.greatest("src", "dst").alias("src"),
                 F.least("src", "dst").alias("dst"),
             )
             .distinct()
-            .coalesce(_parts(fp[0]))
+            .coalesce(_parts(fp[0])),
+            label.format(rounds),
+            *fp_metrics,
         )
         converged = new_fp == fp and _is_star_forest(cur)
         fp = new_fp
@@ -1485,16 +1485,12 @@ def substring_dup_stats_df(
     """The substring-duplication plan at gram length ``n`` (>= 3; the
     registered query pins n=8 for the 10-99-token fixture docs)."""
     d = load_table(spark, sf_dir, "documents")
-    # The gram stream feeds both the distinct-doc count and the join-back;
-    # Catalyst does not reuse the subtree, so materialize it once instead
-    # of scanning + re-hashing documents twice (measured ~30% at sf0.1 —
-    # same precedent as the minhash band table; at scale the gram table
-    # IS the persisted substring-index artifact).
-    grams = (
+    # kept: two or more consumers, no ReusedExchange without it
+    grams = materialize(
         d.select("doc_id", F.split("text", " ").alias("toks"))
         .where(F.size("toks") >= n)
-        .select("doc_id", F.explode(F.expr(_substr_grams_expr(n))).alias("gram"))
-        .localCheckpoint(eager=True)
+        .select("doc_id", F.explode(F.expr(_substr_grams_expr(n))).alias("gram")),
+        "substring_dup_stats.grams",
     )
     dup = (
         grams.groupBy("gram")
@@ -1572,10 +1568,12 @@ def incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows only.  Docs under 3 tokens have no signature and are not
     admitted through this path (mirrored by the oracle's sig CTE).
     """
-    bands = (
-        band_table_for(minhash_signatures_df(spark, sf_dir))
-        .withColumn("incoming", md5_bucket("doc_id", INCR_BATCH_BUCKETS) == 0)
-        .localCheckpoint(eager=True)
+    # kept: pinned by test_incremental_lsh_probe_is_equi_join
+    bands = materialize(
+        band_table_for(minhash_signatures_df(spark, sf_dir)).withColumn(
+            "incoming", md5_bucket("doc_id", INCR_BATCH_BUCKETS) == 0
+        ),
+        "incremental_lsh_dedup.bands",
     )
     fresh = bands.where("incoming").select("doc_id", "band", "key")
     state = bands.where("NOT incoming").select(
@@ -1648,7 +1646,8 @@ def near_dup_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtree runs once), and |triangles| is bounded by the capped pair
     generation — never all-pairs.  Per-member counts come from one
     explode + group-by."""
-    edges = near_dup_edges(spark, sf_dir).localCheckpoint(eager=True)
+    # kept: two or more consumers, no ReusedExchange without it
+    edges = materialize(near_dup_edges(spark, sf_dir), "near_dup_triangle_counts.edges")
     e1 = edges.select(F.col("doc_a").alias("x"), F.col("doc_b").alias("y"))
     e2 = edges.select(F.col("doc_a").alias("y"), F.col("doc_b").alias("z"))
     e3 = edges.select(F.col("doc_a").alias("x"), F.col("doc_b").alias("z"))
@@ -1741,19 +1740,16 @@ def pagerank_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect).  Per-iteration round(6) on BOTH engines keeps the power
     iteration value-exact across Spark's and DuckDB's float fold orders
     (same contract as the EWMA/cumsum recurrences)."""
-    edges = near_dup_edges(spark, sf_dir).localCheckpoint(eager=True)
+    # kept (all three): loop-invariant inputs of the power iteration
+    edges = materialize(near_dup_edges(spark, sf_dir), "pagerank_near_dup.edges")
     sym = edges.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    # node-sized, reused by the loop join AND the final degree projection
-    # — materialized once so neither re-runs the union+groupBy subtree
-    deg = (
-        sym.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("double").alias("deg"))
-        .localCheckpoint(eager=True)
+    deg = materialize(
+        sym.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg")),
+        "pagerank_near_dup.deg",
     )
-    # loop-invariant: (src, dst, deg_src), checkpointed once
-    sym_deg = sym.join(deg, "src").localCheckpoint(eager=True)
+    sym_deg = materialize(sym.join(deg, "src"), "pagerank_near_dup.sym_deg")
     # deg is grouped by src — exactly one row per node — so the node set
     # reads the existing materialization (no extra distinct or checkpoint)
     nodes = deg.select(F.col("src").alias("doc_id"))
@@ -1937,10 +1933,11 @@ def minhash_est_error_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles.  est is k/8 (exactly representable), exact is one int
     division — both engine-stable without rounding; only the error
     difference rounds (convention)."""
-    sig = minhash_signatures_df(spark, sf_dir).localCheckpoint(eager=True)
-    cand = lsh_candidate_pairs_for(
-        band_table_for(sig)
-    ).localCheckpoint(eager=True)  # feeds the est join AND the exact join
+    # kept: two or more consumers, no ReusedExchange without it (sig: the cand job and the est join)
+    sig = materialize(minhash_signatures_df(spark, sf_dir), "minhash_est_error_pairs.sig")
+    cand = materialize(
+        lsh_candidate_pairs_for(band_table_for(sig)), "minhash_est_error_pairs.cand"
+    )
     sig_a = sig.select(
         F.col("doc_id").alias("doc_a"), *[F.col(f"mh{j}").alias(f"a{j}") for j in range(8)]
     )
@@ -1956,10 +1953,7 @@ def minhash_est_error_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sig_b, "doc_b")
         .select("doc_a", "doc_b", (matches / F.lit(8.0)).alias("est_jaccard"))
     )
-    # three subtrees (shx, shy, counts) read the shingle stream —
-    # materialize the explode once (a re-derived scan measured +22-33%
-    # at sf0.1 in the jaccard family)
-    sh = _shingled(spark, sf_dir).localCheckpoint(eager=True)
+    sh = _shingled(spark, sf_dir)
     shx = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     shy = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     shared = (
@@ -2060,14 +2054,9 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.size("toks") >= 3)
         .select("source", F.explode(F.expr(_HASHED_SHINGLES_EXPR)).alias("shingle"))
     )
-    # hot list + probe both read the explode — materialize once (family
-    # pattern, measured +22-33% when re-derived)
-    sh_all = sh_all.localCheckpoint(eager=True)
-    src_sh = (
-        capped_shingles(sh_all)
-        .distinct()
-        .localCheckpoint(eager=True)  # feeds counts AND both join sides
-    )
+    # kept: two or more consumers, no ReusedExchange without it
+    sh_all = materialize(sh_all, "source_overlap_matrix.sh_all")
+    src_sh = capped_shingles(sh_all).distinct()
     counts = src_sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a = src_sh.select(F.col("source").alias("source_a"), "shingle")
     b = src_sh.select(F.col("source").alias("source_b"), "shingle")
@@ -2270,9 +2259,8 @@ def substring_span_removal_df(
     t = fan_out(d.select("doc_id", F.col("text")), "doc_id").select(
         "doc_id", F.split("text", " ").alias("toks")
     )
-    grams = positioned_grams(t, n).localCheckpoint(
-        eager=True
-    )  # feeds both the df count and the join-back
+    # kept: pinned by test_span_removal_plan_has_no_pairwise_stage
+    grams = materialize(positioned_grams(t, n), "substring_span_removal.grams")
     dup = (
         grams.groupBy("gram")
         .agg(F.count_distinct("doc_id").alias("n_docs"))
@@ -2615,8 +2603,8 @@ def ppjoin_pairs_df(
         ).select("doc_id", F.explode(F.expr(_HASHED_SHINGLES_EXPR)).alias("shingle"))
     else:
         sh = _shingled_hashed(spark, sf_dir)
-    # feeds df counts, the prefix window, AND the verify arrays
-    sh = sh.localCheckpoint(eager=True)
+    # kept: pinned by test_multimodal_curation_single_plan_no_driver_step
+    sh = materialize(sh, "ppjoin_pairs.sh")
     df_tbl = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     from pyspark.sql import Window
 
@@ -2756,9 +2744,7 @@ def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # fan_out before the signature map (explode discipline, same as
     # minhash_signatures_df / lsh_param_frontier).
-    bands = band_table_for(
-        minhash_signatures_for(fan_out(d, "doc_id"))
-    ).localCheckpoint(eager=True)
+    bands = band_table_for(minhash_signatures_for(fan_out(d, "doc_id")))
     cand = lsh_candidate_pairs_for(bands)
     exact = ppjoin_pairs_df(spark, sf_dir).select("doc_a", "doc_b")
     hit = exact.join(cand, ["doc_a", "doc_b"], "left_semi")
@@ -2964,13 +2950,13 @@ def lsh_param_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # fan_out before the per-doc signature map (md5 per 3-gram + 8
     # affine folds — the explode discipline).
-    sig = minhash_signatures_for(fan_out(d, "doc_id")).localCheckpoint(
-        eager=True
+    # kept (both): pinned by test_frontier_shares_signature_and_exact_inputs
+    sig = materialize(
+        minhash_signatures_for(fan_out(d, "doc_id")), "lsh_param_frontier.sig"
     )
-    exact = (
-        ppjoin_pairs_df(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+    exact = materialize(
+        ppjoin_pairs_df(spark, sf_dir).select("doc_a", "doc_b"),
+        "lsh_param_frontier.exact",
     )
     n_exact_df = exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     tagged = None
@@ -3160,12 +3146,10 @@ def capture_recapture_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the repo's shared candidate rules; the overlap is one equi-join on
     the pair key; counts are exact integers into one shared final
     formula, round(6)."""
-    bands = band_table_for(minhash_signatures_df(spark, sf_dir)).localCheckpoint(
-        eager=True
+    mh = lsh_candidate_pairs_for(minhash_bands(spark, sf_dir))
+    sh = simhash_candidate_pairs(wide_simhash_df(spark, sf_dir)).select(
+        "doc_a", "doc_b"
     )
-    mh = lsh_candidate_pairs_for(bands)
-    fp = wide_simhash_df(spark, sf_dir).localCheckpoint(eager=True)
-    sh = simhash_candidate_pairs(fp).select("doc_a", "doc_b")
     n1 = mh.agg(F.count(F.lit(1)).alias("n1"))
     n2 = sh.agg(F.count(F.lit(1)).alias("n2"))
     m = mh.join(sh, ["doc_a", "doc_b"]).agg(F.count(F.lit(1)).alias("m"))
@@ -3235,7 +3219,8 @@ def near_dup_source_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge set."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     edges = near_dup_edges(spark, sf_dir)
-    lab = (
+    # kept: two or more consumers, no ReusedExchange without it
+    lab = materialize(
         edges.join(
             docs.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("sa")),
             "doc_a",
@@ -3244,8 +3229,8 @@ def near_dup_source_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("sb")),
             "doc_b",
         )
-        .select("sa", "sb")
-        .localCheckpoint(eager=True)
+        .select("sa", "sb"),
+        "near_dup_source_modularity.lab",
     )
     w = (
         lab.where(F.col("sa") == F.col("sb"))
@@ -3360,7 +3345,7 @@ FUZZY_LEV_MAX = 2  # 1..2 edits = fuzzy pair (0 edits is exact dedup's job)
 def _fuzzy_title_pairs(spark: SparkSession, sf_dir: str):
     """(keep, pairs): the DF-capped block list and the within-block
     title pair frame with Levenshtein distances — split out of
-    ``fuzzy_title_dedup`` (pre-localCheckpoint) so tests/test_plans.py
+    ``fuzzy_title_dedup`` (before its materialize) so tests/test_plans.py
     can pin that the pair join keys on the block column."""
     d = load_table(spark, sf_dir, "documents")
     b = d.select(
@@ -3375,11 +3360,11 @@ def _fuzzy_title_pairs(spark: SparkSession, sf_dir: str):
         .where(F.col("bc") <= MAX_TITLE_BLOCK)
         .select("blk")
     )
-    c = b.join(keep, "blk", "left_semi").localCheckpoint(eager=True)
+    c = b.join(keep, "blk", "left_semi")
     # fan_out both sides of the within-block pair join on the block key:
     # the join output pays one Levenshtein per candidate pair (quadratic
-    # CPU amplification within blocks) while the checkpointed input is
-    # one few-MB partition — the close_pair_edges discipline.
+    # CPU amplification within blocks) while AQE would coalesce the
+    # few-MB input to one partition — the close_pair_edges discipline.
     cf = fan_out(c, "blk")
     z = fan_out(
         c.select(
@@ -3450,10 +3435,12 @@ def fuzzy_title_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reduction on the two pair columns instead of materializing the
     union."""
     keep, pairs = _fuzzy_title_pairs(spark, sf_dir)
-    pairs = pairs.localCheckpoint(eager=True)
-    fz = pairs.where(
-        (F.col("lev") >= 1) & (F.col("lev") <= FUZZY_LEV_MAX)
-    ).localCheckpoint(eager=True)
+    # kept: two or more consumers, no ReusedExchange without it
+    pairs = materialize(pairs, "fuzzy_title_dedup.pairs")
+    fz = materialize(
+        pairs.where((F.col("lev") >= 1) & (F.col("lev") <= FUZZY_LEV_MAX)),
+        "fuzzy_title_dedup.fz",
+    )
     nb = keep.agg(F.count(F.lit(1)).cast("bigint").alias("n_blocks"))
     npc = pairs.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs_compared")

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.helpers import fan_out
+from ..operators.helpers import fan_out, materialize
 from ..registry import register
 
 EMB_DIM = 64
@@ -514,7 +514,7 @@ def kmeans_refined_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Generalizes the reference's iterative update loop (``fawac.py:521-551``
     train steps / A41) to index training. The centroid update stays
-    entirely on executors — a k-row (cid, cvec) checkpoint feeds the
+    entirely on executors — a k-row (cid, cvec) frame feeds the
     second pass's broadcast build — so the driver never touches data at
     all (pyspark.ml KMeans pays a collect + re-broadcast per iteration
     instead); vectors never leave executors either way.
@@ -534,10 +534,9 @@ def kmeans_refined_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (cid, dim) avg groups as ever, but assembled to (cid, cvec) rows
     # IN-PLAN (ordered collect_list) instead of collect() + a driver
     # loop + createDataFrame + re-broadcast (round 16; guide §5 — the
-    # driver should do almost no data work).  The k-row result is
-    # eagerly checkpointed so the second Lloyd pass's broadcast build
-    # and the final stats join read it without re-running the first
-    # assignment pass.  A member vector that is short or null would
+    # driver should do almost no data work).  The second Lloyd pass and
+    # the final stats join share the k-row result's exchanges
+    # (ReusedExchange).  A member vector that is short or null would
     # silently shift its cell's per-dim means, so it fails the query.
     member = F.when(
         F.coalesce(F.size("embedding"), F.lit(-1)) != EMB_DIM,
@@ -554,15 +553,11 @@ def kmeans_refined_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cid", "dim")
         .agg(F.round(F.avg(F.col("x").cast("double")), 6).alias("cval"))
     )
-    c1 = (
-        dims.groupBy("cid")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(dim, cval))),"
-                " s -> s.cval)"
-            ).alias("cvec")
-        )
-        .localCheckpoint(eager=True)
+    c1 = dims.groupBy("cid").agg(
+        F.expr(
+            "transform(array_sort(collect_list(struct(dim, cval))),"
+            " s -> s.cval)"
+        ).alias("cvec")
     )
 
     a2 = _assign_min_l2(e, c1)
@@ -849,14 +844,18 @@ def bucketed_cosine_pairs(e: DataFrame, with_labels: bool = False) -> DataFrame:
     The norm is computed ONCE per vector, not per pair: each vector joins
     ~bucket-size pairs, so hoisting the two 64-term norm folds out of the
     pair expression removes ~2/3 of the per-pair flops (measured 2.4x at
-    sf0.1, BASELINE.md); the eager checkpoint is also what the self-join
-    reuses instead of recomputing the bucket projection twice."""
+    sf0.1, BASELINE.md); the materialized frame is also what the
+    self-join reuses instead of recomputing the bucket projection twice."""
     cols = ["vec_id", "embedding"] + (["label"] if with_labels else [])
-    b = e.select(
-        *cols,
-        F.expr(_bucket_expr_spark()).alias("bucket"),
-        F.expr(_NORM_SPARK.format(v="embedding")).alias("nrm"),
-    ).localCheckpoint(eager=True)
+    # kept: the perfbench analytics workload runs it (knn_join_bucketed_top3)
+    b = materialize(
+        e.select(
+            *cols,
+            F.expr(_bucket_expr_spark()).alias("bucket"),
+            F.expr(_NORM_SPARK.format(v="embedding")).alias("nrm"),
+        ),
+        "bucketed_cosine_pairs.b",
+    )
     a_cols = [
         F.col("vec_id"),
         F.col("embedding").alias("emb_a"),
@@ -948,6 +947,20 @@ def knn_join_bucketed_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RP-bucketed near-dup family so the two blocking strategies are
 # directly comparable.
 SEMDEDUP_COS = 0.4
+
+
+def normed_cells(e: DataFrame, n_cells: int = N_CENTROIDS) -> DataFrame:
+    """(vec_id, embedding, cent_id, nrm): :func:`cosine_assigned_cells`
+    with each vector's norm hoisted once, materialized — the assignment
+    frame :func:`close_pair_edges` probes, for every SemDeDup caller."""
+    # kept: pinned by test_registry_wide_no_cartesian_no_stray_nlj (the
+    # 1-row centroid broadcast stays out of the callers' plans)
+    return materialize(
+        cosine_assigned_cells(e, n_cells=n_cells).withColumn(
+            "nrm", F.expr(_NORM_SPARK.format(v="embedding"))
+        ),
+        "normed_cells",
+    )
 
 
 def close_pair_edges(assigned: DataFrame) -> DataFrame:
@@ -1063,12 +1076,7 @@ def semantic_dedup_cell_stats_df(
 ) -> DataFrame:
     """The SemDeDup plan at ``n_cells`` coarse cells (k ~ sqrt(n) in the
     paper; larger k → smaller cells → cheaper pair join, lower recall)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    assigned = (
-        cosine_assigned_cells(e, n_cells=n_cells)
-        .withColumn("nrm", F.expr(_NORM_SPARK.format(v="embedding")))
-        .localCheckpoint(eager=True)
-    )
+    assigned = normed_cells(load_table(spark, sf_dir, "embeddings"), n_cells)
     dropped = (
         close_pair_edges(assigned)
         .select("cent_id", F.col("b_id").alias("vec_id"))
@@ -1165,12 +1173,8 @@ def incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines."""
     from ..operators.helpers import md5_bucket
 
-    e = load_table(spark, sf_dir, "embeddings")
-    assigned = (
-        cosine_assigned_cells(e)
-        .withColumn("nrm", F.expr(_NORM_SPARK.format(v="embedding")))
-        .withColumn("incoming", md5_bucket("vec_id", INCR_EMB_BUCKETS) == 0)
-        .localCheckpoint(eager=True)
+    assigned = normed_cells(load_table(spark, sf_dir, "embeddings")).withColumn(
+        "incoming", md5_bucket("vec_id", INCR_EMB_BUCKETS) == 0
     )
     fresh = assigned.where("incoming").select(
         "vec_id", "embedding", "nrm", "cent_id"
@@ -1267,12 +1271,7 @@ def semantic_cc_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import connected_components_min_label
 
     e = load_table(spark, sf_dir, "embeddings")
-    assigned = (
-        cosine_assigned_cells(e)
-        .withColumn("nrm", F.expr(_NORM_SPARK.format(v="embedding")))
-        .localCheckpoint(eager=True)
-    )
-    edges = close_pair_edges(assigned).select(
+    edges = close_pair_edges(normed_cells(e)).select(
         F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b")
     )
     labels = connected_components_min_label(

@@ -234,18 +234,15 @@ def topk_sketch_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracked counts are exact below maxItemsTracked)."""
     d = load_table(spark, sf_dir, "documents")
     d.createOrReplaceTempView("topk_docs")
-    # Spark inlines SQL CTEs, so an `acc` CTE referenced by both the
-    # per-source and merged branches would ACCUMULATE THE FULL TOKEN
-    # STREAM TWICE — a genuine 2x scan at 100 TB. Materialize the
-    # per-source sketch states once (a tiny frame: one row per source)
-    # and derive both branches from it.
+    # per-source sketch states (one row per source) as their own view: both
+    # branches read it, and the plan reuses its exchange (ReusedExchange)
     acc = spark.sql(
         f"""
         SELECT source, approx_top_k_accumulate(term, {TOPK_MAX_TRACKED}) AS st
         FROM (SELECT source, explode(split(text, ' ')) AS term FROM topk_docs)
         GROUP BY source
         """
-    ).localCheckpoint(eager=True)
+    )
     acc.createOrReplaceTempView("topk_acc")
     return spark.sql(
         f"""

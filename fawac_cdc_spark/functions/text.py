@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.helpers import materialize
 from ..registry import register
 
 # Tiny per-language stopword lists for the heuristic language scorer.
@@ -491,18 +492,12 @@ def pmi_bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K adjacent-bigram collocations by pointwise mutual information
     ``ln(P(a,b) / (P(a)·P(b)))`` — the classic corpus-analysis signal for
     multi-word expressions (and for spotting boilerplate phrases worth a
-    stop-list). The unigram count table feeds THREE consumers (the a-side
-    join, the b-side join, and the corpus total) and the bigram table two
-    (scoring rows, total), so both are materialized once and every
-    consumer — including the totals, which are exact integer sums of the
-    count columns, identical to counting the exploded stream — reads the
-    aggregated table instead of re-running its explode + shuffle (one
-    scan family total, not four explode passes). Measured trade at
-    sf0.1: +0.17 s (0.82→1.00 s) — materializing the vocab-sized count
-    tables costs more than the recompute at toy scale — but at the
-    100 TB design point each avoided re-reference is a full corpus scan
-    plus shuffle, while the checkpoint is one write of the already-
-    shuffled aggregate. The count-vs-count joins stay unhinted (the
+    stop-list). Every consumer — including the totals, which are exact
+    integer sums of the count columns — reads an aggregated count table
+    instead of re-running its explode + shuffle: the unigram table's
+    three consumers share its exchange (ReusedExchange), and the bigram
+    table's two are materialized because the plan does not reuse it.
+    The count-vs-count joins stay unhinted (the
     vocab grows with the corpus — AQE picks the strategy). The PMI expression applies the exact same IEEE operation
     order on both engines, so the rounded values hash-match."""
     d = load_table(spark, sf_dir, "documents")
@@ -510,11 +505,7 @@ def pmi_bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("toks") >= 2
     )
     uni = t.select(F.explode("toks").alias("term"))
-    uc = (
-        uni.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
+    uc = uni.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     n_tot = uc.agg(F.sum("c").cast("double").alias("n"))
     bi = t.select(
         F.explode(
@@ -524,10 +515,10 @@ def pmi_bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bg")
     ).select("bg.a", "bg.b")
-    bc = (
-        bi.groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("cab"))
-        .localCheckpoint(eager=True)
+    # kept: two or more consumers, no ReusedExchange without it
+    bc = materialize(
+        bi.groupBy("a", "b").agg(F.count(F.lit(1)).alias("cab")),
+        "pmi_bigram_collocations.bc",
     )
     m_tot = bc.agg(F.sum("cab").cast("double").alias("m"))
     ca = uc.select(F.col("term").alias("a"), F.col("c").alias("ca"))
@@ -1372,12 +1363,14 @@ def _learn_bpe(
     keeps the textbook full-recount form: it is the one an oracle (and
     a replica) can replay exactly."""
     d = load_table(spark, sf_dir, "documents")
-    vocab = (
+    # kept (both): loop lineage cut; each round's driver argmax reads it
+    vocab = materialize(
         d.select(F.explode(tokens_col()).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
-        .withColumn("syms", F.split("word", ""))
-    ).localCheckpoint(eager=True)
+        .withColumn("syms", F.split("word", "")),
+        "learn_bpe.vocab round 0",
+    )
 
     merges: list[tuple[int, str, int]] = []
     for rank in range(1, BPE_N_MERGES + 1):
@@ -1405,9 +1398,10 @@ def _learn_bpe(
             break
         a, b, cnt = pairs[0]["a"], pairs[0]["b"], pairs[0]["cnt"]
         merges.append((rank, f"{a}{b}", int(cnt)))
-        vocab = vocab.withColumn(
-            "syms", F.expr(_merge_pair_expr("syms", a, b))
-        ).localCheckpoint(eager=True)
+        vocab = materialize(
+            vocab.withColumn("syms", F.expr(_merge_pair_expr("syms", a, b))),
+            f"learn_bpe.vocab round {rank}",
+        )
     return merges, vocab
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.helpers import fan_out, md5_bucket, md5_bucket_sql
+from ..operators.helpers import fan_out, materialize, md5_bucket, md5_bucket_sql
 from ..registry import register
 from .text import UNIQ_RATIO_SQL as _UNIQ_RATIO_SQL
 
@@ -624,30 +624,28 @@ def modern_corpus_stages(
         rewrite_excising,
         substring_span_removal_df,
     )
-    from .similarity import _NORM_SPARK, close_pair_edges, cosine_assigned_cells
+    from .similarity import close_pair_edges, normed_cells
 
-    survivors = corpus_survivors(spark, sf_dir).localCheckpoint(eager=True)
+    # kept: two or more consumers, no ReusedExchange without it (all four)
+    label = "modern_corpus_stages.{}".format
+    survivors = materialize(corpus_survivors(spark, sf_dir), label("survivors"))
     # -- semantic dedup over the survivors' embeddings
     e = load_table(spark, sf_dir, "embeddings").join(
         survivors.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
     )
-    assigned = (
-        cosine_assigned_cells(e)
-        .withColumn("nrm", F.expr(_NORM_SPARK.format(v="embedding")))
-        .localCheckpoint(eager=True)
-    )
     sem_dropped = (
-        close_pair_edges(assigned)
+        close_pair_edges(normed_cells(e))
         .select(F.col("b_id").alias("doc_id"))
         .distinct()
     )
-    sem_surv = survivors.join(sem_dropped, "doc_id", "left_anti").localCheckpoint(
-        eager=True
+    sem_surv = materialize(
+        survivors.join(sem_dropped, "doc_id", "left_anti"), label("sem_surv")
     )
     # -- duplicated-span excision within the surviving corpus
-    sp = substring_span_removal_df(
-        spark, sf_dir, docs=sem_surv.select("doc_id", "text")
-    ).localCheckpoint(eager=True)
+    sp = materialize(
+        substring_span_removal_df(spark, sf_dir, docs=sem_surv.select("doc_id", "text")),
+        label("sp"),
+    )
     # -- decontamination over the rewritten corpus (train side rewritten,
     #    eval split dropped; eval grams broadcast — fixed-size benchmark
     #    vs growing corpus, same rationale as decontam_span_removal)
@@ -663,7 +661,7 @@ def modern_corpus_stages(
         % _EVAL_BUCKETS
         == 0
     )
-    grams2 = positioned_grams(t2, _GRAM_N).localCheckpoint(eager=True)
+    grams2 = materialize(positioned_grams(t2, _GRAM_N), label("grams2"))
     evalg = grams2.where(coin).select("gram").distinct()
     covered2 = (
         grams2.where(~coin)
@@ -1603,17 +1601,16 @@ def source_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ONE pass over the token stream: per-(source, bucket) counts are the
     # finest grain, so the corpus distribution, source totals, and corpus
-    # total are all exact integer derivations of the checkpointed per_src
-    # table — the earlier four-consumer form re-ran the tokenize+md5 scan
-    # four times (the measured +22-33%-per-extra-scan class from the
-    # Jaccard family).  The corpus total rides a 256-row unbounded window
-    # on the corpus table instead of a scalar cross join, so no
-    # BroadcastNestedLoopJoin enters the plan.
-    per_src = (
+    # total are all exact integer derivations of the per_src table.  The
+    # corpus total rides a 256-row unbounded window on the corpus table
+    # instead of a scalar cross join, so no BroadcastNestedLoopJoin
+    # enters the plan.
+    # kept: two or more consumers, no ReusedExchange without it
+    per_src = materialize(
         _dsir_feats(spark, sf_dir)
         .groupBy("source", "b")
-        .agg(F.count(F.lit(1)).alias("sc"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("sc")),
+        "source_kl_drift.per_src",
     )
     corpus = (
         per_src.groupBy("b")
@@ -1838,7 +1835,6 @@ def jsd_source_unigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dsir_feats(spark, sf_dir)
         .groupBy("source", "b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("sc"))
-        .localCheckpoint(eager=True)
     )
     corpus = per_src.groupBy("b").agg(F.sum("sc").cast("bigint").alias("cc"))
     ctot = corpus.agg(F.sum("cc").cast("double").alias("ct"))
@@ -2088,12 +2084,12 @@ def packing_budget_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     to packing.
 
     The expensive half — the per-(source, shard) token cumsum — is
-    budget-FREE and computed ONCE (``_pack_seq_frame`` /
-    ``_PACK_SEQ_SQL``, shared verbatim with ``packed_sequences``); each
-    budget arm is one re-aggregation of the same frame at a different
-    pack divisor.  All counts exact integers; the three ratios are one
+    budget-FREE (``_pack_seq_frame`` / ``_PACK_SEQ_SQL``, shared
+    verbatim with ``packed_sequences``); the arms share its scan and
+    shuffle (``ReusedExchange``), and each budget arm is one
+    re-aggregation of the same frame at a different pack divisor.  All counts exact integers; the three ratios are one
     rounded division each."""
-    seq = _pack_seq_frame(spark, sf_dir).localCheckpoint(eager=True)
+    seq = _pack_seq_frame(spark, sf_dir)
     arms = []
     for b in PACK_FRONTIER_BUDGETS:
         packs = (

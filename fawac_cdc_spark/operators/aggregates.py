@@ -638,16 +638,14 @@ def hll_user_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     e.createOrReplaceTempView("hll_events")
-    # Spark inlines SQL CTEs: a per_type CTE referenced by both the
-    # per-type and union branches would sketch the FULL events scan twice.
-    # Materialize the per-type sketch states once (one row per type) and
-    # derive both branches from the tiny frame.
+    # both branches read the per-type sketch states; the plan reuses their
+    # exchange (ReusedExchange), so the events scan runs once
     per_type = spark.sql(
         """
         SELECT event_type, hll_sketch_agg(user_id) AS sk, COUNT(*) AS n_events
         FROM hll_events GROUP BY event_type
         """
-    ).localCheckpoint(eager=True)
+    )
     per_type.createOrReplaceTempView("hll_per_type")
     return spark.sql(
         """

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .helpers import money, rank_bucket
+from .helpers import materialize, money, rank_bucket
 from ..registry import register
 
 from ..streaming.batch_equiv import SESSION_GAP_MIN
@@ -1090,7 +1090,6 @@ def theil_sen_monthly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("midx")
         )
         .agg(F.sum(money("o_totalprice")).cast("double").alias("rev"))
-        .localCheckpoint(eager=True)
     )
     a, b = m.alias("a"), m.alias("b")
     slopes = (
@@ -1257,7 +1256,6 @@ def assoc_rule_event_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (
         e.select(F.lag("event_type").over(w).alias("a"), F.col("event_type").alias("b"))
         .where(F.col("a").isNotNull())
-        .localCheckpoint(eager=True)
     )
     tot = t.agg(F.count(F.lit(1)).cast("double").alias("n"))
     ca = t.groupBy("a").agg(F.count(F.lit(1)).alias("na"))
@@ -1309,7 +1307,7 @@ p AS (
 
 
 def acf_monthly_frames(spark: SparkSession, sf_dir: str):
-    """(m, per_lag): the checkpointed DECIMAL-exact monthly revenue
+    """(m, per_lag): the DECIMAL-exact monthly revenue
     rollup and the lag-1..ACF_MAX_LAG Pearson autocorrelation frame
     (lag, n_pairs, r) — the Spark half of ``ACF_ORACLE_CTES``; both
     engines run the identical computational-formula float ops and seal
@@ -1320,7 +1318,6 @@ def acf_monthly_frames(spark: SparkSession, sf_dir: str):
             (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("midx")
         )
         .agg(F.sum(money("o_totalprice")).cast("double").alias("rev"))
-        .localCheckpoint(eager=True)
     )
     lags = spark.range(1, ACF_MAX_LAG + 1).select(
         F.col("id").cast("int").alias("lag")
@@ -1412,7 +1409,6 @@ def mutual_info_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
         e.groupBy("event_type", F.hour("ts").alias("hr"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("nij"))
-        .localCheckpoint(eager=True)
     )
     tot = c.agg(F.sum("nij").cast("double").alias("n"))
     ci = c.groupBy("event_type").agg(F.sum("nij").alias("ni"))
@@ -1902,7 +1898,6 @@ def chi_square_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
         e.groupBy("event_type", F.hour("ts").alias("hr"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("o"))
-        .localCheckpoint(eager=True)
     )
     tot = c.agg(F.sum("o").cast("double").alias("n"))
     ci = c.groupBy("event_type").agg(F.sum("o").alias("ni"))
@@ -1969,7 +1964,7 @@ def item_cooccurrence_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear in lineitem, never |parts|².  Degrees broadcast back onto
     the pair table.  Counts exact; two rounded divisions."""
     li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=True)
+    op = li.select("l_orderkey", "l_partkey").distinct()
     deg = op.groupBy("l_partkey").agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
     a = op.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_a"))
     b = op.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_b"))
@@ -2547,15 +2542,16 @@ def kendall_tau_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sign tests on exact-decimal-derived doubles), and only the final
     τ-b normalization touches sqrt, round(6)."""
     o = load_table(spark, sf_dir, "orders")
-    # checkpoint the bounded month rollup (theil_sen's discipline): the
-    # scan feeds exactly one aggregate, and the O(n²) pair join + the
-    # n_months frame both reuse the materialized ~|months| rows
-    m = o.groupBy(
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("midx")
-    ).agg(
-        F.sum(money("o_totalprice")).cast("double").alias("rev"),
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-    ).localCheckpoint(eager=True)
+    # kept: pinned by test_kendall_pairs_only_on_monthly_aggregate
+    m = materialize(
+        o.groupBy(
+            (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("midx")
+        ).agg(
+            F.sum(money("o_totalprice")).cast("double").alias("rev"),
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+        ),
+        "kendall_tau_monthly.m",
+    )
     a = m.select(
         F.col("midx").alias("midx_a"),
         F.col("rev").alias("rev_a"),

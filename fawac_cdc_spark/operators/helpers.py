@@ -17,11 +17,16 @@ engines. Two tools make that possible:
    SimHash, fingerprints) uses md5 hex prefixes converted to integers:
    Spark `conv(substr(md5(s),1,8),16,10)`, DuckDB `CAST('0x'||substr(md5(s)
    ,1,8) AS BIGINT)` — same 32-bit value in both engines.
+
+The module also owns materialization: :func:`materialize` is the one
+eager ``localCheckpoint`` in the engine, and :func:`materialize_probed`
+adds an ``Observation`` that an iterative loop reads off the same job.
+Each job runs under the description ``materialize <label>``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, Observation
 from pyspark.sql import functions as F
 
 MONEY = "decimal(18,2)"
@@ -265,3 +270,33 @@ def bucketed_predecessor_counts(gr, val_col: str = "v", cnt_col: str = "c"):
         cnt_col,
         (F.col(f"cum_{cnt_col}") - F.col(cnt_col)).alias("cb"),
     )
+
+
+def materialize(df, label: str):
+    """Eagerly checkpoint ``df`` (``localCheckpoint(eager=True)``) and
+    return the checkpointed frame: the engine's ONE materialization.
+
+    Every call site says why it keeps its job (a lineage cut in a loop,
+    a value a driver-side loop reads, a plan test's pin, or a frame two
+    consumers read that Catalyst does not reuse).  While the job runs,
+    ``spark.job.description`` is ``materialize <label>``; the caller's
+    previous description is restored afterwards (``None`` removes it).
+    The job group is left alone, so a caller's group still counts the
+    job."""
+    sc = df.sparkSession.sparkContext
+    key = "spark.job.description"
+    prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, f"materialize {label}")
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty(key, prev)
+
+
+def materialize_probed(df, label: str, *metrics: Column):
+    """:func:`materialize` with aggregate ``metrics`` observed on the
+    same job: returns ``(frame, values)``, values in alias order — the
+    convergence probe of an iterative loop costs no extra job."""
+    obs = Observation()
+    out = materialize(df.observe(obs, *metrics), label)
+    return out, tuple(obs.get.values())

@@ -41,6 +41,7 @@ from ..registry import register
 from .helpers import (
     MONEY,
     bucketed_predecessor_counts,
+    materialize,
     money,
     pwm_grain_weights,
     rank_bucket,
@@ -112,13 +113,13 @@ def spearman_corr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pearson on those integers — five exact integer moments, one double
     division, round(6)."""
     e = load_table(spark, sf_dir, "events")
-    d = (
-        e.groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
+    # kept: two or more consumers, no ReusedExchange without it
+    d = materialize(
+        e.groupBy(F.col("ts").cast("date").alias("day")).agg(
             F.count(F.lit(1)).cast("bigint").alias("x"),
             (F.sum(money("value")) * 100).cast("bigint").alias("y"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "spearman_corr_daily.d",
     )
     rx = _midrank2(d, "x", "r2x")
     ry = _midrank2(d, "y", "r2y")
@@ -655,7 +656,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         "dec",
         F.coalesce(F.col("n_gd"), F.lit(0)).alias("n_gd"),
-    ).localCheckpoint(eager=True)
+    )
     wg = (
         Window.partitionBy("o_orderpriority")
         .orderBy("dec")
@@ -1009,7 +1010,6 @@ def mood_median_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("b"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = g.agg(
         F.sum("a").cast("double").alias("ta"),
@@ -1727,7 +1727,6 @@ def session_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
         trans.groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("bigint").alias("nij"))
-        .localCheckpoint(eager=True)
     )
     ci = c.groupBy("src").agg(F.sum("nij").alias("ni"))
     tot = c.agg(F.sum("nij").cast("double").alias("n"))
@@ -2275,7 +2274,7 @@ def _fried_frames(spark: SparkSession, sf_dir: str):
         .where(F.col("c") == F.col("k"))
         .select("day")
     )
-    c2 = cell.join(full_days, "day", "left_semi").localCheckpoint(eager=True)
+    c2 = cell.join(full_days, "day", "left_semi")
     a = c2.select("day", "event_type", F.col("val").alias("va"))
     b = c2.select(F.col("day").alias("day_b"), F.col("val").alias("vb"))
     r = (
@@ -3124,7 +3123,7 @@ def energy_distance_type_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cb"),
         )
-    ).localCheckpoint(eager=True)
+    )
     tot = c.agg(
         F.sum("ca").cast("bigint").alias("na"),
         F.sum("cb").cast("bigint").alias("nb"),

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
-from ..operators.helpers import money
+from ..operators.helpers import materialize, money
 from ..registry import register
 
 _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
@@ -827,23 +827,22 @@ def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASIA-nation suppliers stands in for stock value. The scalar total is
     a single-row aggregate broadcast into a cross join — the same shape
     Catalyst produces for an uncorrelated scalar subquery. The per-part
-    aggregate feeds BOTH the rows and the threshold, and Catalyst does
-    not reuse the exchange across the branches (verified: plan showed two
-    lineitem scans without it), so ``pv`` is materialized once — same
-    pattern as the dedup/sketch families. Threshold math is
+    aggregate feeds BOTH the rows and the threshold; ``pv`` is
+    materialized once, and a plan test pins that. Threshold math is
     sum-cast-double / count * 2 in the same operation order on both
     engines — bit-identical."""
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    pv = (
+    # kept: test_q11_part_value_aggregate_materialized_once pins it
+    pv = materialize(
         li.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("l_partkey")
-        .agg(F.sum(_rev()).alias("val"))
-        .localCheckpoint(eager=True)
+        .agg(F.sum(_rev()).alias("val")),
+        "q11_important_part_value.pv",
     )
     thr = pv.agg(
         (

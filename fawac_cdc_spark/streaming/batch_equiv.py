@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.helpers import money
+from ..operators.helpers import materialize, money
 from ..registry import register
 
 SESSION_GAP_MIN = 30
@@ -516,11 +516,9 @@ def lsh_dedup_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     delay (pinned stream==batch on a shuffled feed in
     ``tests/test_streaming.py``).  One band self-join bounded by band
     keys (never all-pairs), one per-doc aggregate."""
-    from ..functions.dedup import band_table_for, minhash_signatures_df
+    from ..functions.dedup import minhash_bands
 
-    bands = band_table_for(minhash_signatures_df(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    bands = minhash_bands(spark, sf_dir)
     earlier = (
         bands.join(
             bands.select(
@@ -596,18 +594,9 @@ def semantic_dedup_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join (cells are the blocking key, k ~ sqrt(n) keeps them
     task-sized), norms hoisted once per vector, cosine rounded to 6 on
     both engines before the threshold."""
-    from ..functions.similarity import (
-        _NORM_SPARK,
-        close_pair_edges,
-        cosine_assigned_cells,
-    )
+    from ..functions.similarity import close_pair_edges, normed_cells
 
-    e = load_table(spark, sf_dir, "embeddings")
-    assigned = (
-        cosine_assigned_cells(e)
-        .withColumn("nrm", F.expr(_NORM_SPARK.format(v="embedding")))
-        .localCheckpoint(eager=True)
-    )
+    assigned = normed_cells(load_table(spark, sf_dir, "embeddings"))
     # the closed form charges the LARGER id of each close pair, so the
     # shared edge helper's b_id is the charged vector
     earlier = (
@@ -732,11 +721,9 @@ def cdc_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (two latest-per-key windows + a left join), so the driver hash
     verifies the whole write→manifest→time-travel-read→diff round trip
     value-exactly — keys, timestamps, and payload doubles all round-trip
-    parquet bit-for-bit.  Scale shape: snapshots diff via one
-    user-keyed join of two manifests' buckets (at 100 TB, bucket
-    pruning makes the diff touch only buckets whose manifests differ);
-    the id cutoff uses integer ``div`` on both engines so the split is
-    exact."""
+    parquet bit-for-bit.  Scale shape: both versions are read in full
+    and diffed via one user-keyed join; the id cutoff uses integer
+    ``div`` on both engines so the split is exact."""
     import shutil
 
     from ..sources.connectors import _io_dir
@@ -834,7 +821,8 @@ def span_removal_firstseen_df(
     t = fan_out(d.select("doc_id", F.col("text")), "doc_id").select(
         "doc_id", F.split("text", " ").alias("toks")
     )
-    grams = positioned_grams(t, n).localCheckpoint(eager=True)
+    # kept: test_span_removal_plan_has_no_pairwise_stage pins it
+    grams = materialize(positioned_grams(t, n), "span_removal_firstseen.grams")
     first = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     covered = (
         grams.join(first, "gram")

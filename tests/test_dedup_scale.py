@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from fawac_cdc_spark.functions.dedup import (
     MAX_SHINGLE_DF,
+    _capped_shingle_groups,
     capped_shingles,
     connected_components_min_label,
     jaccard_candidate_pairs,
@@ -216,6 +217,32 @@ def test_star_cc_refuses_unconverged_labels(spark):
         connected_components_star(chain, verts, max_iter=1)
 
 
+def _dangling_graph(spark):
+    """Edge (0, 2) over vertices {1, 2}: endpoint 0 is no vertex, yet
+    it is the smaller id, so an unchecked loop labels vertex 2 with 0."""
+    edges = spark.createDataFrame([(0, 2)], "doc_a long, doc_b long")
+    verts = spark.createDataFrame([(1,), (2,)], "doc_id long")
+    return edges, verts
+
+
+def test_min_label_cc_refuses_endpoint_outside_vertices(spark):
+    import pytest
+
+    edges, verts = _dangling_graph(spark)
+    with pytest.raises(ValueError, match="1 edge endpoint"):
+        connected_components_min_label(edges, verts)
+
+
+def test_star_cc_refuses_endpoint_outside_vertices(spark):
+    import pytest
+
+    from fawac_cdc_spark.functions.dedup import connected_components_star
+
+    edges, verts = _dangling_graph(spark)
+    with pytest.raises(ValueError, match="1 edge endpoint"):
+        connected_components_star(edges, verts)
+
+
 def test_star_forest_check_accepts_stars_only(spark):
     """The exact convergence check behind a star-CC fingerprint match:
     a union of big→small stars passes; a path (a dst that is also a
@@ -285,8 +312,8 @@ def test_df_cap_bounds_aggregation_buffers(spark):
     rows = [(i, "the quick brown") for i in range(50)]
     rows += [(i, f"unique {i}") for i in range(50)]
     sh = _shingle_frame(spark, rows)
-    pairs = jaccard_candidate_pairs(sh, threshold=0.0, max_df=10, persist=False)
-    opt = pairs._jdf.queryExecution().optimizedPlan().toString()
+    groups = _capped_shingle_groups(sh, max_df=10)
+    opt = groups._jdf.queryExecution().optimizedPlan().toString()
     anti_pos = opt.find("Join LeftAnti")
     collect_pos = opt.find("collect_list")
     assert anti_pos != -1 and collect_pos != -1

@@ -471,8 +471,8 @@ def test_scrub_is_pure_map_plus_one_aggregate(spark, sf_dir):
 
 @pytest.mark.parametrize("name", ["llm_corpus_pipeline", "traindata_end_to_end"])
 def test_corpus_pipelines_persist_shingle_groups(spark, sf_dir, name):
-    """corpus_survivors passes persist=True so the capped shingle-group
-    table materializes once (measured −5.7%/−11.3% at sf0.1, BASELINE.md)
+    """jaccard_candidate_pairs always materializes the capped shingle-group
+    table once (measured −5.7%/−11.3% at sf0.1, BASELINE.md)
     — the checkpoint shows up as an ExistingRDD scan in the plan. A
     refactor that drops it would silently recompute the expensive subtree
     twice at 100 TB."""

@@ -469,32 +469,18 @@ def test_ewma_gs_stream_matches_batch_equiv(spark, sf_dir, tmp_path):
     event_id-div-N micro-batches, equals the registered (driver-oracled)
     closed-form batch fold ``ewma_state_batch_equiv`` — pinning the
     streaming implementation to the DuckDB oracle transitively."""
-    import os
-    import time
-
     from fawac_cdc_spark.streaming.batch_equiv import _ewma_batch_fold
 
     batch = 100
     e = load_table(spark, sf_dir, "events")
-    feed = tmp_path / "ewma_feed"
-    feed.mkdir()
-    rows = e.collect()
-    schema = e.schema
     by_batch: dict[int, list] = {}
-    for r in rows:
+    for r in e.collect():
         by_batch.setdefault(r["event_id"] // batch, []).append(r)
-    t0 = time.time() - 3600
-    for i, bid in enumerate(sorted(by_batch)):
-        d = feed / f"b{bid:04d}"
-        spark.createDataFrame(by_batch[bid], schema=schema).coalesce(1).write.parquet(
-            str(d)
-        )
-        for part in d.rglob("part-*.parquet"):
-            dest = feed / f"b{bid:04d}.parquet"
-            part.rename(dest)
-            os.utime(dest, (t0 + i, t0 + i))
+    feed = _write_chunk_feed(
+        spark, tmp_path, "ewma_feed", [by_batch[b] for b in sorted(by_batch)], e.schema
+    )
 
-    events = cdc.read_event_stream(spark, str(feed))
+    events = cdc.read_event_stream(spark, feed)
     q = (
         cdc.ewma_target_stream_gs(events, tau=0.1)
         .writeStream.format("memory")
