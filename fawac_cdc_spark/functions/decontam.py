@@ -28,12 +28,12 @@ pure per-row map — no shuffle except the final per-source aggregate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..operators.helpers import md5_bucket_sql
+from ..operators.helpers import md5_bucket_sql, md5_int32
 from .dedup import MAX_SHINGLE_DF, _shingled_hashed, capped_shingles
 
 # Held-out eval split: md5 bucket of the doc id, same determinism idiom as
@@ -66,6 +66,13 @@ _GRAMS_SQL = _grams_sql(_GRAM_N)
 _IS_EVAL = f"CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % {_EVAL_BUCKETS} = 0"
 
 
+def eval_split() -> Column:
+    """Spark form of ``_IS_EVAL``: true for the doc_ids in the eval
+    split (md5 8-hex prefix of the doc_id string, bucket 0 of
+    _EVAL_BUCKETS).  The one Spark builder of the split."""
+    return md5_int32(F.col("doc_id").cast("string")) % _EVAL_BUCKETS == 0
+
+
 def _doc_grams(
     spark: SparkSession, sf_dir: str, n: int = _GRAM_N
 ) -> DataFrame:
@@ -76,18 +83,12 @@ def _doc_grams(
     # fan_out before the gram explode (md5 per n-gram — the explode
     # discipline).
     d = fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
-    is_eval = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % _EVAL_BUCKETS
-        == 0
-    )
     return (
         d.select("doc_id", F.split("text", " ").alias("toks"))
         .where(F.size("toks") >= n)
         .select(
             "doc_id",
-            is_eval.alias("is_eval"),
+            eval_split().alias("is_eval"),
             F.explode(F.expr(_grams_expr(n))).alias("shingle"),
         )
     )
@@ -346,27 +347,17 @@ def decontam_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_out before the gram explode (explode discipline: one md5 per
     # n-gram).
     d = fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
-    is_eval = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % _EVAL_BUCKETS
-        == 0
+    t = d.select(
+        "doc_id", F.split("text", " ").alias("toks"), eval_split().alias("is_eval")
     )
-    t = d.select("doc_id", F.split("text", " ").alias("toks"), is_eval.alias("is_eval"))
     grams = positioned_grams(
         t.select("doc_id", "toks", "is_eval"), _GRAM_N
     )
     # positioned_grams keeps only (doc_id, i, gram); recover the split via
     # the same md5 coin on doc_id (pure arithmetic, no extra join)
-    gram_eval = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % _EVAL_BUCKETS
-        == 0
-    )
-    evalg = grams.where(gram_eval).select("gram").distinct()
+    evalg = grams.where(eval_split()).select("gram").distinct()
     covered = (
-        grams.where(~gram_eval)
+        grams.where(~eval_split())
         .join(F.broadcast(evalg), "gram")
         .select("doc_id", F.explode(F.expr(f"sequence(i, i + {_GRAM_N - 1})")).alias("p"))
         .distinct()
@@ -693,13 +684,7 @@ def decontam_n_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     part of what the frontier shows).  |FRONTIER_NS| bounded scans; all
     counts exact integers, one rounded division."""
     d = load_table(spark, sf_dir, "documents")
-    is_eval = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % _EVAL_BUCKETS
-        == 0
-    )
-    tt = d.where(~is_eval).agg(
+    tt = d.where(~eval_split()).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_train")
     )
     arms = []

@@ -424,7 +424,7 @@ def embedding_int8_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .decontam import _EVAL_BUCKETS, _GRAM_N, _IS_EVAL  # noqa: E402
+from .decontam import _GRAM_N, _IS_EVAL, eval_split  # noqa: E402
 from .dedup import (  # noqa: E402
     SUBSTRING_GRAM_N,
     SURVIVORS_CTE_SQL,
@@ -655,12 +655,7 @@ def modern_corpus_stages(
     t2 = fan_out(sp.select("doc_id", "kept_text"), "doc_id").select(
         "doc_id", F.split("kept_text", " ").alias("toks")
     )
-    coin = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % _EVAL_BUCKETS
-        == 0
-    )
+    coin = eval_split()
     grams2 = materialize(positioned_grams(t2, _GRAM_N), label("grams2"))
     evalg = grams2.where(coin).select("gram").distinct()
     covered2 = (
@@ -2006,16 +2001,10 @@ def psi_train_eval_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import uniq_ratio_col
 
     d = load_table(spark, sf_dir, "documents")
-    is_eval = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % _EVAL_BUCKETS
-        == 0
-    )
     q = F.round(uniq_ratio_col(), 6)
     binned = d.select(
         F.least(F.floor(q * 10).cast("int"), F.lit(9)).alias("bin"),
-        is_eval.alias("is_eval"),
+        eval_split().alias("is_eval"),
     )
     counts = binned.groupBy("bin").agg(
         F.sum(F.when(F.col("is_eval"), 0).otherwise(1)).cast("bigint").alias("ct"),

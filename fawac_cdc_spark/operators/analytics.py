@@ -19,15 +19,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .helpers import materialize, money, rank_bucket
+from .helpers import bucketed_prefix_sums, materialize, money
 from ..registry import register
 
-from ..streaming.batch_equiv import SESSION_GAP_MIN
+from ..streaming.batch_equiv import SESSION_GAP_MIN, sessionize
 
 WEEK_SECONDS = 7 * 24 * 3600
-# ONE session-gap definition repo-wide: derived from the session_agg
-# family's constant, and the SAME strict-> boundary rule (a gap of
-# EXACTLY 30:00.000000 continues the session there, so it must here).
+# The session gap in seconds, for the oracles' SQL; the Spark side of
+# every session query is batch_equiv.sessionize.
 SESSION_GAP_SECONDS = SESSION_GAP_MIN * 60
 ZSCORE_WINDOW = 100  # trailing rows per (type) used to fit mean/std
 ZSCORE_MIN_PREV = 30  # score only with a substantial trailing sample
@@ -105,6 +104,25 @@ def retention_cohort_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def session_transition_counts(events: DataFrame) -> DataFrame:
+    """(from_type, to_type, n): how often an event of one type is
+    followed by one of another INSIDE the same session — each event
+    paired with its successor by LEAD over (user, :func:`sessionize`
+    session) in (ts, event_id) order.  The transition table of
+    ``session_transition_matrix`` and ``stats_ext.session_entropy_rate``."""
+    ws = Window.partitionBy("user_id", "session_seq").orderBy("ts", "event_id")
+    return (
+        sessionize(events)
+        .select(
+            F.col("event_type").alias("from_type"),
+            F.lead("event_type").over(ws).alias("to_type"),
+        )
+        .where(F.col("to_type").isNotNull())
+        .groupBy("from_type", "to_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
 @register(
     "session_transition_matrix",
     oracle=f"""
@@ -149,39 +167,10 @@ def session_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Three windows, all partitioned on user (then (user, session)) with
     a deterministic (ts, event_id) total order, then one small
-    aggregate — the sessionization is the same gap rule as the
-    streaming ``session_agg_30min_gap`` family, expressed as the
-    lag-gap + running-sum batch idiom.  At 100 TB every window
-    partition is one user's stream (bounded), and the transition
+    aggregate (:func:`session_transition_counts`).  At 100 TB every
+    window partition is one user's stream (bounded), and the transition
     matrix is |event types|^2 rows."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # timestamp + interval arithmetic, NOT unix_timestamp subtraction:
-    # unix_timestamp truncates to whole seconds while the oracle's epoch
-    # keeps microseconds, so a ~1799.x s gap would sessionize differently
-    prev = F.lag("ts").over(w)
-    new_sess = F.when(
-        prev.isNull()
-        | (F.col("ts") > prev + F.expr(f"INTERVAL {SESSION_GAP_SECONDS} SECONDS")),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    sessioned = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.sum(new_sess).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ).alias("sess_id"),
-    )
-    ws = Window.partitionBy("user_id", "sess_id").orderBy("ts", "event_id")
-    trans = sessioned.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(ws).alias("to_type"),
-    ).where(F.col("to_type").isNotNull())
-    counted = trans.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    counted = session_transition_counts(load_table(spark, sf_dir, "events"))
     share = F.round(
         F.col("n").cast("double")
         / F.sum("n").over(Window.partitionBy("from_type")),
@@ -2036,15 +2025,7 @@ def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     type) structs), so the string is deterministic under any
     parallelism.  Top-k is a TakeOrderedAndProject with (count desc,
     path) tiebreak.  Long sessions bound the string, not the shuffle."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(w)
-    new_session = (
-        prev_ts.isNull()
-        | (F.col("ts") > prev_ts + F.expr(f"INTERVAL {SESSION_GAP_MIN} MINUTES"))
-    ).cast("int")
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    s = e.withColumn("session_seq", F.sum(new_session).over(wrun))
+    s = sessionize(load_table(spark, sf_dir, "events"))
     paths = s.groupBy("user_id", "session_seq").agg(
         F.array_join(
             F.transform(
@@ -2634,8 +2615,8 @@ def mann_whitney_flag_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Computed WITHOUT a global sort (the textbook rank assignment is the
     banned data-sized window): prices collapse to the integer-cent VALUE
     GRAIN first (ties carry counts), predecessor counts come from the
-    order-preserving bit-length-bucket hierarchy (``rank_bucket`` —
-    sign-safe for negative grains, ADVICE r13), and 2·midrank = 2·cum_before
+    order-preserving bit-length-bucket hierarchy
+    (``helpers.bucketed_prefix_sums``), and 2·midrank = 2·cum_before
     + c + 1 keeps every rank-mass term an exact integer — lifted to
     DECIMAL for the sums — so U is exact on the half-integer grid and
     only the final z touches sqrt, round(6).  The DuckDB oracle keeps
@@ -2647,31 +2628,13 @@ def mann_whitney_flag_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("l_returnflag") == "N", 1).otherwise(0).alias("isn"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("isr"),
     )
-    g = (
-        x.groupBy("v")
-        .agg(
-            F.sum("isn").cast("bigint").alias("nn"),
-            F.sum("isr").cast("bigint").alias("nr"),
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-        )
-        .withColumn("bucket", rank_bucket("v"))
+    g = x.groupBy("v").agg(
+        F.sum("isn").cast("bigint").alias("nn"),
+        F.sum("isr").cast("bigint").alias("nr"),
+        F.count(F.lit(1)).cast("bigint").alias("c"),
     )
-    wv = (
-        Window.partitionBy("bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    vb = g.withColumn("cum_b", F.sum("c").over(wv))
-    bt = g.groupBy("bucket").agg(F.sum("c").alias("bc"))
-    wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    bto = bt.select(
-        "bucket", F.coalesce(F.sum("bc").over(wb), F.lit(0)).alias("boff")
-    )
-    r = vb.join(F.broadcast(bto), "bucket").select(
-        "nn",
-        "nr",
-        "c",
-        (F.col("boff") + F.col("cum_b") - F.col("c")).alias("cb"),
+    r = bucketed_prefix_sums(g, "v", ["c", "nn", "nr"]).select(
+        "nn", "nr", "c", (F.col("cum_c") - F.col("c")).alias("cb")
     )
     s = r.agg(
         F.sum(

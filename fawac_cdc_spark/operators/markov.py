@@ -33,11 +33,12 @@ from __future__ import annotations
 
 from itertools import permutations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ..streaming.batch_equiv import sessionize
 from .analytics import SESSION_GAP_SECONDS
 
 # The touchpoint vocabulary is pinned (the KS_TYPE_A convention: fixture
@@ -222,26 +223,8 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule, (ts, event_id) total order, FIRST-conversion truncation (a
     session's events after its first '{conv}' are ignored), START as a
     synthetic source state, EXIT as the non-converting absorber."""
-    e = load_table(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    new_sess = F.when(
-        prev.isNull()
-        | (F.col("ts") > prev + F.expr(f"INTERVAL {SESSION_GAP_SECONDS} SECONDS")),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    sessioned = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0)).alias(
-            "sess_id"
-        ),
-    )
-    ws = Window.partitionBy("user_id", "sess_id").orderBy("ts", "event_id")
+    sessioned = sessionize(load_table(spark, sf_dir, "events"))
+    ws = Window.partitionBy("user_id", "session_seq").orderBy("ts", "event_id")
     kept = (
         sessioned.withColumn(
             "prior_p",
@@ -255,7 +238,7 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("prior_p") == 0)
         .select(
             "user_id",
-            "sess_id",
+            "session_seq",
             "ts",
             "event_id",
             F.when(F.col("event_type") == MARKOV_CONV, F.lit("CONV"))

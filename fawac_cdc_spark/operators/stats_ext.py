@@ -44,7 +44,6 @@ from .helpers import (
     materialize,
     money,
     pwm_grain_weights,
-    rank_bucket,
 )
 
 # --- Spearman ----------------------------------------------------------------
@@ -1128,6 +1127,7 @@ from .analytics import (  # noqa: E402 — ONE definition each
     ACF_ORACLE_CTES,
     SESSION_GAP_SECONDS,
     acf_monthly_frames,
+    session_transition_counts,
 )
 
 
@@ -1698,35 +1698,14 @@ def session_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     how predictable user behavior is (low = rigid funnels, high ≈
     ln|types| = users wander), with its perplexity companion.
 
-    The transition table is the shared sessionization discipline
+    The transition table is ``analytics.session_transition_counts``
     (30-min strict gap, (ts, event_id) order); counts are exact
     integers; the ≤|types|² ln terms follow the mutual_info convention
     (identical operand order, round(6) on the final sum)."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    new_sess = F.when(
-        prev.isNull()
-        | (F.col("ts") > prev + F.expr(f"INTERVAL {SESSION_GAP_SECONDS} SECONDS")),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    sessioned = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.sum(new_sess)
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("sess_id"),
-    )
-    ws = Window.partitionBy("user_id", "sess_id").orderBy("ts", "event_id")
-    trans = sessioned.select(
-        F.col("event_type").alias("src"),
-        F.lead("event_type").over(ws).alias("dst"),
-    ).where(F.col("dst").isNotNull())
-    c = (
-        trans.groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("nij"))
+    c = session_transition_counts(load_table(spark, sf_dir, "events")).select(
+        F.col("from_type").alias("src"),
+        F.col("to_type").alias("dst"),
+        F.col("n").alias("nij"),
     )
     ci = c.groupBy("src").agg(F.sum("nij").alias("ni"))
     tot = c.agg(F.sum("nij").cast("double").alias("n"))
@@ -1898,25 +1877,8 @@ def _kw_rank_frames(spark: SparkSession, sf_dir: str):
     g = x.groupBy("v", "event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("ng")
     )
-    vg = (
-        g.groupBy("v")
-        .agg(F.sum("ng").cast("bigint").alias("c"))
-        .withColumn("bucket", rank_bucket("v"))
-    )
-    wv = (
-        Window.partitionBy("bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    vb = vg.withColumn("cum_b", F.sum("c").over(wv))
-    bt = vg.groupBy("bucket").agg(F.sum("c").alias("bc"))
-    wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    bto = bt.select(
-        "bucket", F.coalesce(F.sum("bc").over(wb), F.lit(0)).alias("boff")
-    )
-    r = vb.join(F.broadcast(bto), "bucket").select(
-        "v", "c", (F.col("boff") + F.col("cum_b") - F.col("c")).alias("cb")
-    )
+    vg = g.groupBy("v").agg(F.sum("ng").cast("bigint").alias("c"))
+    r = bucketed_predecessor_counts(vg, "v", "c")
     per_type = (
         g.join(r, "v")
         .groupBy("event_type")

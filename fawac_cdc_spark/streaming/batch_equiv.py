@@ -11,6 +11,12 @@ which transitively pins the streaming implementations to the oracle:
 - tumbling-window rollup → hour bucket aggregation
 - sessionization with 30-min gap → ``session_window`` analog
   (reference episodes, ``fawac.py:597-611`` — A35)
+
+Two of these rules are shared engine-wide and built only here:
+``sessionize`` (the session gap, for every session query) and
+``newest_per_user`` / ``latest_state`` (the CDC newest row, for the
+upsert sink in ``streaming/cdc.py``).  The DuckDB oracles keep their
+own hand-written SQL as the independent check.
 """
 
 from __future__ import annotations
@@ -23,6 +29,54 @@ from ..operators.helpers import materialize, money
 from ..registry import register
 
 SESSION_GAP_MIN = 30
+
+
+def sessionize(events: DataFrame) -> DataFrame:
+    """``events`` plus ``session_seq``, each row's 1-based session number
+    within its user: the engine's ONE session rule (the reference's
+    episode accumulation, ``rollout`` ``fawac.py:597-611``, A35).
+
+    In each user's (ts, event_id) order a row opens a session when it is
+    the user's first or follows the previous row by strictly more than
+    SESSION_GAP_MIN minutes, so a gap of exactly 30:00.000000 continues
+    the session.  Timestamp + interval arithmetic keeps microseconds
+    (``unix_timestamp`` truncates to whole seconds and would sessionize
+    a 1800.5 s gap differently from the oracles).  lag → gap flag →
+    running sum: one windowed pass, one shuffle on user_id."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev_ts = F.lag("ts").over(w)
+    new_session = (
+        prev_ts.isNull()
+        | (F.col("ts") > prev_ts + F.expr(f"INTERVAL {SESSION_GAP_MIN} MINUTES"))
+    ).cast("int")
+    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return (
+        events.withColumn("new_session", new_session)
+        .withColumn("session_seq", F.sum("new_session").over(wrun))
+        .drop("new_session")
+    )
+
+
+def newest_per_user(df: DataFrame) -> DataFrame:
+    """The newest row of each user_id, every column kept: the ONE
+    "newest row wins" rule of the CDC state — greatest ts, ties broken
+    by the greater event_id.  The upsert's merge and snapshot writes in
+    ``streaming/cdc.py`` and the batch forms here all apply it."""
+    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
+    return (
+        df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn")
+    )
+
+
+def latest_state(state: DataFrame) -> DataFrame:
+    """A newest-row-per-user frame as the CDC state output
+    (user_id, last_ts, last_type, last_value)."""
+    return state.select(
+        "user_id",
+        F.col("ts").alias("last_ts"),
+        F.col("event_type").alias("last_type"),
+        F.col("value").alias("last_value"),
+    )
 
 
 @register(
@@ -43,18 +97,7 @@ def cdc_latest_state_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC upsert materialization: latest event per key — the batch
     semantics of the ``foreachBatch`` upsert sink in ``streaming/cdc.py``.
     One shuffle on user_id; at scale this is the MERGE-on-key pattern."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            F.col("event_type").alias("last_type"),
-            F.col("value").alias("last_value"),
-        )
-    )
+    return latest_state(newest_per_user(load_table(spark, sf_dir, "events")))
 
 
 @register(
@@ -144,20 +187,9 @@ def session_agg_30min_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the reference's episode accumulation (``rollout`` ``fawac.py:597-611``,
     A35) and the batch analog of ``session_window(ts, '30 minutes')``.
 
-    lag → gap flag → running sum assigns session ids in one windowed pass
-    (single shuffle on user_id).
+    Session ids come from :func:`sessionize`.
     """
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(w)
-    new_session = (
-        prev_ts.isNull()
-        | (F.col("ts") > prev_ts + F.expr(f"INTERVAL {SESSION_GAP_MIN} MINUTES"))
-    ).cast("int")
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sessions = e.withColumn("new_session", new_session).withColumn(
-        "session_seq", F.sum("new_session").over(wrun)
-    )
+    sessions = sessionize(load_table(spark, sf_dir, "events"))
     return sessions.groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("ts").alias("session_start"),
@@ -362,18 +394,8 @@ def cdc_state_with_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDC DELETE record) disappears from the state entirely — the full
     upsert+delete MERGE semantics, one windowed scan per key, same single
     shuffle as the plain upsert."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .where((F.col("rn") == 1) & (F.col("event_type") != "error"))
-        .select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            F.col("event_type").alias("last_type"),
-            F.col("value").alias("last_value"),
-        )
-    )
+    newest = newest_per_user(load_table(spark, sf_dir, "events"))
+    return latest_state(newest.where(F.col("event_type") != "error"))
 
 
 EWMA_TAU = 0.1  # reference soft_update tau (fawac.py:15-17)

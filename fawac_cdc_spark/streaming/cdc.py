@@ -4,6 +4,10 @@ The events table is the CDC stream: ``readStream`` file source →
 watermark → windowed/stateful operators → ``foreachBatch`` upsert
 materialization. Batch equivalents live in ``streaming/batch_equiv.py``
 (oracle-checked); ``tests/test_streaming.py`` asserts stream-batch parity.
+Two rules are taken from there rather than restated: the upsert keeps
+``newest_per_user`` (greatest (ts, event_id) per user) and reports it
+through ``latest_state``, and the session operators default to
+``SESSION_GAP_MIN``.
 
 Reference anchors:
 - micro-batch orchestration (``fawac.py:521-551`` — A32) → trigger loop
@@ -53,13 +57,16 @@ import os
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..catalog import SCHEMAS
 from ..operators.helpers import money
+# the batch forms own the session gap and the newest-row rule; importing
+# them (not mirroring them) keeps stream and batch from drifting apart
+from .batch_equiv import SESSION_GAP_MIN, latest_state, newest_per_user
 
 
 def _money_cents(v) -> int:
@@ -147,7 +154,9 @@ def dedup_first_stream(events: DataFrame, watermark: str = "30 days") -> DataFra
     )
 
 
-def session_window_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_window_stream(
+    events: DataFrame, gap: str = f"{SESSION_GAP_MIN} minutes"
+) -> DataFrame:
     """Native session windows — the reference's episode abstraction (A35).
 
     (batch equiv: session_agg_30min_gap, modulo the closed/open boundary
@@ -179,13 +188,6 @@ def session_window_stream(events: DataFrame, gap: str = "30 minutes") -> DataFra
 # (e.g. 4096 buckets over 100 TB ≈ 25 GB/bucket).
 
 N_STATE_BUCKETS = 16
-
-
-def _latest_per_key(df: DataFrame) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn")
-    )
 
 
 def _bucket_col() -> F.Column:
@@ -221,8 +223,6 @@ def _read_manifest(state_dir: str, version: int | None = None) -> dict[str, str]
 
 def _commit_manifest(state_dir: str, epoch_id: int, buckets: dict[str, str]) -> None:
     """Atomic swap-on-commit: write sidecar, rename into place."""
-    import json
-
     path = os.path.join(state_dir, f"v{epoch_id}.json")
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
@@ -266,7 +266,7 @@ def write_state_snapshot(df: DataFrame, state_dir: str, epoch_id: int) -> None:
             "immutable — pick an unused id (see state_versions())"
         )
     epoch_rel = f"data/e{epoch_id}"
-    _latest_per_key(df).withColumn("bucket", _bucket_col()).write.mode(
+    newest_per_user(df).withColumn("bucket", _bucket_col()).write.mode(
         "overwrite"
     ).partitionBy("bucket").parquet(os.path.join(state_dir, epoch_rel))
     touched = sorted(
@@ -344,7 +344,7 @@ def cdc_upsert_run(
             merged = prev.unionByName(batch)
         epoch_rel = f"data/e{epoch_id}"
         (
-            _latest_per_key(merged)
+            newest_per_user(merged)
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(os.path.join(state_dir, epoch_rel))
@@ -363,12 +363,7 @@ def cdc_upsert_run(
     q.awaitTermination()
     final = read_upsert_state(spark, state_dir)
     assert final is not None, "no micro-batches processed"
-    return final.select(
-        "user_id",
-        F.col("ts").alias("last_ts"),
-        F.col("event_type").alias("last_type"),
-        F.col("value").alias("last_value"),
-    )
+    return latest_state(final)
 
 
 # --- keyed scans: the one shape of the timeout-free stateful operators -----
@@ -679,10 +674,6 @@ def enrich_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
 
 
 # --- A35 with event-time timeouts (applyInPandasWithState) -----------------
-
-# the ONE session-gap constant: importing (not mirroring) keeps the
-# stream==batch equivalence contract from silently diverging
-from .batch_equiv import SESSION_GAP_MIN  # noqa: E402
 
 SESSION_CLOSE_OUTPUT_SCHEMA = T.StructType(
     [

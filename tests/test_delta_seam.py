@@ -80,18 +80,18 @@ def _batches(spark):
 def test_delta_merge_matches_emulated_upsert(delta_spark, tmp_path):
     """DeltaTable.merge with latest-wins semantics must produce the same
     final state as the versioned-parquet emulation's latest-per-key rule
-    (streaming/cdc.py:_latest_per_key): newest (ts, event_id) per user."""
+    (streaming/batch_equiv.py:newest_per_user): newest (ts, event_id) per user."""
     from delta.tables import DeltaTable
     from pyspark.sql import functions as F
 
-    from fawac_cdc_spark.streaming.cdc import _latest_per_key
+    from fawac_cdc_spark.streaming.batch_equiv import newest_per_user
 
     path = str(tmp_path / "delta_state")
     b0, b1 = _batches(delta_spark)
 
-    _latest_per_key(b0).write.format("delta").save(path)
+    newest_per_user(b0).write.format("delta").save(path)
     tgt = DeltaTable.forPath(delta_spark, path)
-    src = _latest_per_key(b1)
+    src = newest_per_user(b1)
     (
         tgt.alias("t")
         .merge(src.alias("s"), "t.user_id = s.user_id")
@@ -109,7 +109,7 @@ def test_delta_merge_matches_emulated_upsert(delta_spark, tmp_path):
         .collect()
     )
     want = (
-        _latest_per_key(b0.unionByName(b1)).orderBy("user_id").collect()
+        newest_per_user(b0.unionByName(b1)).orderBy("user_id").collect()
     )
     assert [r.asDict() for r in got] == [r.asDict() for r in want]
 
