@@ -6,7 +6,7 @@ materialization. Batch equivalents live in ``streaming/batch_equiv.py``
 (oracle-checked); ``tests/test_streaming.py`` asserts stream-batch parity.
 Two rules are taken from there rather than restated: the upsert keeps
 ``newest_per_user`` (greatest (ts, event_id) per user) and reports it
-through ``latest_state``, and the session operators default to
+through ``latest_state``, and the session operators use
 ``SESSION_GAP_MIN``.
 
 Reference anchors:
@@ -90,16 +90,14 @@ def _money_cents(v) -> int:
 EVENT_STREAM_SCHEMA = SCHEMAS["events"]
 
 
-def read_event_stream(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def read_event_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """File-stream source over a directory of event parquet chunks.
 
     ``maxFilesPerTrigger=1`` makes each chunk one micro-batch — the local
     stand-in for a Kafka/CDC feed's incremental arrival."""
     return (
         spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
 
@@ -130,7 +128,7 @@ def hourly_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-def dedup_first_stream(events: DataFrame, watermark: str = "30 days") -> DataFrame:
+def dedup_first_stream(events: DataFrame) -> DataFrame:
     """Stateful keep-first dedup on (user_id, event_type) with BOUNDED
     state: ``dropDuplicatesWithinWatermark`` keeps the first arrival per
     key and — unlike plain ``dropDuplicates``, whose per-key state lives
@@ -143,7 +141,7 @@ def dedup_first_stream(events: DataFrame, watermark: str = "30 days") -> DataFra
     exact on any finite replay shorter than the horizon)."""
     return (
         _with_event_time(events)
-        .withWatermark("ts_ltz", watermark)
+        .withWatermark("ts_ltz", "30 days")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select(
             "user_id",
@@ -154,9 +152,7 @@ def dedup_first_stream(events: DataFrame, watermark: str = "30 days") -> DataFra
     )
 
 
-def session_window_stream(
-    events: DataFrame, gap: str = f"{SESSION_GAP_MIN} minutes"
-) -> DataFrame:
+def session_window_stream(events: DataFrame) -> DataFrame:
     """Native session windows — the reference's episode abstraction (A35).
 
     (batch equiv: session_agg_30min_gap, modulo the closed/open boundary
@@ -164,7 +160,10 @@ def session_window_stream(
     return (
         _with_event_time(events)
         .withWatermark("ts_ltz", "1 day")
-        .groupBy(F.session_window("ts_ltz", gap).alias("sw"), F.col("user_id"))
+        .groupBy(
+            F.session_window("ts_ltz", f"{SESSION_GAP_MIN} minutes").alias("sw"),
+            F.col("user_id"),
+        )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("ts").alias("session_start"),
@@ -183,9 +182,12 @@ def session_window_stream(
 # manifest re-references their existing files).  This is the plain-parquet
 # emulation of Delta/Iceberg MERGE + transaction log (SURVEY §4.2.2):
 # data files are immutable, a commit is one atomic manifest rename, and
-# readers resolve the newest manifest to a file list.  At 100 TB the
-# bucket count is sized so one bucket ≈ one executor-comfortable rewrite
-# (e.g. 4096 buckets over 100 TB ≈ 25 GB/bucket).
+# readers resolve the newest manifest to a file list.  Every epoch, batch
+# snapshot or micro-batch, is written and committed by ``_commit_epoch``:
+# a version is the set of bucket directories its manifest lists, namely
+# those it carries forward plus those its own write produced.  At 100 TB
+# the bucket count is sized so one bucket ≈ one executor-comfortable
+# rewrite (e.g. 4096 buckets over 100 TB ≈ 25 GB/bucket).
 
 N_STATE_BUCKETS = 16
 
@@ -194,8 +196,9 @@ def _bucket_col() -> F.Column:
     return F.pmod(F.hash(F.col("user_id")), F.lit(N_STATE_BUCKETS)).cast("int")
 
 
-def _state_versions(state_dir: str) -> list[int]:
-    """Committed manifest epochs, ascending."""
+def state_versions(state_dir: str) -> list[int]:
+    """Committed snapshot epochs, ascending: the versions
+    ``read_upsert_state(version=...)`` can time-travel to."""
     if not os.path.isdir(state_dir):
         return []
     out = []
@@ -210,7 +213,7 @@ def _read_manifest(state_dir: str, version: int | None = None) -> dict[str, str]
 
     ``version`` selects a specific committed epoch (time travel); default
     is the newest commit."""
-    versions = _state_versions(state_dir)
+    versions = state_versions(state_dir)
     if not versions:
         return {}
     if version is None:
@@ -230,25 +233,57 @@ def _commit_manifest(state_dir: str, epoch_id: int, buckets: dict[str, str]) -> 
     os.replace(tmp, path)
 
 
+def _read_buckets(spark: SparkSession, state_dir: str, rels) -> DataFrame:
+    """State rows of the given state_dir-relative bucket directories.
+    They are ``SCHEMAS["events"]`` rows, read with that schema (no
+    inference job); a snapshot written from a narrower frame reads back
+    its missing columns as NULL."""
+    paths = [os.path.join(state_dir, rel) for rel in rels]
+    return spark.read.schema(SCHEMAS["events"]).parquet(*paths)
+
+
 def read_upsert_state(
     spark: SparkSession, state_dir: str, version: int | None = None
 ) -> DataFrame | None:
     """Read a committed snapshot (A33 restore semantics): resolve the
     manifest — newest by default, or any committed epoch via ``version``
     (time travel; data files are immutable, so every historical manifest
-    stays readable until its epochs are vacuumed).  State rows are
-    ``SCHEMAS["events"]`` rows, read with that schema (no inference job);
-    a snapshot written from a narrower frame reads back its missing
-    columns as NULL."""
+    stays readable until its epochs are vacuumed)."""
     buckets = _read_manifest(state_dir, version)
     if not buckets:
         return None
-    paths = [os.path.join(state_dir, rel) for rel in buckets.values()]
-    return spark.read.schema(SCHEMAS["events"]).parquet(*paths)
+    return _read_buckets(spark, state_dir, buckets.values())
+
+
+def _commit_epoch(
+    df: DataFrame, state_dir: str, epoch_id: int, carried: dict[str, str]
+) -> None:
+    """The state store's one write and commit: write the newest row per
+    user of ``df`` to ``data/e{epoch_id}``, partitioned by bucket, then
+    commit ``carried`` plus one entry per ``bucket=K`` directory that
+    write produced.  The overwrite first clears whatever an earlier,
+    uncommitted attempt at this epoch left there, so the listing holds
+    exactly this write's buckets; a write of no rows commits ``carried``
+    unchanged."""
+    epoch_rel = f"data/e{epoch_id}"
+    epoch_dir = os.path.join(state_dir, epoch_rel)
+    (
+        newest_per_user(df)
+        .withColumn("bucket", _bucket_col())
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(epoch_dir)
+    )
+    written = {
+        d.split("=", 1)[1]: f"{epoch_rel}/{d}"
+        for d in os.listdir(epoch_dir)
+        if d.startswith("bucket=")
+    }
+    _commit_manifest(state_dir, epoch_id, {**carried, **written})
 
 
 def write_state_snapshot(df: DataFrame, state_dir: str, epoch_id: int) -> None:
-    """Batch-mode FULL-snapshot commit through the SAME manifest machinery
+    """Batch-mode FULL-snapshot commit through the same ``_commit_epoch``
     the streaming upsert sink uses: ``df`` is the complete state, so the
     committed manifest references ONLY this epoch's buckets (unlike the
     incremental `cdc_upsert_run` MERGE, which carries untouched buckets
@@ -258,30 +293,13 @@ def write_state_snapshot(df: DataFrame, state_dir: str, epoch_id: int) -> None:
     whether an epoch came from a micro-batch or a batch job (the
     Delta/Iceberg snapshot-commit shape).  Epoch ids are immutable:
     reusing a committed id would overwrite data files older manifests
-    still reference, so that is refused loudly.  The touched-bucket
-    collect runs on the RAW keys (no window job; bounded by N_STATE_BUCKETS)."""
-    if epoch_id in _state_versions(state_dir):
+    still reference, so that is refused loudly."""
+    if epoch_id in state_versions(state_dir):
         raise ValueError(
             f"epoch {epoch_id} already committed in {state_dir}; epochs are "
             "immutable — pick an unused id (see state_versions())"
         )
-    epoch_rel = f"data/e{epoch_id}"
-    newest_per_user(df).withColumn("bucket", _bucket_col()).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(os.path.join(state_dir, epoch_rel))
-    touched = sorted(
-        r["bucket"]
-        for r in df.select(_bucket_col().alias("bucket"))
-        .distinct()
-        .collect()
-    )
-    manifest = {str(k): f"{epoch_rel}/bucket={k}" for k in touched}
-    _commit_manifest(state_dir, epoch_id, manifest)
-
-
-def state_versions(state_dir: str) -> list[int]:
-    """Public list of committed snapshot epochs, ascending (time travel)."""
-    return _state_versions(state_dir)
+    _commit_epoch(df, state_dir, epoch_id, carried={})
 
 
 def cdc_upsert_run(
@@ -308,7 +326,7 @@ def cdc_upsert_run(
     """
     offsets = os.path.join(checkpoint_dir, "offsets")
     started = os.path.isdir(offsets) and any(n.isdigit() for n in os.listdir(offsets))
-    if not started and _state_versions(state_dir):
+    if not started and state_versions(state_dir):
         raise ValueError(
             f"checkpoint {checkpoint_dir} has no offsets but state dir "
             f"{state_dir} already holds committed epochs; a fresh checkpoint "
@@ -320,39 +338,18 @@ def cdc_upsert_run(
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         if os.path.exists(os.path.join(state_dir, f"v{epoch_id}.json")):
             return
-        sess = batch_df.sparkSession
         manifest = _read_manifest(state_dir)
-        batch = batch_df.withColumn("bucket", _bucket_col())
-        touched = sorted(
-            r["bucket"] for r in batch.select("bucket").distinct().collect()
-        )
-        if not touched:
-            _commit_manifest(state_dir, epoch_id, manifest)
-            return
-        prev_paths = [
-            os.path.join(state_dir, manifest[str(k)])
-            for k in touched
-            if str(k) in manifest
-        ]
-        merged = batch
-        if prev_paths:
-            prev = (
-                sess.read.schema(SCHEMAS["events"])
-                .parquet(*prev_paths)
-                .withColumn("bucket", _bucket_col())
-            )
-            merged = prev.unionByName(batch)
-        epoch_rel = f"data/e{epoch_id}"
-        (
-            newest_per_user(merged)
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(state_dir, epoch_rel))
-        )
-        new_manifest = dict(manifest)
-        for k in touched:
-            new_manifest[str(k)] = f"{epoch_rel}/bucket={k}"
-        _commit_manifest(state_dir, epoch_id, new_manifest)
+        # which previous buckets to merge must be known before the write
+        touched = {
+            str(r["bucket"])
+            for r in batch_df.select(_bucket_col().alias("bucket")).distinct().collect()
+        }
+        prev = [rel for k, rel in manifest.items() if k in touched]
+        merged = batch_df
+        if prev:
+            sess = batch_df.sparkSession
+            merged = _read_buckets(sess, state_dir, prev).unionByName(batch_df)
+        _commit_epoch(merged, state_dir, epoch_id, carried=manifest)
 
     q = (
         events.writeStream.foreachBatch(upsert)
@@ -476,13 +473,13 @@ def ewma_target_stream_gs(events: DataFrame, tau: float = 0.1) -> DataFrame:
     )
 
 
-def sliding_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def sliding_rollup_stream(events: DataFrame) -> DataFrame:
     """Watermarked sliding-window rollup, 1-hour window advancing every 15
     minutes (batch equiv: sliding_1h_15min_rollup). Each event expands
     into window/slide = 4 overlapping windows map-side."""
     return (
         _with_event_time(events)
-        .withWatermark("ts_ltz", watermark)
+        .withWatermark("ts_ltz", "2 hours")
         .groupBy(
             F.window("ts_ltz", "1 hour", "15 minutes").alias("win"),
             F.col("event_type"),
@@ -694,7 +691,7 @@ SESSION_CLOSE_STATE_SCHEMA = T.StructType(
 )
 
 
-def session_close_stream(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> DataFrame:
+def session_close_stream(events: DataFrame) -> DataFrame:
     """Inactivity-closed sessions via ``applyInPandasWithState`` with an
     EVENT-TIME TIMEOUT — the reference's episode rollout with early stop
     (``fawac.py:597-611``, A35) as a push-based stateful operator: a
@@ -714,8 +711,8 @@ def session_close_stream(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> D
     close (last + gap) the final watermark passes is emitted with
     identical aggregates (tests/test_streaming.py pins it).
     """
-    gap_us = gap_min * 60_000_000
-    gap_ms = gap_min * 60_000
+    gap_us = SESSION_GAP_MIN * 60_000_000
+    gap_ms = SESSION_GAP_MIN * 60_000
 
     def _emit(user_id, start_us, last_us, n, cents):
         return pd.DataFrame(
@@ -835,14 +832,12 @@ def stateful_user_profile_stream(events: DataFrame) -> DataFrame:
 DOC_STREAM_SCHEMA = SCHEMAS["documents"]
 
 
-def read_document_stream(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def read_document_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """File-stream source over a directory of document parquet chunks —
     the local stand-in for a crawl feed arriving incrementally."""
     return (
         spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
 
@@ -993,14 +988,12 @@ WM_LSH_STATE_SCHEMA = T.StructType(
 )
 
 
-def read_document_stream_ts(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def read_document_stream_ts(spark: SparkSession, source_dir: str) -> DataFrame:
     """File-stream source over document chunks that carry an
     ``ingest_ts`` event-time column (the watermarked feed shape)."""
     return (
         spark.readStream.schema(DOC_TS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
 
@@ -1102,15 +1095,13 @@ WM_SEM_DEDUP_STATE_SCHEMA = T.StructType(
 )
 
 
-def read_embedding_stream_ts(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def read_embedding_stream_ts(spark: SparkSession, source_dir: str) -> DataFrame:
     """File-stream source over embedding chunks that carry an
     ``ingest_ts`` event-time column — the local stand-in for an
     embedding feed arriving incrementally."""
     return (
         spark.readStream.schema(EMB_TS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
 
@@ -1528,7 +1519,7 @@ def vacuum_state(state_dir: str, retain_last: int = 2) -> dict[str, int]:
     """
     import shutil
 
-    versions = _state_versions(state_dir)
+    versions = state_versions(state_dir)
     if retain_last < 1:
         raise ValueError("retain_last must be >= 1")
     expired = versions[:-retain_last] if len(versions) > retain_last else []

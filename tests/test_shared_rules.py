@@ -40,8 +40,8 @@ _ALLOWED = {
         "gap in seconds for the oracles' SQL",
         ("operators/analytics.py", "debounced_events"): "lags ts over "
         "(user_id, event_type) and keeps rows >= 300 s apart; not a session",
-        ("streaming/cdc.py", "session_close_stream"): "streaming default: "
-        "the push-based operator folds the gap into its event-time timeout "
+        ("streaming/cdc.py", "session_close_stream"): "the push-based "
+        "operator folds the gap into its event-time timeout "
         "(pinned to session_agg_30min_gap in tests/test_streaming.py)",
     },
     "newest row": {

@@ -103,7 +103,6 @@ def test_cdc_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     the new manifest re-references them byte-identically."""
     import glob
     import hashlib
-    import json
     import os
     import time
 
@@ -139,8 +138,7 @@ def test_cdc_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     cdc.cdc_upsert_run(spark, str(feed_dir), state_dir, ckpt)
 
-    with open(sorted(glob.glob(f"{state_dir}/v*.json"))[-1]) as f:
-        m1 = json.load(f)["buckets"]
+    m1 = cdc._read_manifest(state_dir)
 
     def file_hashes(reldir):
         out = {}
@@ -155,9 +153,7 @@ def test_cdc_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     write_chunk("c2.parquet", [(1000, ts(2), 0, "purchase", 2.0, None)], base + 10)
     final = cdc.cdc_upsert_run(spark, str(feed_dir), state_dir, ckpt)
 
-    versions = cdc._state_versions(state_dir)
-    with open(os.path.join(state_dir, f"v{versions[-1]}.json")) as f:
-        m2 = json.load(f)["buckets"]
+    m2 = cdc._read_manifest(state_dir)
 
     changed = [k for k in m2 if m2[k] != m1.get(k)]
     assert len(changed) == 1, f"expected 1 rewritten bucket, got {changed}"
@@ -295,13 +291,13 @@ def test_cdc_upsert_resumes_from_checkpoint(spark, sf_dir, chunk_dir, tmp_path):
     # phase 1: only half the feed has arrived
     arrive(files[: len(files) // 2])
     cdc.cdc_upsert_run(spark, str(feed_dir), state_dir, ckpt)
-    versions_after_half = cdc._state_versions(state_dir)
+    versions_after_half = cdc.state_versions(state_dir)
 
     # phase 2: the rest arrives; restart with the SAME checkpoint — only
     # the unseen files replay
     arrive(files[len(files) // 2 :])
     final = cdc.cdc_upsert_run(spark, str(feed_dir), state_dir, ckpt).toPandas()
-    versions_after_full = cdc._state_versions(state_dir)
+    versions_after_full = cdc.state_versions(state_dir)
     assert len(versions_after_full) > len(versions_after_half)
     assert versions_after_full[: len(versions_after_half)] == versions_after_half
 
@@ -317,7 +313,6 @@ def test_cdc_upsert_replays_committed_epoch_as_noop(spark, chunk_dir, tmp_path):
     run left them: committed data files are immutable (older manifests
     and open time-travel reads reference them)."""
     import glob
-    import json
     import os
 
     state_dir = str(tmp_path / "state")
@@ -326,8 +321,7 @@ def test_cdc_upsert_replays_committed_epoch_as_noop(spark, chunk_dir, tmp_path):
     versions = cdc.state_versions(state_dir)
 
     def newest_manifest():
-        with open(os.path.join(state_dir, f"v{versions[-1]}.json")) as f:
-            return json.load(f)
+        return cdc._read_manifest(state_dir, versions[-1])
 
     def data_files():
         pattern = os.path.join(state_dir, "data", "**", "*.parquet")
@@ -351,6 +345,97 @@ def test_cdc_upsert_replays_committed_epoch_as_noop(spark, chunk_dir, tmp_path):
     assert newest_manifest() == manifest
     assert data_files() == files
     assert not compare_frames(replayed, first)
+
+
+def test_cdc_upsert_crash_between_write_and_commit(
+    spark, sf_dir, chunk_dir, tmp_path, monkeypatch
+):
+    """A crash after epoch N's data write and before its manifest commit
+    leaves ``data/eN`` that no manifest lists.  A vacuum that expires no
+    version reclaims that orphan and nothing a committed version reads;
+    a restart with the same checkpoint replays epoch N, rewrites its data
+    and commits it, and the state converges to the batch answer."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    crash_epoch = 2
+    commit = cdc._commit_manifest
+
+    def crashing_commit(state_dir, epoch_id, buckets):
+        if epoch_id == crash_epoch:
+            raise RuntimeError(f"crash before committing epoch {epoch_id}")
+        commit(state_dir, epoch_id, buckets)
+
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    monkeypatch.setattr(cdc, "_commit_manifest", crashing_commit)
+    with pytest.raises(StreamingQueryException, match="crash before committing"):
+        cdc.cdc_upsert_run(spark, chunk_dir, state_dir, ckpt)
+    orphan = os.path.join(state_dir, "data", f"e{crash_epoch}")
+    assert os.path.isdir(orphan)
+    assert not os.path.exists(os.path.join(state_dir, f"v{crash_epoch}.json"))
+
+    versions = cdc.state_versions(state_dir)
+    assert versions == list(range(crash_epoch))
+    rows = {
+        v: cdc.read_upsert_state(spark, state_dir, version=v).count()
+        for v in versions
+    }
+    stats = cdc.vacuum_state(state_dir, retain_last=len(versions))
+    assert stats["n_versions_expired"] == 0 and stats["n_files_removed"] > 0
+    assert not os.path.exists(orphan)
+    for v in versions:
+        for rel in cdc._read_manifest(state_dir, v).values():
+            assert os.path.isdir(os.path.join(state_dir, rel)), (v, rel)
+        assert cdc.read_upsert_state(spark, state_dir, version=v).count() == rows[v]
+
+    monkeypatch.setattr(cdc, "_commit_manifest", commit)
+    final = cdc.cdc_upsert_run(spark, chunk_dir, state_dir, ckpt).toPandas()
+    assert crash_epoch in cdc.state_versions(state_dir)
+    want = cdc_latest_state_per_user(spark, sf_dir).toPandas()
+    assert not compare_frames(final, want)
+
+
+def test_cdc_upsert_empty_batch_commits_previous_manifest(spark, chunk_dir, tmp_path):
+    """A micro-batch with no rows writes no bucket directory, so its
+    epoch commits the previous manifest unchanged."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    empty = tmp_path / "empty"
+    spark.createDataFrame([], cdc.EVENT_STREAM_SCHEMA).coalesce(1).write.parquet(
+        str(empty)
+    )
+    (part,) = glob.glob(f"{empty}/part-*.parquet")
+    first = sorted(glob.glob(f"{chunk_dir}/*.parquet"))[0]
+    base = time.time() - 3600
+    for i, (src, name) in enumerate([(first, "c1.parquet"), (part, "c2.parquet")]):
+        shutil.copy(src, feed / name)
+        os.utime(feed / name, (base + 10 * i, base + 10 * i))
+
+    state_dir = str(tmp_path / "state")
+    cdc.cdc_upsert_run(spark, str(feed), state_dir, str(tmp_path / "ckpt"))
+    assert cdc.state_versions(state_dir) == [0, 1]
+    assert cdc._read_manifest(state_dir, 1) == cdc._read_manifest(state_dir, 0)
+
+def test_vacuum_during_time_travel_read_fails_loudly(spark, sf_dir, tmp_path):
+    """A time-travel read built before a vacuum expires its version must
+    fail when its action runs, not return the rows that survived."""
+    from py4j.protocol import Py4JJavaError
+
+    e = load_table(spark, sf_dir, "events")
+    state_dir = str(tmp_path / "state")
+    cdc.write_state_snapshot(e.where(F.col("user_id") % 2 == 0), state_dir, 0)
+    cdc.write_state_snapshot(e.where(F.col("user_id") % 2 == 1), state_dir, 1)
+    old = cdc.read_upsert_state(spark, state_dir, version=0)
+    cdc.vacuum_state(state_dir, retain_last=1)
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE.FILE_NOT_EXIST"):
+        old.collect()
 
 
 def test_rate_source_produces_event_shaped_rows(spark):
