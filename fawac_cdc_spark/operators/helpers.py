@@ -21,10 +21,13 @@ engines. Two tools make that possible:
 The module also owns materialization: :func:`materialize` is the one
 eager ``localCheckpoint`` in the engine, and :func:`materialize_probed`
 adds an ``Observation`` that an iterative loop reads off the same job.
-Each job runs under the description ``materialize <label>``.
+Each job runs under the description ``materialize <label>``, set by
+:func:`job_description`.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import Column, Observation
 from pyspark.sql import functions as F
@@ -272,25 +275,31 @@ def bucketed_predecessor_counts(gr, val_col: str = "v", cnt_col: str = "c"):
     )
 
 
+@contextmanager
+def job_description(sc, text: str):
+    """Describe every Spark job the block starts on this thread as
+    ``text`` (``spark.job.description``), then restore the caller's
+    description (``None`` removes it).  The job group is left alone, so
+    a caller's group still counts the jobs."""
+    key = "spark.job.description"
+    prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(key, prev)
+
+
 def materialize(df, label: str):
     """Eagerly checkpoint ``df`` (``localCheckpoint(eager=True)``) and
     return the checkpointed frame: the engine's ONE materialization.
 
     Every call site says why it keeps its job (a lineage cut in a loop,
     a value a driver-side loop reads, a plan test's pin, or a frame two
-    consumers read that Catalyst does not reuse).  While the job runs,
-    ``spark.job.description`` is ``materialize <label>``; the caller's
-    previous description is restored afterwards (``None`` removes it).
-    The job group is left alone, so a caller's group still counts the
-    job."""
-    sc = df.sparkSession.sparkContext
-    key = "spark.job.description"
-    prev = sc.getLocalProperty(key)
-    sc.setLocalProperty(key, f"materialize {label}")
-    try:
+    consumers read that Catalyst does not reuse).  The job runs under
+    the description ``materialize <label>`` (:func:`job_description`)."""
+    with job_description(df.sparkSession.sparkContext, f"materialize {label}"):
         return df.localCheckpoint(eager=True)
-    finally:
-        sc.setLocalProperty(key, prev)
 
 
 def materialize_probed(df, label: str, *metrics: Column):

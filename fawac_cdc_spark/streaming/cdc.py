@@ -63,7 +63,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..catalog import SCHEMAS
-from ..operators.helpers import money
+from ..operators.helpers import job_description, money
 # the batch forms own the session gap and the newest-row rule; importing
 # them (not mirroring them) keeps stream and batch from drifting apart
 from .batch_equiv import SESSION_GAP_MIN, latest_state, newest_per_user
@@ -185,15 +185,24 @@ def session_window_stream(events: DataFrame) -> DataFrame:
 # readers resolve the newest manifest to a file list.  Every epoch, batch
 # snapshot or micro-batch, is written and committed by ``_commit_epoch``:
 # a version is the set of bucket directories its manifest lists, namely
-# those it carries forward plus those its own write produced.  At 100 TB
-# the bucket count is sized so one bucket ≈ one executor-comfortable
-# rewrite (e.g. 4096 buckets over 100 TB ≈ 25 GB/bucket).
+# those it carries forward plus those its own write produced.
+#
+# The manifest also records the store's bucket count, ``n_buckets``.  A
+# commit that carries no buckets (a new store's first epoch, a full
+# snapshot) takes one bucket per task slot of its session
+# (``defaultParallelism``); a commit that carries buckets keeps the
+# carried count, so a store keeps the count of the session that created
+# it.  The write shuffles by ``user_id`` into ``n_buckets`` partitions,
+# and Spark's hash partition id is ``_bucket_col``, so each task holds
+# one whole bucket and writes it as one file: a full rewrite is one wave
+# of one-file tasks.  At 100 TB on ~4,000 task slots that is ~4,000
+# buckets of ~25 GB, one executor-comfortable rewrite each.
 
-N_STATE_BUCKETS = 16
 
-
-def _bucket_col() -> F.Column:
-    return F.pmod(F.hash(F.col("user_id")), F.lit(N_STATE_BUCKETS)).cast("int")
+def _bucket_col(n_buckets: int) -> F.Column:
+    """Bucket of a ``user_id``: Spark's ``HashPartitioning(user_id,
+    n_buckets)`` partition id, ``pmod(murmur3(user_id, 42), n)``."""
+    return F.pmod(F.hash(F.col("user_id")), F.lit(n_buckets)).cast("int")
 
 
 def state_versions(state_dir: str) -> list[int]:
@@ -208,28 +217,38 @@ def state_versions(state_dir: str) -> list[int]:
     return sorted(out)
 
 
-def _read_manifest(state_dir: str, version: int | None = None) -> dict[str, str]:
-    """bucket id (str) -> state_dir-relative data directory.
+def _manifest(state_dir: str, version: int | None = None) -> dict:
+    """The committed manifest ``{"epoch", "buckets", "n_buckets"}``.
 
     ``version`` selects a specific committed epoch (time travel); default
-    is the newest commit."""
+    is the newest commit, or ``{}`` when the store holds none.  A version
+    that is not committed raises, also on a store with no commit."""
     versions = state_versions(state_dir)
-    if not versions:
-        return {}
     if version is None:
+        if not versions:
+            return {}
         version = versions[-1]
     elif version not in versions:
         raise ValueError(f"no committed version {version}; have {versions}")
     with open(os.path.join(state_dir, f"v{version}.json")) as f:
-        return json.load(f)["buckets"]
+        return json.load(f)
 
 
-def _commit_manifest(state_dir: str, epoch_id: int, buckets: dict[str, str]) -> None:
+def _read_manifest(state_dir: str, version: int | None = None) -> dict[str, str]:
+    """bucket id (str) -> state_dir-relative data directory of a
+    committed manifest (:func:`_manifest`)."""
+    return _manifest(state_dir, version).get("buckets", {})
+
+
+def _commit_manifest(
+    state_dir: str, epoch_id: int, buckets: dict[str, str], n_buckets: int
+) -> None:
     """Atomic swap-on-commit: write sidecar, rename into place."""
     path = os.path.join(state_dir, f"v{epoch_id}.json")
     tmp = path + ".tmp"
+    doc = {"epoch": epoch_id, "buckets": buckets, "n_buckets": n_buckets}
     with open(tmp, "w") as f:
-        json.dump({"epoch": epoch_id, "buckets": buckets}, f, sort_keys=True)
+        json.dump(doc, f, sort_keys=True)
     os.replace(tmp, path)
 
 
@@ -255,31 +274,46 @@ def read_upsert_state(
     return _read_buckets(spark, state_dir, buckets.values())
 
 
+def _n_buckets(spark: SparkSession, manifest: dict) -> int:
+    """Bucket count of a commit that carries ``manifest``: the carried
+    manifest's own count, or one bucket per task slot of this session
+    when it carries no buckets."""
+    if manifest.get("buckets"):
+        return manifest["n_buckets"]
+    return spark.sparkContext.defaultParallelism
+
+
 def _commit_epoch(
-    df: DataFrame, state_dir: str, epoch_id: int, carried: dict[str, str]
+    df: DataFrame,
+    state_dir: str,
+    epoch_id: int,
+    carried: dict[str, str],
+    n_buckets: int,
 ) -> None:
     """The state store's one write and commit: write the newest row per
-    user of ``df`` to ``data/e{epoch_id}``, partitioned by bucket, then
-    commit ``carried`` plus one entry per ``bucket=K`` directory that
-    write produced.  The overwrite first clears whatever an earlier,
-    uncommitted attempt at this epoch left there, so the listing holds
-    exactly this write's buckets; a write of no rows commits ``carried``
-    unchanged."""
+    user of ``df`` to ``data/e{epoch_id}``, one file per bucket of
+    ``n_buckets``, then commit ``carried`` plus one entry per
+    ``bucket=K`` directory that write produced.  The overwrite first
+    clears whatever an earlier, uncommitted attempt at this epoch left
+    there, so the listing holds exactly this write's buckets; a write of
+    no rows commits ``carried`` unchanged.  Its jobs run as
+    ``cdc e{epoch_id} write``."""
     epoch_rel = f"data/e{epoch_id}"
     epoch_dir = os.path.join(state_dir, epoch_rel)
-    (
-        newest_per_user(df)
-        .withColumn("bucket", _bucket_col())
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(epoch_dir)
-    )
+    with job_description(df.sparkSession.sparkContext, f"cdc e{epoch_id} write"):
+        (
+            newest_per_user(df.repartition(n_buckets, "user_id"))
+            .withColumn("bucket", _bucket_col(n_buckets))
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(epoch_dir)
+        )
     written = {
         d.split("=", 1)[1]: f"{epoch_rel}/{d}"
         for d in os.listdir(epoch_dir)
         if d.startswith("bucket=")
     }
-    _commit_manifest(state_dir, epoch_id, {**carried, **written})
+    _commit_manifest(state_dir, epoch_id, {**carried, **written}, n_buckets)
 
 
 def write_state_snapshot(df: DataFrame, state_dir: str, epoch_id: int) -> None:
@@ -288,18 +322,19 @@ def write_state_snapshot(df: DataFrame, state_dir: str, epoch_id: int) -> None:
     committed manifest references ONLY this epoch's buckets (unlike the
     incremental `cdc_upsert_run` MERGE, which carries untouched buckets
     forward) — carrying previous buckets here would resurrect keys absent
-    from ``df``, which is neither snapshot nor upsert semantics.
-    ``read_upsert_state(version=...)`` time travel then works identically
-    whether an epoch came from a micro-batch or a batch job (the
-    Delta/Iceberg snapshot-commit shape).  Epoch ids are immutable:
-    reusing a committed id would overwrite data files older manifests
-    still reference, so that is refused loudly."""
+    from ``df``, which is neither snapshot nor upsert semantics.  As a
+    commit that carries nothing, it takes one bucket per task slot of
+    the session.  ``read_upsert_state(version=...)`` time travel then
+    works identically whether an epoch came from a micro-batch or a
+    batch job (the Delta/Iceberg snapshot-commit shape).  Epoch ids are
+    immutable: reusing a committed id would overwrite data files older
+    manifests still reference, so that is refused loudly."""
     if epoch_id in state_versions(state_dir):
         raise ValueError(
             f"epoch {epoch_id} already committed in {state_dir}; epochs are "
             "immutable — pick an unused id (see state_versions())"
         )
-    _commit_epoch(df, state_dir, epoch_id, carried={})
+    _commit_epoch(df, state_dir, epoch_id, {}, _n_buckets(df.sparkSession, {}))
 
 
 def cdc_upsert_run(
@@ -311,10 +346,14 @@ def cdc_upsert_run(
     """Run the CDC upsert pipeline to completion over a finite stream.
 
     Each micro-batch MERGEs into the latest-per-user state incrementally:
-    bucket the batch keys, read ONLY the previously committed data of the
-    touched buckets, keep the newest row per key, write those buckets to
-    an epoch-scoped directory, and commit a manifest that re-references
-    every untouched bucket's existing files unchanged.  Returns the final
+    bucket the batch keys with the store's bucket count, read ONLY the
+    previously committed data of the touched buckets, keep the newest
+    row per key, write those buckets to an epoch-scoped directory, and
+    commit a manifest that re-references every untouched bucket's
+    existing files unchanged.  A store with no committed bucket has
+    nothing to merge, so that batch fires no touched-bucket job and its
+    commit takes the session's bucket count.  The jobs of epoch N run as
+    ``cdc eN touched`` and ``cdc eN write``.  Returns the final
     materialized state.
 
     A replayed epoch whose manifest is already committed (the manifest
@@ -338,18 +377,24 @@ def cdc_upsert_run(
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         if os.path.exists(os.path.join(state_dir, f"v{epoch_id}.json")):
             return
-        manifest = _read_manifest(state_dir)
-        # which previous buckets to merge must be known before the write
-        touched = {
-            str(r["bucket"])
-            for r in batch_df.select(_bucket_col().alias("bucket")).distinct().collect()
-        }
-        prev = [rel for k, rel in manifest.items() if k in touched]
+        sess = batch_df.sparkSession
+        manifest = _manifest(state_dir)
+        carried = manifest.get("buckets", {})
+        n_buckets = _n_buckets(sess, manifest)
         merged = batch_df
-        if prev:
-            sess = batch_df.sparkSession
-            merged = _read_buckets(sess, state_dir, prev).unionByName(batch_df)
-        _commit_epoch(merged, state_dir, epoch_id, carried=manifest)
+        if carried:
+            # which previous buckets to merge must be known before the write
+            with job_description(sess.sparkContext, f"cdc e{epoch_id} touched"):
+                touched = {
+                    str(r["bucket"])
+                    for r in batch_df.select(_bucket_col(n_buckets).alias("bucket"))
+                    .distinct()
+                    .collect()
+                }
+            prev = [rel for k, rel in carried.items() if k in touched]
+            if prev:
+                merged = _read_buckets(sess, state_dir, prev).unionByName(batch_df)
+        _commit_epoch(merged, state_dir, epoch_id, carried, n_buckets)
 
     q = (
         events.writeStream.foreachBatch(upsert)

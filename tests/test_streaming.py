@@ -128,7 +128,7 @@ def test_cdc_upsert_rewrites_only_touched_buckets(spark, tmp_path):
         return datetime.datetime(2024, 1, 1, 0, 0, s)
 
     base = time.time() - 3600
-    # chunk 1: users 0..63 (spread over all 16 buckets)
+    # chunk 1: users 0..63 (spread over every bucket)
     write_chunk(
         "c1.parquet",
         [(i, ts(1), i, "click", 1.0, None) for i in range(64)],
@@ -270,32 +270,23 @@ def test_cdc_upsert_resumes_from_checkpoint(spark, sf_dir, chunk_dir, tmp_path):
     run must process only unseen files (epoch ids continue, snapshots
     accumulate) and converge to the same final state."""
     import glob
-    import os
-    import shutil
 
     feed_dir = tmp_path / "feed"
     feed_dir.mkdir()
     files = sorted(glob.glob(f"{chunk_dir}/*.parquet"))
     assert len(files) >= 2
 
-    def arrive(fs):
-        for f in fs:
-            dest = feed_dir / os.path.basename(f)
-            shutil.copy(f, dest)
-            st = os.stat(f)
-            os.utime(dest, (st.st_mtime, st.st_mtime))
-
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
 
     # phase 1: only half the feed has arrived
-    arrive(files[: len(files) // 2])
+    _arrive(feed_dir, files[: len(files) // 2])
     cdc.cdc_upsert_run(spark, str(feed_dir), state_dir, ckpt)
     versions_after_half = cdc.state_versions(state_dir)
 
     # phase 2: the rest arrives; restart with the SAME checkpoint — only
     # the unseen files replay
-    arrive(files[len(files) // 2 :])
+    _arrive(feed_dir, files[len(files) // 2 :])
     final = cdc.cdc_upsert_run(spark, str(feed_dir), state_dir, ckpt).toPandas()
     versions_after_full = cdc.state_versions(state_dir)
     assert len(versions_after_full) > len(versions_after_half)
@@ -362,10 +353,10 @@ def test_cdc_upsert_crash_between_write_and_commit(
     crash_epoch = 2
     commit = cdc._commit_manifest
 
-    def crashing_commit(state_dir, epoch_id, buckets):
+    def crashing_commit(state_dir, epoch_id, buckets, n_buckets):
         if epoch_id == crash_epoch:
             raise RuntimeError(f"crash before committing epoch {epoch_id}")
-        commit(state_dir, epoch_id, buckets)
+        commit(state_dir, epoch_id, buckets, n_buckets)
 
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
@@ -422,6 +413,119 @@ def test_cdc_upsert_empty_batch_commits_previous_manifest(spark, chunk_dir, tmp_
     cdc.cdc_upsert_run(spark, str(feed), state_dir, str(tmp_path / "ckpt"))
     assert cdc.state_versions(state_dir) == [0, 1]
     assert cdc._read_manifest(state_dir, 1) == cdc._read_manifest(state_dir, 0)
+
+def _arrive(feed, files):
+    """Copy chunk files into a feed dir, keeping their mtimes (and so the
+    file stream's micro-batch order)."""
+    import os
+    import shutil
+
+    for f in files:
+        dest = feed / os.path.basename(f)
+        shutil.copy(f, dest)
+        st = os.stat(f)
+        os.utime(dest, (st.st_mtime, st.st_mtime))
+
+
+def test_cdc_upsert_writes_one_file_per_bucket(spark, chunk_dir, tmp_path):
+    """The epoch write shuffles by user_id into the store's bucket count
+    and Spark's hash partition id is the bucket, so every ``bucket=K``
+    directory of every epoch holds exactly one file.  AQE's coalescing is
+    off and the session's shuffle partition count (5) divides no bucket
+    count, so a write whose tasks each held rows of many buckets would
+    leave several files per directory."""
+    import glob
+    import os
+
+    confs = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "5",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        state_dir = str(tmp_path / "state")
+        cdc.cdc_upsert_run(spark, chunk_dir, state_dir, str(tmp_path / "ckpt"))
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    dirs = glob.glob(os.path.join(state_dir, "data", "e*", "bucket=*"))
+    assert len(cdc.state_versions(state_dir)) == N_CHUNKS and dirs
+    files = {d: glob.glob(os.path.join(d, "*.parquet")) for d in dirs}
+    assert {d: len(fs) for d, fs in files.items() if len(fs) != 1} == {}
+
+
+def test_cdc_store_keeps_the_bucket_count_it_was_created_with(
+    spark, sf_dir, chunk_dir, tmp_path, monkeypatch
+):
+    """The manifest owns the bucket count: the first epoch takes it from
+    the session's task slots, and later epochs keep it although the
+    session now has more slots."""
+    import glob
+
+    from pyspark import SparkContext
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    files = sorted(glob.glob(f"{chunk_dir}/*.parquet"))
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+
+    _arrive(feed, files[:1])
+    monkeypatch.setattr(SparkContext, "defaultParallelism", 3)
+    cdc.cdc_upsert_run(spark, str(feed), state_dir, ckpt)
+    monkeypatch.undo()
+    assert spark.sparkContext.defaultParallelism != 3
+
+    _arrive(feed, files[1:])
+    final = cdc.cdc_upsert_run(spark, str(feed), state_dir, ckpt).toPandas()
+    versions = cdc.state_versions(state_dir)
+    assert len(versions) == len(files)
+    for v in versions:
+        manifest = cdc._manifest(state_dir, v)
+        assert manifest["n_buckets"] == 3, (v, manifest)
+        assert set(manifest["buckets"]) <= {"0", "1", "2"}, (v, manifest)
+    want = cdc_latest_state_per_user(spark, sf_dir).toPandas()
+    assert not compare_frames(final, want)
+
+
+def test_cdc_upsert_labels_each_epochs_jobs(spark, chunk_dir, tmp_path):
+    """Each epoch's jobs carry its number: the touched-bucket jobs run as
+    ``cdc eN touched`` and the write as ``cdc eN write``.  Epoch 0 meets
+    an empty store, so it fires no touched-bucket job."""
+    import glob
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def jobs():
+        jsc.listenerBus().waitUntilEmpty()
+        listed = jsc.statusStore().jobsList(None)
+        return [listed.apply(i) for i in range(listed.size())]
+
+    first_new = max((j.jobId() for j in jobs()), default=-1) + 1
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    _arrive(feed, sorted(glob.glob(f"{chunk_dir}/*.parquet"))[:2])
+    cdc.cdc_upsert_run(spark, str(feed), str(tmp_path / "state"), str(tmp_path / "ckpt"))
+
+    descs = [
+        j.description().get()
+        for j in jobs()
+        if j.jobId() >= first_new and j.description().isDefined()
+    ]
+    labels = {d for d in descs if d.startswith("cdc ")}
+    assert labels == {"cdc e0 write", "cdc e1 touched", "cdc e1 write"}, descs
+
+
+def test_time_travel_read_of_empty_store_fails_loudly(spark, tmp_path):
+    """A store with no commit reads as no state, but time travel to a
+    version it never committed raises, as on a store that has commits."""
+    empty = str(tmp_path / "never_written")
+    assert cdc.read_upsert_state(spark, empty) is None
+    with pytest.raises(ValueError, match=r"no committed version 3; have \[\]"):
+        cdc.read_upsert_state(spark, empty, version=3)
+
 
 def test_vacuum_during_time_travel_read_fails_loudly(spark, sf_dir, tmp_path):
     """A time-travel read built before a vacuum expires its version must
@@ -1455,14 +1559,18 @@ def test_vacuum_state_expires_versions_and_reclaims_files(spark, sf_dir, tmp_pat
     # reachability rule: a retained manifest that CARRIES FORWARD an
     # older epoch's bucket (the incremental-MERGE shape) keeps that
     # bucket alive even though its own epoch is expired
-    from fawac_cdc_spark.streaming.cdc import _commit_manifest, _read_manifest
+    from fawac_cdc_spark.streaming.cdc import (
+        _commit_manifest,
+        _manifest,
+        _read_manifest,
+    )
 
     v3_buckets = _read_manifest(state_dir, 3)
     carried_bucket, carried_rel = sorted(v3_buckets.items())[0]
     write_state_snapshot(e.where(F.col("user_id") % 2 == 0), state_dir, 4)
     v4_buckets = dict(_read_manifest(state_dir, 4))
     v4_buckets[carried_bucket] = carried_rel  # carry v3's bucket forward
-    _commit_manifest(state_dir, 5, v4_buckets)
+    _commit_manifest(state_dir, 5, v4_buckets, _manifest(state_dir, 4)["n_buckets"])
     stats2 = vacuum_state(state_dir, retain_last=1)  # keep only v5
     assert state_versions(state_dir) == [5]
     assert os.path.isdir(os.path.join(state_dir, carried_rel))  # survived
